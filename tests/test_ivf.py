@@ -87,6 +87,61 @@ def test_stats_branches_interchangeable(monkeypatch, index):
     assert all(n > 0 for _, n in frows)  # empty cells appear in neither
 
 
+def test_pinned_manifest_dict_accepted_by_every_tier(spark, embeddings, index):
+    """A pinned manifest dict (``manifest_at`` / ``_read_manifest`` — the
+    form ``search()`` documents) is a valid ``snapshot`` on every tier,
+    and pinning the current snapshot returns the same rows as the live
+    read (``snapshot=None``)."""
+    q = knn_ops.make_queries(embeddings, n=5)
+    pinned = index.manifest_at("current")
+    pred = F.col("vec_id") % 2 == 0
+    calls = {
+        "search_sq8": {},
+        "search_bq": {},
+        "search_pq": {},
+        "search_prefix": {},
+        "search_prefix_pca": {},
+        "search_cascade": {},
+        "search_filtered": {"predicate": pred},
+        "search_distributed": {},
+        "search_sq8_distributed": {},
+        "search_cascade_distributed": {},
+    }
+    for name, kw in calls.items():
+        run = getattr(index, name)
+        live = run(q, k=5, nprobe=3, **kw).collect()
+        at = run(q, k=5, nprobe=3, snapshot=pinned, **kw).collect()
+        assert sorted(map(tuple, at)) == sorted(map(tuple, live)), name
+
+
+def test_vectors_memo_keeps_hot_current_snapshot(spark, embeddings, tmp_path):
+    """The per-snapshot ``vectors()`` memo evicts its least recently
+    used entry when full: as-of reads of 9 older retained snapshots,
+    interleaved with the serving loop's current reads, never drop the
+    hot current snapshot's DataFrame (a full clear used to)."""
+    import os
+    import shutil
+
+    idx = IVFIndex.build(embeddings, str(tmp_path / "index"), n_centroids=4)
+    root = os.path.join(idx.index_dir, "vectors")
+    cell = sorted(idx._read_manifest()["cells"])[0]
+    for gen in range(1, 10):
+        # re-publish one cell per commit: every snapshot gets its own
+        # cell map, hence its own memo entry
+        src_gen = idx._read_manifest()["cells"][cell]
+        shutil.copytree(
+            os.path.join(root, f"gen={src_gen}", f"centroid_id={cell}"),
+            os.path.join(root, f"gen={gen}", f"centroid_id={cell}"),
+        )
+        idx.commit_cells(gen, [int(cell)], retain=10)
+    older = [s["snapshot_id"] for s in idx.snapshots()][:-1]
+    assert len(older) == 9
+    current = idx.vectors()
+    for sid in older:
+        idx.vectors(snapshot=sid)
+        assert idx.vectors() is current, sid
+
+
 def test_search_empty_queries(spark, index):
     q = spark.createDataFrame([], "qid long, query array<float>")
     assert index.search(q, k=5).count() == 0

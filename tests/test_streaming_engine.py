@@ -10,6 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from vector_search_engine_spark.operators import knn as knn_ops
+from vector_search_engine_spark.operators.ivf import (
+    _DISTRIBUTED_TIERS,
+    _SERVING_TIERS,
+)
 from vector_search_engine_spark.streaming.engine import VectorEngine
 
 
@@ -407,10 +411,12 @@ def test_compaction_generation_pins_quantized_sidecars(spark, embeddings, engine
 
 
 def test_merged_search_pq_tier_equals_exact(spark, embeddings, engine):
-    """tier='pq' swaps the indexed side's candidate scan for IVFADC byte
-    codes; at full probe the merged result must still equal exact kNN
-    over the logical union (shadow exclusion happens BEFORE the bound
-    cut, so upserted ids cannot distort the k-th upper bound)."""
+    """Every serving tier (pq, sq8/sq4, prefix, prefix_pca, bq, cascade,
+    graph, ... — the whole tier table, so a new tier is covered the day
+    it lands) swaps only the indexed side's candidate scan; at full probe
+    with an unbounded budget the merged result must equal the float
+    tier's (shadow exclusion happens BEFORE each lossless cut, so
+    upserted ids cannot distort the k-th upper bound)."""
     tail = embeddings.filter(F.col("vec_id") >= 400)
     moved = (
         embeddings.filter(F.col("vec_id") < 5)
@@ -426,21 +432,11 @@ def test_merged_search_pq_tier_equals_exact(spark, embeddings, engine):
     q = knn_ops.make_queries(embeddings, n=10)
     np_full = engine.index.meta["n_centroids"]
     fl = _sorted(engine.search(q, k=10, nprobe=np_full))
-    pz = _sorted(engine.search(q, k=10, nprobe=np_full, tier="pq"))
-    assert fl == pz
-    sq = _sorted(engine.search(q, k=10, nprobe=np_full, tier="sq8"))
-    assert fl == sq
-    s4 = _sorted(engine.search(q, k=10, nprobe=np_full, tier="sq4"))
-    assert fl == s4
-    ppca = _sorted(engine.search(q, k=10, nprobe=np_full, tier="prefix_pca"))
-    assert fl == ppca
-    casc = _sorted(
-        engine.search(
-            q, k=10, nprobe=np_full, tier="cascade",
-            candidates_per_cell=10**9,
+    for tier in _SERVING_TIERS:
+        got = engine.search(
+            q, k=10, nprobe=np_full, tier=tier, candidates_per_cell=10**9
         )
-    )
-    assert fl == casc
+        assert _sorted(got) == fl, tier
     with pytest.raises(ValueError, match="tier"):
         engine.search(q, k=10, tier="sq2")
 
@@ -1059,7 +1055,7 @@ def test_search_distributed_merged_equals_exact(spark, embeddings, engine):
     )
     exact = knn_ops.knn_exact(union, q, k=10)
     want = _sorted(exact)
-    for tier in ("float", "sq8", "cascade"):
+    for tier in _DISTRIBUTED_TIERS:
         got = engine.search_distributed(
             q, k=10, nprobe=nc, tier=tier, candidates_per_cell=10**9
         )

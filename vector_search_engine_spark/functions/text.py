@@ -40,10 +40,6 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(body)
 
 
-def distinct_shingles(text: Column, n: int = 3) -> Column:
-    return F.array_distinct(word_shingles(tokens(text), n))
-
-
 def with_shingles(
     df,
     out_col: str = "sh",

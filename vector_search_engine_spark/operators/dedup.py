@@ -408,35 +408,6 @@ NUM_PERM = 16
 BAND_SIZE = 4  # 4 bands x 4 rows: P(candidate) = 1-(1-j^4)^4
 
 
-def minhash_signatures(documents: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """Per-doc MinHash signature: min over shingles of xxhash64(shingle, p)
-    for p in 0..num_perm-1.
-
-    Plan shape: explode shingles ONCE, then ``num_perm`` codegen'd
-    min-aggregates over the exploded rows (one shuffle on doc_id).  The
-    earlier form — ``array_min(transform(sh, s -> xxhash64(s, p)))`` per
-    permutation — evaluated num_perm interpreted HOF lambdas per row
-    (~40 µs/element; see module bench notes).  Values are identical:
-    min-over-group ≡ array_min-over-transform of the same expression.
-    Zero-shingle docs (< 3 tokens) emit no signature — they produced only
-    degenerate all-null bands before, and verification dropped every such
-    candidate anyway."""
-    post = with_shingles(documents, "_sh").select(
-        "doc_id", F.explode("_sh").alias("s")
-    )
-    aggs = [
-        F.min(F.xxhash64("s", F.lit(p))).alias(f"_m{p}") for p in range(num_perm)
-    ]
-    return (
-        post.groupBy("doc_id")
-        .agg(*aggs)
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"_m{p}") for p in range(num_perm)]).alias("sig"),
-        )
-    )
-
-
 # A single LSH bucket whose membership list exceeds this is a degenerate
 # key (empty-text cluster, boilerplate): its pair fan-out is quadratic and
 # lands in ONE task.  Buckets are truncated (deterministically: smallest

@@ -41,6 +41,7 @@ import json
 import os
 import shutil
 import threading
+from collections import OrderedDict
 from typing import Iterator
 
 import numpy as np
@@ -48,9 +49,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_search_engine_spark.functions.vector import l2_sq_matrix
+from vector_search_engine_spark.functions.vector import l2_sq, l2_sq_matrix
 from vector_search_engine_spark.operators.knn import (
     _finalize_topk,
+    _queries_df,
     _query_arrays as knn_query_arrays,
 )
 
@@ -563,7 +565,7 @@ class IVFIndex:
         # may be GC'd above, and an in-place rebuild changing the column
         # set must re-infer the schema (the memos are metadata caches,
         # never result caches — see vectors())
-        self._vectors_df_cache = {}
+        self._vectors_df_cache = OrderedDict()
         self._vec_schema = None
 
     def next_gen(self) -> int:
@@ -668,9 +670,7 @@ class IVFIndex:
         if snapshot is None or (m is None and isinstance(snapshot, str)):
             # pre-manifest layout (vectors/centroid_id=*), or explicit raw read
             return self.spark.read.parquet(root)
-        if isinstance(snapshot, dict):
-            cells = m["cells"]
-        elif snapshot == "current":
+        if isinstance(snapshot, dict) or snapshot == "current":
             cells = m["cells"]
         elif isinstance(snapshot, (int, str)):
             cells = self.manifest_at(snapshot)["cells"]
@@ -698,13 +698,16 @@ class IVFIndex:
         # commits and both memos are invalidated by ``commit_cells`` (the
         # single commit bottleneck), so a rebuild that changes the column
         # set re-infers instead of being silently masked (r17 kept the
-        # schema memo for the instance lifetime).
+        # schema memo for the instance lifetime).  Least-recently-used
+        # eviction: as-of reads of older snapshots never push out the hot
+        # current one.
         sig = tuple(sorted((int(c), int(g)) for c, g in cells.items()))
         cache = getattr(self, "_vectors_df_cache", None)
         if cache is None:
-            cache = self._vectors_df_cache = {}
+            cache = self._vectors_df_cache = OrderedDict()
         hit = cache.get(sig)
         if hit is not None:
+            cache.move_to_end(sig)
             return hit
         st = getattr(self, "_vec_schema", None)
         reader = self.spark.read.option("basePath", root)
@@ -715,7 +718,7 @@ class IVFIndex:
             self._vec_schema = df.schema
         out = df.drop("gen")
         if len(cache) > 8:
-            cache.clear()  # bound retained plans (one per live snapshot)
+            cache.popitem(last=False)  # bound retained plans
         cache[sig] = out
         return out
 
@@ -769,8 +772,9 @@ class IVFIndex:
         gen = snap.get("latest_gen")
         cache = getattr(self, "_cell_counts_cache", None)
         if cache is None:
-            cache = self._cell_counts_cache = {}
+            cache = self._cell_counts_cache = OrderedDict()
         if gen is not None and gen in cache:
+            cache.move_to_end(gen)
             return cache[gen]
         root = os.path.join(self.index_dir, "vectors")
         counts: dict[int, int] = {}
@@ -784,7 +788,7 @@ class IVFIndex:
                 counts[int(c)] = n
         if gen is not None:
             if len(cache) > 16:
-                cache.clear()  # bound retained generations
+                cache.popitem(last=False)  # bound retained generations
             cache[gen] = counts
         return counts
 
@@ -816,6 +820,156 @@ class IVFIndex:
         ]
         return pairs
 
+    def _pin(self, snapshot: int | str | dict | None) -> dict | None:
+        """The one snapshot rule of every search: pin ONE (manifest,
+        centroids) view for the whole call, so a concurrent
+        compaction/rebalance commit can't make its probe assignments
+        dangle (the pinned view stays readable for the EBR grace).  A
+        manifest dict (from ``manifest_at`` / ``_read_manifest``) is used
+        as-is — a caller such as ``search_filtered``'s cost model can
+        make its strategy choice and its scan observe ONE snapshot; an
+        int or str is an as-of view through ``manifest_at``; ``None``
+        reads the live manifest."""
+        if isinstance(snapshot, dict):
+            return snapshot
+        if snapshot is None:
+            return self._read_manifest()
+        return self.manifest_at(snapshot)
+
+    @staticmethod
+    def _cell_map(qids: np.ndarray, pairs) -> dict[int, list[int]]:
+        """cell -> positions (into ``qids``) of the queries probing it.
+
+        The probe assignment rides the query broadcast as this map, not
+        as a pairs DataFrame joined onto the scan: the join would
+        duplicate every candidate row once per probing query before the
+        Python boundary (nprobe·|Q| fan-out), while with the map each
+        cell's rows cross ONCE and the per-cell kernel serves all of the
+        cell's probing queries."""
+        qpos = {int(q): i for i, q in enumerate(qids)}
+        cell_qidx: dict[int, list[int]] = {}
+        for qid, c in pairs:
+            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
+        return cell_qidx
+
+    def _probe_plan(self, queries, nprobe: int, snapshot, qid_col: str,
+                    qvec_col: str):
+        """Shared prologue of the per-query serving tiers: collect the
+        (bounded) query set, pin the snapshot (``_pin``), assign each
+        query its ``nprobe`` nearest centroids of THAT snapshot's
+        geometry.  Returns ``(qids, Q, snap, needed, cell_qidx)`` —
+        ``needed`` the sorted probed cells, ``cell_qidx`` the
+        ``_cell_map`` — or ``None`` for an empty query set (the caller
+        returns its own empty schema)."""
+        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
+        if len(qids) == 0:
+            return None
+        snap = self._pin(snapshot)
+        pairs = self.probe_pairs(
+            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
+        )
+        needed = sorted({c for _, c in pairs})
+        return qids, Q, snap, needed, self._cell_map(qids, pairs)
+
+    def _empty_topk(self) -> DataFrame:
+        return self.spark.createDataFrame(
+            [], "qid long, neighbor_id long, rank long, dist_sq double"
+        )
+
+    def _float_cells(self, snap, cells, exclude_ids, predicate) -> DataFrame:
+        """``(centroid_id, id, vector)`` rows of the pinned snapshot's
+        probed float cells — the candidate source of ``search``,
+        ``search_prefix`` and both radius searches.  ``isin`` on the
+        partition column prunes the parquet scan; shadowed ids
+        (``exclude_ids``: a list, or a one-column DataFrame anti-joined
+        because the set can be arbitrarily large under sustained
+        streaming — never driver-collected) and the metadata
+        ``predicate`` leave before ranking, so the top-k stays exact over
+        the filtered set."""
+        id_col = self.meta["id_col"]
+        base = self.vectors(snapshot=snap).filter(
+            F.col("centroid_id").isin(cells)
+        )
+        if exclude_ids is not None:
+            if isinstance(exclude_ids, DataFrame):
+                base = base.join(
+                    exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
+                    on=id_col,
+                    how="left_anti",
+                )
+            elif exclude_ids:
+                base = base.filter(~F.col(id_col).isin(list(exclude_ids)))
+        if predicate is not None:
+            base = base.filter(predicate)
+        return base.select(
+            F.col("centroid_id"), F.col(id_col), F.col(self.meta["vec_col"])
+        )
+
+    def _sidecar_cells(
+        self, sidecar_dir: str, snap, cells, exclude_ids, predicate,
+        cols: tuple[str, ...],
+    ) -> DataFrame:
+        """Probed-cell rows of a derived sidecar (codes / rotated
+        copies), pre-cut: shadowed ids anti-join out and the metadata
+        ``predicate`` applies as a ``left_semi`` join against a
+        column-pruned read of the SAME pruned float cells (predicate
+        columns live in the float table; column pruning drops the vector
+        bytes).  Both must apply BEFORE a bound cut: a disqualified
+        vector's small upper bound would otherwise tighten the k-th
+        bound and evict a legitimate survivor.  ``cols``: the sidecar
+        columns the cut kernel reads besides ``centroid_id`` and the
+        id."""
+        id_col = self.meta["id_col"]
+        rows = (
+            self.spark.read.parquet(sidecar_dir)
+            .filter(F.col("centroid_id").isin(cells))
+            .select("centroid_id", id_col, *cols)
+        )
+        if exclude_ids is not None:
+            rows = rows.join(
+                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
+                id_col,
+                "left_anti",
+            )
+        if predicate is not None:
+            keep_ids = (
+                self.vectors(snapshot=snap)
+                .filter(F.col("centroid_id").isin(cells))
+                .filter(predicate)
+                .select(id_col)
+            )
+            rows = rows.join(keep_ids, id_col, "left_semi")
+        return rows
+
+    def _exact_rescore(
+        self, cand: DataFrame, snap, needed, queries, qids, Q,
+        qid_col: str, qvec_col: str, k: int, round_output: bool,
+    ) -> DataFrame:
+        """Final stage of the per-query quantized tiers: the ``(qid,
+        neighbor_id)`` survivors rejoin the float vectors (same pruned
+        partitions) and the broadcast queries for the exact float
+        distance, then the standard ``(dist, id)`` top-k — so every
+        returned row carries the true distance."""
+        id_col = self.meta["id_col"]
+        vec_col = self.meta["vec_col"]
+        base = self.vectors(snapshot=snap).filter(
+            F.col("centroid_id").isin(needed)
+        )
+        qdf = _queries_df(self.spark, queries, qids, Q, qid_col, qvec_col)
+        rescored = (
+            cand.join(
+                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
+                "neighbor_id",
+            )
+            .join(F.broadcast(qdf), "qid")
+            .select(
+                "qid",
+                "neighbor_id",
+                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
+            )
+        )
+        return _finalize_topk(rescored, k, "l2_sq", round_output)
+
     def search(
         self,
         queries: DataFrame,
@@ -846,70 +1000,14 @@ class IVFIndex:
         """
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
-        spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        # pin ONE (manifest, centroids) snapshot for the whole call — a
-        # concurrent rebalance commit can drop the parent cells this call
-        # probes from the live manifest; the pinned view stays readable for
-        # one commit cycle (EBR grace).  An explicit snapshot pins a
-        # retained historical view instead (as-of search); a manifest dict
-        # (from manifest_at / _read_manifest) is used as-is so a caller —
-        # e.g. search_filtered's cost model — can make its strategy choice
-        # and its scan observe ONE snapshot even under concurrent commits.
-        snap = (
-            snapshot
-            if isinstance(snapshot, dict)
-            else self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-
-        # r17 (guide §2.3/§4): the probe assignment rides the query
-        # broadcast as a cell→query-index map instead of a pairs
-        # DataFrame broadcast-joined onto the scan.  The old join
-        # DUPLICATED every candidate row once per probing query before
-        # the Python boundary (nprobe·|Q| fan-out: at full probe every
-        # vector crossed Arrow |Q| times); now each cell's rows cross
-        # ONCE and the per-cell kernel is a single GEMM over that
-        # cell's probing queries — the same ``l2_sq_matrix`` the exact
-        # path (knn_exact) uses, so merged searches rank indexed and
-        # delta candidates with bitwise-identical arithmetic.
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        bc = spark.sparkContext.broadcast(
+        plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
+        if plan is None:
+            return self._empty_topk()
+        qids, Q, snap, needed, cell_qidx = plan
+        bc = self.spark.sparkContext.broadcast(
             (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
         )
-
-        # isin on the partition column → parquet partition pruning
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        if exclude_ids is not None:
-            if isinstance(exclude_ids, DataFrame):
-                # anti-join path: the shadowed-id set can be arbitrarily
-                # large under sustained streaming — never driver-collected
-                base = base.join(
-                    exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                    on=id_col,
-                    how="left_anti",
-                )
-            elif exclude_ids:
-                base = base.filter(~F.col(id_col).isin(list(exclude_ids)))
-        if predicate is not None:
-            base = base.filter(predicate)
-        cand = base.select(
-            F.col("centroid_id"), F.col(id_col), F.col(vec_col)
-        )
+        cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
         def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # r18 kernel shape (guide §4.2): ONE object-array stack per
@@ -989,7 +1087,7 @@ class IVFIndex:
         nprobe: int = 4,
         predicate=None,
         strategy: str = "auto",
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         qid_col: str = "qid",
         qvec_col: str = "query",
         exclude_ids: DataFrame | None = None,
@@ -1019,11 +1117,7 @@ class IVFIndex:
             raise ValueError("search_filtered requires a predicate")
         if strategy not in ("auto", "prefilter", "inprobe"):
             raise ValueError(f"unknown strategy {strategy!r}")
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
+        snap = self._pin(snapshot)
         if strategy == "auto":
             # Survivor counts are memoized per (predicate, snapshot
             # generation): at high query rates the planner would otherwise
@@ -1245,7 +1339,7 @@ class IVFIndex:
         — a driver-side calibration report, not a DataFrame op."""
         if tier not in ("bq", "cascade"):
             raise ValueError("tune_candidates targets the lossy tiers (bq/cascade)")
-        search = self.search_bq if tier == "bq" else self.search_cascade
+        search = getattr(self, _SERVING_TIERS[tier][0])
         return self._run_tune_ladder(
             queries,
             k,
@@ -1306,7 +1400,7 @@ class IVFIndex:
         qvec_col: str = "query",
         exclude_ids=None,
         predicate=None,
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         round_output: bool = True,
     ) -> DataFrame:
         """Probed search through the prefix-dimension lossless bound cut
@@ -1322,53 +1416,15 @@ class IVFIndex:
         ``snapshot`` exactly as ``search()`` does."""
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
-        spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
+        plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
+        if plan is None:
+            return self._empty_topk()
+        qids, Q, snap, needed, cell_qidx = plan
         dp = max(1, min(int(prefix_dims), Q.shape[1]))
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-        # r17: probe assignment rides the query broadcast (see search())
-        # — cell rows cross the Python boundary once and are stacked
-        # once per cell, with the per-query prefix-cut arithmetic kept
-        # byte-for-byte identical (the cut threshold and the returned
-        # full distances use the same expressions as before).
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        bc = spark.sparkContext.broadcast(
+        bc = self.spark.sparkContext.broadcast(
             (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
         )
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        if exclude_ids is not None:
-            if isinstance(exclude_ids, DataFrame):
-                base = base.join(
-                    exclude_ids.select(
-                        F.col(exclude_ids.columns[0]).alias(id_col)
-                    ),
-                    on=id_col,
-                    how="left_anti",
-                )
-            elif exclude_ids:
-                base = base.filter(~F.col(id_col).isin(list(exclude_ids)))
-        if predicate is not None:
-            base = base.filter(predicate)
-        cand = base.select(
-            F.col("centroid_id"), F.col(id_col), F.col(vec_col)
-        )
+        cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
         def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qids_, Q_, cq = bc.value
@@ -1703,7 +1759,7 @@ class IVFIndex:
         qvec_col: str = "query",
         exclude_ids: DataFrame | None = None,
         predicate=None,
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         round_output: bool = True,
     ) -> DataFrame:
         """Prefix-bound cut in the PCA-ROTATED basis — the fix for the
@@ -1748,56 +1804,21 @@ class IVFIndex:
         Otherwise prefer ``search_sq8`` (byte cut AND wall win)."""
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
-        spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
+        plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
+        if plan is None:
+            return self._empty_topk()
+        qids, Q, snap, needed, cell_qidx = plan
         rot_dir = self.ensure_pca_rot(snapshot=snap)
         R = np.load(os.path.join(rot_dir, "rotation.npy"))
         dp = max(1, min(int(prefix_dims), Q.shape[1]))
-        # r17: probe assignment rides the query broadcast (see search())
-        # — each rotated row crosses the Python boundary once, stacked
-        # once per cell; the per-query cut/threshold/rescore arithmetic
-        # below is byte-for-byte the previous expressions.
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
         Q64 = Q.astype(np.float64)
-        bc = spark.sparkContext.broadcast(
+        bc = self.spark.sparkContext.broadcast(
             (qids.astype(np.int64), Q64, Q64 @ R, cell_qidx)
         )
-        rows = spark.read.parquet(rot_dir).filter(
-            F.col("centroid_id").isin(needed)
+        cand_rows = self._sidecar_cells(
+            rot_dir, snap, needed, exclude_ids, predicate,
+            cols=(vec_col, "rotvec", "vnorm"),
         )
-        cand_rows = rows.select(
-            "centroid_id", id_col, vec_col, "rotvec", "vnorm"
-        )
-        if exclude_ids is not None:
-            cand_rows = cand_rows.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
-            )
-        if predicate is not None:
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_rows = cand_rows.join(keep_ids, id_col, "left_semi")
 
         def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qids_, Q_, QR_, cq = bc.value
@@ -1860,7 +1881,7 @@ class IVFIndex:
         nprobe: int = 4,
         qid_col: str = "qid",
         qvec_col: str = "query",
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         predicate=None,
         exclude_ids: DataFrame | None = None,
         round_output: bool = True,
@@ -1905,11 +1926,7 @@ class IVFIndex:
         vec_col = self.meta["vec_col"]
         # same snapshot discipline as search(): centroids and cells from
         # ONE manifest view (historical when an as-of snapshot is given)
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
+        snap = self._pin(snapshot)
         probes, _, _ = self._assign_probes_distributed(
             queries, qid_col, qvec_col, snap, nprobe
         )
@@ -2268,7 +2285,7 @@ class IVFIndex:
         nprobe: int = 4,
         qid_col: str = "qid",
         qvec_col: str = "query",
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         predicate=None,
         bits: int = 8,
         round_output: bool = True,
@@ -2314,35 +2331,19 @@ class IVFIndex:
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
         dim = self.meta["dim"]
-        spark = self.spark
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
+        snap = self._pin(snapshot)
         sq_dir = self.ensure_sq8(snapshot=snap, bits=bits)
         probes, n_cells, nprobe = self._assign_probes_distributed(
             queries, qid_col, qvec_col, snap, nprobe
         )
         cells = self._probed_cells_distributed(probes, nprobe, n_cells, snap)
-        codes = spark.read.parquet(sq_dir).filter(
-            F.col("centroid_id").isin(cells)
+        # shadowed ids leave PRE-CUT on the code side (merged engine
+        # contract): an excluded id can then never survive into the
+        # rescore, so the float join needs no second guard
+        codes = self._sidecar_cells(
+            sq_dir, snap, cells, exclude_ids, predicate,
+            cols=("code", "lo", "hi"),
         )
-        if exclude_ids is not None:
-            # shadowed-id exclusion PRE-CUT on the code side (merged
-            # engine contract): an excluded id can then never survive
-            # into the rescore, so the float join needs no second guard
-            codes = codes.join(
-                exclude_ids.toDF(id_col), id_col, "left_anti"
-            )
-        if predicate is not None:
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(cells))
-                .filter(predicate)
-                .select(id_col)
-            )
-            codes = codes.join(keep_ids, id_col, "left_semi")
 
         # r18 (verdict task 3): the probes⋈codes shuffle join duplicated
         # every code row once per probing query BEFORE the Python boundary
@@ -2437,7 +2438,7 @@ class IVFIndex:
         candidates_per_cell: int | None = None,
         qid_col: str = "qid",
         qvec_col: str = "query",
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         predicate=None,
         round_output: bool = True,
         exclude_ids: DataFrame | None = None,
@@ -2449,10 +2450,14 @@ class IVFIndex:
         1. probes (in-partition assignment) shuffle-join the 1-bit BQ
            sidecar on ``centroid_id`` (32× scan-byte cut, pruned to the
            probed cells); the asymmetric sign score keeps the top
-           ``candidates_per_cell`` per (query, cell slice of an Arrow
-           batch) — the only lossy stage, same per-batch budget
-           semantics (and the same finding-41 per-cell auto-derived
-           default when unset) as the per-query cascade;
+           ``candidates_per_cell`` per (query, WHOLE cell) — the only
+           lossy stage, with the same finding-41 per-cell auto-derived
+           default as the per-query cascade when unset.  Since r18's
+           per-cell cogroup a finite C keeps exactly min(C, cell size)
+           survivors per (query, cell); r17 kept C per (query,
+           Arrow-batch slice of a cell), so a finite-C caller can now
+           see fewer stage-1 candidates than before (the unbounded-C
+           exactness configuration is unaffected);
         2. stage-1 survivors shuffle-join the int8 SQ8 sidecar on id —
            a SHUFFLE join by design, never the per-query form's
            broadcast: the candidate list scales with |Q| here, so
@@ -2474,11 +2479,7 @@ class IVFIndex:
         dim = self.meta["dim"]
         spark = self.spark
         C = int(candidates_per_cell) if candidates_per_cell else 8 * k
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
+        snap = self._pin(snapshot)
         bq_dir = self.ensure_bq(snapshot=snap)
         sq_dir = self.ensure_sq8(snapshot=snap, bits=8)
         bc_thr = self._bq_thr_broadcast(bq_dir)
@@ -2501,24 +2502,12 @@ class IVFIndex:
             else None
         )
 
-        # ---- stage 1: BQ asymmetric top-C over the probed 1-bit codes
-        bq_codes = spark.read.parquet(bq_dir).filter(
-            F.col("centroid_id").isin(cells)
+        # ---- stage 1: BQ asymmetric top-C over the probed 1-bit codes;
+        # shadowed ids leave before its cut, so they can never survive
+        # into stages 2-3 (merged engine contract)
+        bq_codes = self._sidecar_cells(
+            bq_dir, snap, cells, exclude_ids, predicate, cols=("code", "dim")
         )
-        if exclude_ids is not None:
-            # shadowed ids leave before stage 1's cut: they can then
-            # never survive into stages 2-3 (merged engine contract)
-            bq_codes = bq_codes.join(
-                exclude_ids.toDF(id_col), id_col, "left_anti"
-            )
-        if predicate is not None:
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(cells))
-                .filter(predicate)
-                .select(id_col)
-            )
-            bq_codes = bq_codes.join(keep_ids, id_col, "left_semi")
 
         # r18 (verdict task 3): stage 1 drops the probes⋈codes fan-out
         # join (each 1-bit code row crossed Arrow once per probing query)
@@ -2829,7 +2818,7 @@ class IVFIndex:
         qvec_col: str = "query",
         predicate=None,
         exclude_ids: DataFrame | None = None,
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         bits: int = 8,
         round_output: bool = True,
     ) -> DataFrame:
@@ -2864,69 +2853,25 @@ class IVFIndex:
         historical snapshot are built from (and GC-protected with) that
         snapshot's own files."""
         id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         dim = self.meta["dim"]
-        spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        # snapshot discipline as in search(); the sq8 sidecar is keyed by
-        # this snapshot's generation and built from it (ensure_sq8(snap)),
-        # so codes and the float re-score base always agree — a rebalance
-        # committing mid-search can neither skew nor delete them (EBR
-        # retention covers sidecars like base cells)
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-        # r17: probe assignment rides the query broadcast as a
-        # cell→query-index map (see search()) — codes cross the Python
-        # boundary ONCE instead of once per probing query, and each
-        # cell decodes once with the bound evaluated for all its
+        plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
+        if plan is None:
+            return self._empty_topk()
+        qids, Q, snap, needed, cell_qidx = plan
+        # each cell decodes once with the bound evaluated for all its
         # probing queries in one GEMM (_sq_bound_mask_multi).  The cut
-        # group becomes (cell slice of an Arrow batch, query) instead
-        # of (mixed-cell batch slice, query) — a coarser group, so the
-        # kept set is a (still lossless) superset and the exact rescore
-        # below yields identical results.
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        bc = spark.sparkContext.broadcast(
+        # group is (cell slice of an Arrow batch, query) — a still
+        # lossless superset, so the exact rescore yields identical
+        # results.  The sidecar is keyed by and built from the pinned
+        # snapshot, so codes and the float rescore base always agree.
+        bc = self.spark.sparkContext.broadcast(
             (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
         )
-
         sq_dir = self.ensure_sq8(snapshot=snap, bits=bits)
-        codes = spark.read.parquet(sq_dir).filter(
-            F.col("centroid_id").isin(needed)
+        cand_codes = self._sidecar_cells(
+            sq_dir, snap, needed, exclude_ids, predicate,
+            cols=("code", "lo", "hi"),
         )
-        cand_codes = codes.select(
-            "centroid_id", id_col, "code", "lo", "hi"
-        )
-        if exclude_ids is not None:
-            cand_codes = cand_codes.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
-            )
-        if predicate is not None:
-            # pre-cut filtering (losslessness: a disqualified vector's
-            # small ub must not tighten the k-th bound); metadata-only
-            # read — column pruning drops the vector bytes
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_codes = cand_codes.join(keep_ids, id_col, "left_semi")
 
         def approx_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qids_, Q_, cq = bc.value
@@ -2957,29 +2902,10 @@ class IVFIndex:
         cand = cand_codes.mapInPandas(
             approx_cut, schema="qid long, neighbor_id long"
         )
-        # exact re-score: survivors rejoin the float vectors (same pruned
-        # partitions), broadcast queries, standard (dist, id) top-k
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
+        return self._exact_rescore(
+            cand, snap, needed, queries, qids, Q, qid_col, qvec_col, k,
+            round_output,
         )
-        from vector_search_engine_spark.operators.knn import _queries_df
-
-        qdf = _queries_df(spark, queries, qids, Q, qid_col, qvec_col)
-        from vector_search_engine_spark.functions.vector import l2_sq
-
-        rescored = (
-            cand.join(
-                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-                "neighbor_id",
-            )
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-            )
-        )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
 
     def ensure_bq(self, snapshot: dict | None = None) -> str:
         """Write (once) the binary-quantization sidecar: packed sign-bit
@@ -3301,7 +3227,7 @@ class IVFIndex:
         qvec_col: str = "query",
         predicate=None,
         exclude_ids: DataFrame | None = None,
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         round_output: bool = True,
     ) -> DataFrame:
         """Probed search through the 1-bit sidecar: the extreme point of
@@ -3324,23 +3250,11 @@ class IVFIndex:
         ``snapshot`` compose exactly as in ``search_sq8`` (pre-cut
         metadata semi-join / anti-join; generation-keyed sidecar)."""
         id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
-        spark = self.spark
         C = int(candidates_per_cell) if candidates_per_cell else 8 * k
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
+        plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
+        if plan is None:
+            return self._empty_topk()
+        qids, Q, snap, needed, cell_qidx = plan
         budget_map = (
             self._auto_sign_budget(k, snap, needed, "search_bq")
             if candidates_per_cell is None
@@ -3349,47 +3263,22 @@ class IVFIndex:
         bq_dir = self.ensure_bq(snapshot=snap)
         with open(os.path.join(bq_dir, "thresholds.json")) as f:
             thr = np.array(json.load(f)["thresholds"], dtype=np.float64)
-        # r17: probe assignment rides the query broadcast as a
-        # cell→query-index map (see search()) — the packed codes cross
-        # the Python boundary ONCE instead of once per probing query,
-        # and each cell slice unpacks its bits once, scoring all its
-        # probing queries in one GEMM.  The cut unit is unchanged:
-        # per (cell slice of an Arrow batch, query), budget per cell.
-        # The asymmetric score works in centered space: bits encode
-        # sign(v − t), so the scan side ranks by (q − t) · sign(v − t);
-        # the exact rescore below uses the UNcentered queries.
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        bc = spark.sparkContext.broadcast(
+        # each cell slice unpacks its bits once, scoring all its probing
+        # queries in one GEMM; cut unit per (cell slice of an Arrow
+        # batch, query), budget per cell.  The asymmetric score works in
+        # centered space: bits encode sign(v − t), so the scan side
+        # ranks by (q − t) · sign(v − t); the exact rescore uses the
+        # UNcentered queries.
+        bc = self.spark.sparkContext.broadcast(
             (
                 qids.astype(np.int64),
                 Q.astype(np.float64) - thr[None, :],
                 cell_qidx,
             )
         )
-
-        codes = spark.read.parquet(bq_dir).filter(
-            F.col("centroid_id").isin(needed)
+        cand_codes = self._sidecar_cells(
+            bq_dir, snap, needed, exclude_ids, predicate, cols=("code", "dim")
         )
-        cand_codes = codes.select(
-            "centroid_id", id_col, "code", "dim"
-        )
-        if exclude_ids is not None:
-            cand_codes = cand_codes.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
-            )
-        if predicate is not None:
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_codes = cand_codes.join(keep_ids, id_col, "left_semi")
 
         def approx_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # per (cell slice of an Arrow batch, query): the cut budget
@@ -3433,26 +3322,10 @@ class IVFIndex:
         cand = cand_codes.mapInPandas(
             approx_cut, schema="qid long, neighbor_id long"
         )
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
+        return self._exact_rescore(
+            cand, snap, needed, queries, qids, Q, qid_col, qvec_col, k,
+            round_output,
         )
-        from vector_search_engine_spark.functions.vector import l2_sq
-        from vector_search_engine_spark.operators.knn import _queries_df
-
-        qdf = _queries_df(spark, queries, qids, Q, qid_col, qvec_col)
-        rescored = (
-            cand.join(
-                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-                "neighbor_id",
-            )
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-            )
-        )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
 
     def search_cascade(
         self,
@@ -3464,7 +3337,7 @@ class IVFIndex:
         qvec_col: str = "query",
         predicate=None,
         exclude_ids: DataFrame | None = None,
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         round_output: bool = True,
     ) -> DataFrame:
         """Staged serving through the whole compression ladder — the
@@ -3514,45 +3387,27 @@ class IVFIndex:
         (``hnsw_index.h:223-262``); this tier is the scale path its
         single-node design never needed."""
         id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         dim = self.meta["dim"]
         spark = self.spark
         C = int(candidates_per_cell) if candidates_per_cell else 8 * k
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        snap = (
-            snapshot
-            if isinstance(snapshot, dict)
-            else self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
+        plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
+        if plan is None:
+            return self._empty_topk()
+        qids, Q, snap, needed, cell_qidx = plan
         budget_map = (
             self._auto_sign_budget(k, snap, needed, "search_cascade")
             if candidates_per_cell is None
             else None
         )
 
-        # ---- stage 1: BQ asymmetric top-C over the probed 1-bit codes.
-        # r17: probe assignment rides the query broadcast as a
-        # cell→query-index map (see search_bq) — codes cross Arrow once,
-        # each cell slice unpacks once and scores all its probing
-        # queries in one GEMM.  Cut unit unchanged: per (cell slice of
-        # an Arrow batch, query), budget per cell.
+        # ---- stage 1: BQ asymmetric top-C over the probed 1-bit codes
+        # (the search_bq kernel shape: codes cross Arrow once, each cell
+        # slice unpacks once and scores all its probing queries in one
+        # GEMM; cut unit per (cell slice of an Arrow batch, query),
+        # budget per cell).
         bq_dir = self.ensure_bq(snapshot=snap)
         with open(os.path.join(bq_dir, "thresholds.json")) as f:
             thr = np.array(json.load(f)["thresholds"], dtype=np.float64)
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
         bc_c = spark.sparkContext.broadcast(
             (
                 qids.astype(np.int64),
@@ -3560,25 +3415,9 @@ class IVFIndex:
                 cell_qidx,
             )
         )
-
-        bq_codes = spark.read.parquet(bq_dir).filter(
-            F.col("centroid_id").isin(needed)
+        cand_codes = self._sidecar_cells(
+            bq_dir, snap, needed, exclude_ids, predicate, cols=("code", "dim")
         )
-        cand_codes = bq_codes.select("centroid_id", id_col, "code", "dim")
-        if exclude_ids is not None:
-            cand_codes = cand_codes.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
-            )
-        if predicate is not None:
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_codes = cand_codes.join(keep_ids, id_col, "left_semi")
 
         def bq_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # per (cell slice of an Arrow batch, query); budget = the
@@ -3661,7 +3500,9 @@ class IVFIndex:
                 return min(n_c, C_c)
             return min(n_c, C_c * -(-n_c // arrow_batch))
 
-        est_cand1 = sum(_pair_bound(c) for _, c in pairs)
+        est_cand1 = sum(
+            _pair_bound(c) * len(ix) for c, ix in cell_qidx.items()
+        )
         sq_side = sq_codes.select(
             F.col(id_col).alias("neighbor_id"), "code", "lo", "hi"
         )
@@ -3701,26 +3542,10 @@ class IVFIndex:
         )
 
         # ---- stage 3: exact float rescore of the remaining handful
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
+        return self._exact_rescore(
+            cand2, snap, needed, queries, qids, Q, qid_col, qvec_col, k,
+            round_output,
         )
-        from vector_search_engine_spark.functions.vector import l2_sq
-        from vector_search_engine_spark.operators.knn import _queries_df
-
-        qdf = _queries_df(spark, queries, qids, Q, qid_col, qvec_col)
-        rescored = (
-            cand2.join(
-                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-                "neighbor_id",
-            )
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-            )
-        )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
 
     def ensure_graph(
         self,
@@ -3864,25 +3689,13 @@ class IVFIndex:
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
         spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        snap = (
-            snapshot
-            if isinstance(snapshot, dict)
-            else self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-        cell_qids: dict[int, list[int]] = {}
-        for q, c in pairs:
-            cell_qids.setdefault(int(c), []).append(int(q))
+        plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
+        if plan is None:
+            return self._empty_topk()
+        qids, Q, snap, needed, cell_qidx = plan
+        cell_qids = {
+            c: [int(qids[i]) for i in ix] for c, ix in cell_qidx.items()
+        }
         qmap = {int(q): Q[i].astype(np.float64) for i, q in enumerate(qids)}
         bc_q = spark.sparkContext.broadcast(qmap)
         bc_cq = spark.sparkContext.broadcast(cell_qids)
@@ -4263,7 +4076,7 @@ class IVFIndex:
         residual: bool = True,
         exclude_ids: DataFrame | None = None,
         predicate=None,
-        snapshot: int | str | None = None,
+        snapshot: int | str | dict | None = None,
         opq: bool = False,
         round_output: bool = True,
     ) -> DataFrame:
@@ -4303,22 +4116,11 @@ class IVFIndex:
         )
 
         id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
+        plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
+        if plan is None:
+            return self._empty_topk()
+        qids, Q, snap, needed, cell_qidx = plan
         codes_dir, books = self.ensure_pq(
             m=m, residual=residual, snapshot=snap, opq=opq
         )
@@ -4332,19 +4134,12 @@ class IVFIndex:
             if opq
             else None
         )
-        # r17: probe assignment rides the query broadcast as a
-        # cell→query-index map (see search()) — codes cross the Python
-        # boundary once and decode once per cell slice; the per-(query,
-        # cell) ADC LUT count is unchanged (it was always per pair).
-        # Cut group becomes (cell slice of an Arrow batch, query) — for
-        # the lossless bound a still-lossless superset (exact rescore
-        # unchanged); for top-C mode a per-cell-slice C (≥ recall of the
-        # old per-batch C).
+        # codes cross the Python boundary once and decode once per cell
+        # slice (see search()); the ADC LUT is per (query, cell) pair.
+        # Cut group is (cell slice of an Arrow batch, query) — for the
+        # lossless bound a still-lossless superset (exact rescore
+        # unchanged); for top-C mode a per-cell-slice C.
         Qs = Q.astype(np.float64) if R is None else Q.astype(np.float64) @ R
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
         q_bc = spark.sparkContext.broadcast(
             (qids.astype(np.int64), Qs, cell_qidx)
         )
@@ -4353,33 +4148,11 @@ class IVFIndex:
         if cm is not None and R is not None:
             cm = {cid: c @ R for cid, c in cm.items()}
         cm_bc = spark.sparkContext.broadcast(cm) if residual else None
-        codes = spark.read.parquet(codes_dir).filter(
-            F.col("centroid_id").isin(needed)
+        cand_codes = self._sidecar_cells(
+            codes_dir, snap, needed, exclude_ids, predicate,
+            cols=("code", "resid"),
         )
-        cand_codes = codes.select(
-            "centroid_id", id_col, "code", "resid"
-        )
-        if exclude_ids is not None:
-            # exclusion must happen BEFORE the cut: an excluded vector's
-            # small upper bound would otherwise tighten the k-th ub and
-            # could evict a legitimate survivor (same reason search()
-            # anti-joins before its scan)
-            cand_codes = cand_codes.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
-            )
-        if predicate is not None:
-            # qualifying ids from a metadata-only read of the SAME pruned
-            # cells (column pruning drops the vector bytes); semi-join
-            # before the cut for the same losslessness reason as above
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_codes = cand_codes.join(keep_ids, id_col, "left_semi")
+
         def adc_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # r18: candidate (qid, id) pairs accumulate across the task and
             # cross Arrow ONCE per task — the r17 shape yielded one tiny
@@ -4436,27 +4209,10 @@ class IVFIndex:
         cand = cand_codes.mapInPandas(
             adc_cut, schema="qid long, neighbor_id long"
         )
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
+        return self._exact_rescore(
+            cand, snap, needed, queries, qids, Q, qid_col, qvec_col, k,
+            round_output,
         )
-        from vector_search_engine_spark.operators.knn import _queries_df
-
-        qdf = _queries_df(spark, queries, qids, Q, qid_col, qvec_col)
-        from vector_search_engine_spark.functions.vector import l2_sq
-
-        rescored = (
-            cand.join(
-                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-                "neighbor_id",
-            )
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-            )
-        )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
 
     def radius_search(
         self,
@@ -4489,7 +4245,7 @@ class IVFIndex:
             return spark.createDataFrame([], "qid long, neighbor_id long, dist_sq double")
 
         # pin one (manifest, centroids) view for radii, probes, and scan
-        snap = self._read_manifest()
+        snap = self._pin(None)
         cids, C = self._centroids_for(snap)
         # per-cell radii: one column-pruned scan of the index's stats
         # column, MEMOIZED per generation (r17 — the _snapshot_counts
@@ -4520,40 +4276,16 @@ class IVFIndex:
         if not pairs:
             return spark.createDataFrame([], "qid long, neighbor_id long, dist_sq double")
         needed = sorted({c for _, c in pairs})
-        # r17: probe assignment rides the query broadcast (see search())
-        # — cell rows cross the Python boundary once; per-query distance
-        # arithmetic below is byte-for-byte the previous expression
-        # (these distances ARE the output values).
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
+        # the kernel keeps the per-query matrix-vector distance form:
+        # these distances ARE the output values
         bc = spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
+            (
+                qids.astype(np.int64),
+                Q.astype(np.float64),
+                self._cell_map(qids, pairs),
+            )
         )
-
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        if exclude_ids is not None:
-            # shadowed-id exclusion (merged streaming search): same
-            # anti-join contract as search() — the set can be large
-            # under sustained ingest, never driver-collected
-            if isinstance(exclude_ids, DataFrame):
-                base = base.join(
-                    exclude_ids.select(
-                        F.col(exclude_ids.columns[0]).alias(id_col)
-                    ),
-                    on=id_col,
-                    how="left_anti",
-                )
-            elif exclude_ids:
-                base = base.filter(~F.col(id_col).isin(list(exclude_ids)))
-        if predicate is not None:
-            base = base.filter(predicate)
-        cand = base.select(
-            F.col("centroid_id"), F.col(id_col), F.col(vec_col)
-        )
+        cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
         def in_radius(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qids_, Q_, cq = bc.value
@@ -4676,15 +4408,7 @@ class IVFIndex:
                 [], "qid long, neighbor_id long, dist_sq double"
             )
             return out0
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        if exclude_ids is not None:
-            base = base.join(
-                exclude_ids.toDF(id_col), id_col, "left_anti"
-            )
-        if predicate is not None:
-            base = base.filter(predicate)
+        base = self._float_cells(snap, needed, exclude_ids, predicate)
         # r18 (finding 48's shape applied to the radius sibling): the
         # probes⋈cells join duplicated every float row once per probing
         # query before the Python boundary; the scan is now a per-cell
@@ -4910,53 +4634,61 @@ def _build_or_construct(
     return inst
 
 
-def _tier_candidates(
+def _no_knob(c, scan):
+    return {}
+
+
+# The tier tables: each serving tier is the same probed top-k with a
+# different candidate cut, so a tier is just (IVFIndex method, the kwargs
+# its own knob takes from the shared options).  The shared options are
+# ``candidates_per_cell`` C — the sign tiers' stage-1 budget, the graph
+# tier's beam width (unbounded C → exhaustive beam → exact) — and the
+# bulk float tier's ``scan`` shape.  Every tier is exact-equivalent to
+# the float probe at full probe (lossless cuts, or unbounded C), so
+# callers that rescore (the metric wrappers) or merge (the streaming
+# engine) hold tier-independently.  ``_run_tier`` is the one place a
+# tier name becomes a call.
+_SERVING_TIERS = {
+    "float": ("search", _no_knob),
+    "sq8": ("search_sq8", _no_knob),
+    "sq4": ("search_sq8", lambda c, scan: {"bits": 4}),
+    "pq": ("search_pq", _no_knob),
+    "bq": ("search_bq", lambda c, scan: {"candidates_per_cell": c}),
+    "prefix": ("search_prefix", _no_knob),
+    "prefix_pca": ("search_prefix_pca", _no_knob),
+    "cascade": ("search_cascade", lambda c, scan: {"candidates_per_cell": c}),
+    "graph": ("search_graph", lambda c, scan: {"ef": c or 64}),
+}
+_DISTRIBUTED_TIERS = {
+    "float": ("search_distributed", lambda c, scan: {"scan": scan}),
+    "sq8": ("search_sq8_distributed", _no_knob),
+    "cascade": (
+        "search_cascade_distributed",
+        lambda c, scan: {"candidates_per_cell": c},
+    ),
+}
+
+
+def _run_tier(
     index: "IVFIndex",
-    queries_tuple,
-    k: int,
-    nprobe: int,
-    predicate,
+    tiers: dict,
     tier: str,
-    candidates_per_cell: int | None,
+    queries,
+    candidates_per_cell: int | None = None,
+    scan: str = "join",
+    **kwargs,
 ) -> DataFrame:
-    """Candidate generation for the metric wrappers below through any of
-    the index's serving tiers.  Every tier is exact-equivalent to the
-    float probe at full probe (lossless cuts, or unbounded top-C for
-    BQ/cascade), so the wrapper's exact metric rescore — and therefore
-    the shared oracle — holds tier-independently."""
-    if tier == "float":
-        return index.search(queries_tuple, k=k, nprobe=nprobe, predicate=predicate)
-    if tier in ("sq8", "sq4"):
-        return index.search_sq8(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate,
-            bits=4 if tier == "sq4" else 8,
+    """Run ``tier`` of a tier table (``_SERVING_TIERS`` /
+    ``_DISTRIBUTED_TIERS``) on ``index``; ``kwargs`` are the arguments
+    every tier of the table shares (k, nprobe, predicate, ...)."""
+    if tier not in tiers:
+        raise ValueError(
+            f"unknown tier {tier!r}; expected one of {', '.join(tiers)}"
         )
-    if tier == "pq":
-        return index.search_pq(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate
-        )
-    if tier == "bq":
-        return index.search_bq(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate,
-            candidates_per_cell=candidates_per_cell,
-        )
-    if tier == "prefix":
-        return index.search_prefix(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate
-        )
-    if tier == "cascade":
-        return index.search_cascade(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate,
-            candidates_per_cell=candidates_per_cell,
-        )
-    if tier == "graph":
-        # the graph tier's serving budget is the beam width: map the
-        # shared C knob onto ef (unbounded C → exhaustive beam → exact)
-        return index.search_graph(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate,
-            ef=candidates_per_cell or 64,
-        )
-    raise ValueError(f"unknown tier {tier!r}")
+    method, knob = tiers[tier]
+    return getattr(index, method)(
+        queries, **knob(candidates_per_cell, scan), **kwargs
+    )
 
 
 def search_cosine(
@@ -5000,9 +4732,9 @@ def search_cosine(
     norms = np.linalg.norm(Q.astype(np.float64), axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
     Qn = (Q.astype(np.float64) / norms).astype(np.float32)
-    cand = _tier_candidates(
-        index, (qids, Qn), k + candidate_margin, nprobe, predicate,
-        tier, candidates_per_cell,
+    cand = _run_tier(
+        index, _SERVING_TIERS, tier, (qids, Qn), candidates_per_cell,
+        k=k + candidate_margin, nprobe=nprobe, predicate=predicate,
     ).select("qid", "neighbor_id")
     qdf = _queries_df(spark, queries, qids, Q)
     rescored = (
@@ -5055,9 +4787,9 @@ def search_ip(
     Qa = np.hstack(
         [Q.astype(np.float32), np.zeros((len(Q), 1), dtype=np.float32)]
     )
-    cand = _tier_candidates(
-        index, (qids, Qa), k + candidate_margin, nprobe, predicate,
-        tier, candidates_per_cell,
+    cand = _run_tier(
+        index, _SERVING_TIERS, tier, (qids, Qa), candidates_per_cell,
+        k=k + candidate_margin, nprobe=nprobe, predicate=predicate,
     ).select("qid", "neighbor_id")
     qdf = _queries_df(spark, queries, qids, Q)
     rescored = (
@@ -5174,20 +4906,10 @@ def search_cosine_distributed(
     normq = queries.select(
         "qid", normalize(F.col("query")).cast("array<float>").alias("query")
     )
-    if tier == "cascade":
-        cand = index.search_cascade_distributed(
-            normq, k=k + candidate_margin, nprobe=nprobe,
-            candidates_per_cell=candidates_per_cell,
-        )
-    elif tier == "sq8":
-        cand = index.search_sq8_distributed(
-            normq, k=k + candidate_margin, nprobe=nprobe
-        )
-    else:
-        cand = index.search_distributed(
-            normq, k=k + candidate_margin, nprobe=nprobe
-        )
-    cand = cand.select("qid", "neighbor_id")
+    cand = _run_tier(
+        index, _DISTRIBUTED_TIERS, tier, normq, candidates_per_cell,
+        k=k + candidate_margin, nprobe=nprobe,
+    ).select("qid", "neighbor_id")
     rescored = (
         cand.join(
             original_vectors.select(
@@ -5233,20 +4955,10 @@ def search_ip_distributed(
             F.col("query").cast("array<double>"), F.array(F.lit(0.0))
         ).cast("array<float>").alias("query"),
     )
-    if tier == "cascade":
-        cand = index.search_cascade_distributed(
-            augq, k=k + candidate_margin, nprobe=nprobe,
-            candidates_per_cell=candidates_per_cell,
-        )
-    elif tier == "sq8":
-        cand = index.search_sq8_distributed(
-            augq, k=k + candidate_margin, nprobe=nprobe
-        )
-    else:
-        cand = index.search_distributed(
-            augq, k=k + candidate_margin, nprobe=nprobe
-        )
-    cand = cand.select("qid", "neighbor_id")
+    cand = _run_tier(
+        index, _DISTRIBUTED_TIERS, tier, augq, candidates_per_cell,
+        k=k + candidate_margin, nprobe=nprobe,
+    ).select("qid", "neighbor_id")
     rescored = (
         cand.join(
             original_vectors.select(

@@ -39,7 +39,12 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_search_engine_spark.operators.ivf import IVFIndex
+from vector_search_engine_spark.operators.ivf import (
+    _DISTRIBUTED_TIERS,
+    _SERVING_TIERS,
+    IVFIndex,
+    _run_tier,
+)
 from vector_search_engine_spark.operators.knn import (
     _finalize_topk,
     knn_exact,
@@ -430,11 +435,6 @@ class VectorEngine:
         the fixed 8·k default collapsed recall on clustered corpora);
         an explicit value is the uniform per-cell serving knob.
         The delta side always scans exact floats, deltas are small."""
-        if tier not in (
-            "float", "sq8", "sq4", "pq", "bq", "prefix", "prefix_pca",
-            "cascade", "graph",
-        ):
-            raise ValueError(f"unknown search tier {tier!r}")
         id_col = self.index.meta["id_col"]
         vec_col = self.index.meta["vec_col"]
         # pin the delta snapshot ONCE: the exclude anti-join and the delta
@@ -442,93 +442,18 @@ class VectorEngine:
         # or compaction advances the delta mid-query
         delta_latest = self.delta_latest(seqs=self._live_seqs())
         # shadowed ids exclude via anti-join — the delta can be arbitrarily
-        # large under sustained ingest; ids never visit the driver
-        if tier == "pq":
-            indexed_part = self.index.search_pq(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier in ("sq8", "sq4"):
-            indexed_part = self.index.search_sq8(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                bits=4 if tier == "sq4" else 8,
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "bq":
-            indexed_part = self.index.search_bq(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                candidates_per_cell=candidates_per_cell,
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "prefix":
-            indexed_part = self.index.search_prefix(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "prefix_pca":
-            # the rotated-basis prefix cut (lossless, float32-storage
-            # error budgeted) inside the merged Q4 contract; shadowed
-            # ids leave pre-cut like every lossless tier
-            indexed_part = self.index.search_prefix_pca(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "cascade":
-            # staged BQ→SQ8→float serving inside the merged contract:
-            # exact at full probe with an unbounded stage-1 cut, like the
-            # standalone tier (ivf.search_cascade)
-            indexed_part = self.index.search_cascade(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                candidates_per_cell=candidates_per_cell,
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "graph":
-            # per-cell HNSW beam on the indexed side; shadowed ids leave
-            # AFTER the walk (removing nodes pre-walk would disconnect
-            # the graph) — with an exhaustive beam the post-exclusion is
-            # exact, same argument as the tier's predicate handling
-            indexed_part = self.index.search_graph(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                ef=candidates_per_cell or 64,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
-        else:
-            indexed_part = self.index.search(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
+        # large under sustained ingest; ids never visit the driver.  Each
+        # tier drops them where its cut stays exact: pre-cut for the
+        # lossless tiers and the sign tiers' stage 1, after the walk for
+        # graph (removing nodes pre-walk would disconnect the graph).
+        indexed_part = _run_tier(
+            self.index, _SERVING_TIERS, tier, queries, candidates_per_cell,
+            k=k,
+            nprobe=nprobe,
+            exclude_ids=delta_latest.select(id_col),
+            predicate=predicate,
+            round_output=False,
+        )
         # tombstones (NULL vector = deleted id) stay in delta_latest so
         # their ids keep shadowing the indexed side via the anti-join
         # above, but they carry nothing to scan
@@ -646,31 +571,17 @@ class VectorEngine:
         (float tier only, r14): the indexed side's physical scan shape
         — "join" (serving-sized |Q|) or "cogroup" (per-cell GEMM, the
         dataset-sized-|Q| shape; see IVFIndex.search_distributed)."""
-        if tier not in ("float", "sq8", "cascade"):
-            raise ValueError(f"unknown distributed tier {tier!r}")
         id_col = self.index.meta["id_col"]
         vec_col = self.index.meta["vec_col"]
         # pin the delta snapshot ONCE (same discipline as search):
         # exclusion and the delta scan must see identical seq sets
         delta_latest = self.delta_latest(seqs=self._live_seqs())
-        exclude = delta_latest.select(id_col)
-        if tier == "sq8":
-            indexed_part = self.index.search_sq8_distributed(
-                queries, k=k, nprobe=nprobe, exclude_ids=exclude,
-                predicate=predicate, round_output=False,
-            )
-        elif tier == "cascade":
-            indexed_part = self.index.search_cascade_distributed(
-                queries, k=k, nprobe=nprobe,
-                candidates_per_cell=candidates_per_cell,
-                exclude_ids=exclude, predicate=predicate,
-                round_output=False,
-            )
-        else:
-            indexed_part = self.index.search_distributed(
-                queries, k=k, nprobe=nprobe, exclude_ids=exclude,
-                predicate=predicate, round_output=False, scan=scan,
-            )
+        indexed_part = _run_tier(
+            self.index, _DISTRIBUTED_TIERS, tier, queries,
+            candidates_per_cell, scan,
+            k=k, nprobe=nprobe, exclude_ids=delta_latest.select(id_col),
+            predicate=predicate, round_output=False,
+        )
         delta_live = delta_latest.filter(F.col(vec_col).isNotNull())
         if predicate is not None:
             delta_live = delta_live.filter(predicate)
