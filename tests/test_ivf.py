@@ -1268,6 +1268,52 @@ def test_cascade_distributed_broadcasts_memoized_per_generation(
     assert len(index._sign_budget_bc_cache) == 2
 
 
+def test_cascade_distributed_lazy_search_survives_broadcast_eviction(
+    spark, embeddings, index
+):
+    """A bulk cascade search built lazily must still run after later
+    searches push its memoized budget broadcast out of the cache: past
+    17 ``(generation, k)`` keys the cache evicts only the
+    least-recently-used broadcast and unpersists it (an unpersisted
+    broadcast re-ships on use).  Destroying every cached broadcast on
+    overflow failed the first search with "Attempted to use Broadcast
+    after it was destroyed"."""
+    q = knn_ops.make_queries(embeddings, n=4)
+    full = index.meta["n_centroids"]
+    first = index.search_cascade_distributed(q, k=5, nprobe=full)
+    for k in range(6, 24):
+        index.search_cascade_distributed(q, k=k, nprobe=full)
+    gen = index._read_manifest()["latest_gen"]
+    assert (gen, 5) not in index._sign_budget_bc_cache
+    assert len(index._sign_budget_bc_cache) <= 17
+    assert first.count() == 20
+
+
+def test_radius_search_distributed_memoizes_cell_radii(
+    spark, embeddings, index, monkeypatch
+):
+    """Per-cell radii come from one memo per generation: two
+    ``radius_search_distributed`` calls on one generation run the
+    ``max(dist_to_centroid)`` aggregation once."""
+    from collections import OrderedDict
+
+    q = knn_ops.make_queries(embeddings, n=3)
+    index._radii_cache = OrderedDict()
+    calls = {"n": 0}
+    orig_max = F.max
+
+    def spy(col):
+        if isinstance(col, str) and col == "dist_to_centroid":
+            calls["n"] += 1
+        return orig_max(col)
+
+    monkeypatch.setattr(F, "max", spy)
+    a = index.radius_search_distributed(q, 1.5).collect()
+    b = index.radius_search_distributed(q, 1.5).collect()
+    assert calls["n"] == 1
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
 def test_pca_staleness_monitor_and_retrain(spark, tmp_path):
     """r12 (verdict item 3): the pcarot sidecar's carried-forward
     rotation is MONITORED — build-time prefix energy persists in the

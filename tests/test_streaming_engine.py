@@ -416,7 +416,10 @@ def test_merged_search_pq_tier_equals_exact(spark, embeddings, engine):
     it lands) swaps only the indexed side's candidate scan; at full probe
     with an unbounded budget the merged result must equal the float
     tier's (shadow exclusion happens BEFORE each lossless cut, so
-    upserted ids cannot distort the k-th upper bound)."""
+    upserted ids cannot distort the k-th upper bound).  A second pass
+    runs with tiny Arrow batches, so cells span several batches and one
+    batch holds several cells — the kernels' shared cell loop must still
+    give every tier the float tier's result."""
     tail = embeddings.filter(F.col("vec_id") >= 400)
     moved = (
         embeddings.filter(F.col("vec_id") < 5)
@@ -432,11 +435,23 @@ def test_merged_search_pq_tier_equals_exact(spark, embeddings, engine):
     q = knn_ops.make_queries(embeddings, n=10)
     np_full = engine.index.meta["n_centroids"]
     fl = _sorted(engine.search(q, k=10, nprobe=np_full))
-    for tier in _SERVING_TIERS:
-        got = engine.search(
-            q, k=10, nprobe=np_full, tier=tier, candidates_per_cell=10**9
-        )
-        assert _sorted(got) == fl, tier
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(batch_conf, None)
+    try:
+        for batch in (None, 37):
+            if batch is not None:
+                spark.conf.set(batch_conf, str(batch))
+            for tier in _SERVING_TIERS:
+                got = engine.search(
+                    q, k=10, nprobe=np_full, tier=tier,
+                    candidates_per_cell=10**9,
+                )
+                assert _sorted(got) == fl, (tier, batch)
+    finally:
+        if saved is None:
+            spark.conf.unset(batch_conf)
+        else:
+            spark.conf.set(batch_conf, saved)
     with pytest.raises(ValueError, match="tier"):
         engine.search(q, k=10, tier="sq2")
 

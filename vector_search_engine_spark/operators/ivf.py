@@ -46,6 +46,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,6 +62,10 @@ from vector_search_engine_spark.operators.knn import (
 # the same generation dir.  Same single-process scope as _INSTANCE_LOCK.
 _SIDECAR_LOCK = threading.Lock()
 
+# Guards the dict operations of IVFIndex._memo (check-then-act on the
+# per-instance memos that concurrent searches share).
+_MEMO_LOCK = threading.Lock()
+
 # cascade stage-2 candidate lists above this estimated row count take a
 # shuffle join instead of a driver broadcast (simjoin's max_broadcast_rows
 # discipline — the exactness configuration runs unbounded C at full probe,
@@ -74,6 +79,11 @@ _CASCADE_BROADCAST_ROWS = 5_000_000
 # cell can't turn the default into a full-probe rescore of 10^8 rows.
 # Explicit candidates_per_cell overrides both the derivation and the cap.
 AUTO_SIGN_BUDGET_CAP = 65_536
+
+# float64 cells per GEMM tile in the cogroup kernels: one hot cell can be
+# probed by ALL of a dataset-sized query table, so the per-call distance
+# matrix is tiled over query columns to stay near 128 MB
+_TILE_CELLS = 16_000_000
 
 
 def _merge_built_partitions(tmp: str | None, out_dir: str) -> None:
@@ -148,7 +158,7 @@ def _sq_bound_mask(
 
 def _sq_bound_mask_multi(
     codes, lo: np.ndarray, hi: np.ndarray, Qm: np.ndarray, dim: int,
-    bits: int, k: int, max_tile_cells: int = 16_000_000,
+    bits: int, k: int,
 ) -> np.ndarray:
     """Multi-query form of ``_sq_bound_mask`` (r17): decode the group's
     codes ONCE and evaluate the same lossless bound against every probing
@@ -171,10 +181,9 @@ def _sq_bound_mask_multi(
     n = len(lo)
     # query-column tiling (r18): the cogroup scan can hand one hot cell
     # ALL of a dataset-sized query table's probes — cap the per-call
-    # distance matrix at ~max_tile_cells float64 cells (the
-    # _cell_cogroup_topk tile discipline).  Each query's mask depends
-    # only on its own column, so tiling changes nothing.
-    step = max(1, max_tile_cells // max(n, 1))
+    # distance matrix at _TILE_CELLS.  Each query's mask depends only on
+    # its own column, so tiling changes nothing.
+    step = max(1, _TILE_CELLS // max(n, 1))
     outs = []
     for c0 in range(0, Qm.shape[0], step):
         D = l2_sq_matrix(V, Qm[c0 : c0 + step])  # (n, tile), clamped >= 0
@@ -185,41 +194,93 @@ def _sq_bound_mask_multi(
     return outs[0] if len(outs) == 1 else np.concatenate(outs, axis=1)
 
 
-def _emit_topk_once(best: dict, k: int):
-    """Final per-task emit shared by the probed-search kernels (r18,
-    guide §4): merge each query's accumulated candidate piles with the
-    same exact (dist, id) lexsort cut as before, but yield ONE
-    (qid, neighbor_id, dist) DataFrame per task — the per-query yield
-    shape paid one tiny Arrow batch per query per task."""
-    out_q, out_i, out_d = [], [], []
+def _sign_cut(codes, d: int, Qc: np.ndarray, keep: int) -> list[np.ndarray]:
+    """The BQ stage-1 cut of one cell group, shared by every sign tier:
+    the group's packed sign codes unpack ONCE, one GEMM of the ±1 block
+    scores every probing query at once — the asymmetric score
+    ``(q − t) · sign(v − t)`` against the centered queries ``Qc`` (bits
+    encode ``sign(v − t)``) — and each query keeps its top ``keep``
+    rows.  Returns one row-position array per row of ``Qc`` (every row
+    when the group holds at most ``keep``)."""
+    n = len(codes)
+    if n <= keep:
+        return [np.arange(n)] * len(Qc)
+    raw = np.frombuffer(b"".join(codes), dtype=np.uint8)
+    bits = np.unpackbits(raw.reshape(n, -1), axis=1)[:, :d]
+    S = (2.0 * bits - 1.0) @ Qc.T  # (n, |probing queries|)
+    return [np.argpartition(-S[:, j], keep - 1)[:keep] for j in range(len(Qc))]
+
+
+def _cell_slices(pdf: pd.DataFrame, cell_qidx: dict):
+    """The serving kernels' cell loop over one Arrow batch: yields
+    ``(cell, qidx, rows)`` for every cell slice some query probes —
+    ``rows`` the slice's positions in ``pdf`` and ``qidx`` the probing
+    queries' positions (``_cell_map``).  A stable argsort on
+    ``centroid_id`` gives the same groups, in the same in-group row
+    order, as a pandas groupby on the cell, without its per-group frame
+    copies."""
+    if len(pdf) == 0:
+        return
+    cids = pdf["centroid_id"].to_numpy()
+    order = np.argsort(cids, kind="stable")
+    cs = cids[order]
+    cuts = np.flatnonzero(cs[1:] != cs[:-1]) + 1
+    starts = np.concatenate(([0], cuts))
+    for s, e in zip(starts, np.concatenate((cuts, [len(cs)]))):
+        qidx = cell_qidx.get(int(cs[s]))
+        if qidx:
+            yield int(cs[s]), qidx, order[s:e]
+
+
+class _Rows:
+    """One task's output of a cut or top-k kernel, emitted as ONE pandas
+    frame (r18, guide §4: one Arrow batch per task, not one per cut
+    group).  ``add(qid, ids, x)`` appends a query's neighbor ids with,
+    per ``extra``, their distances (``"dist"``) or the query vector
+    riding every row (``"query"``); ``None`` emits bare pairs.  Columns
+    come out in the tier schemas' order."""
+
+    def __init__(self, extra: str | None = None):
+        self.extra = extra
+        self.q: list = []
+        self.i: list = []
+        self.x: list = []
+
+    def add(self, qid, ids: np.ndarray, x=None) -> None:
+        self.q.append(np.full(len(ids), qid, dtype=np.int64))
+        self.i.append(ids)
+        if self.extra == "dist":
+            self.x.append(x)
+        elif self.extra == "query":
+            self.x.extend([x] * len(ids))
+
+    def frame(self) -> pd.DataFrame | None:
+        if not self.q:
+            return None
+        cols = {"qid": np.concatenate(self.q)}
+        if self.extra == "query":
+            cols["query"] = self.x
+        cols["neighbor_id"] = np.concatenate(self.i)
+        if self.extra == "dist":
+            cols["dist"] = np.concatenate(self.x)
+        return pd.DataFrame(cols)
+
+    def emit(self) -> Iterator[pd.DataFrame]:
+        if self.q:
+            yield self.frame()
+
+
+def _emit_topk_once(best: dict, k: int) -> Iterator[pd.DataFrame]:
+    """Final per-task emit of the probed-search kernels: merge each
+    query's accumulated ``(ids, dist)`` piles with the exact (dist, id)
+    lexsort cut and emit ONE (qid, neighbor_id, dist) frame."""
+    out = _Rows("dist")
     for qid, parts in best.items():
         ids = np.concatenate([p[0] for p in parts])
         d = np.concatenate([p[1] for p in parts])
         order = np.lexsort((ids, d))[:k]
-        out_q.append(np.full(len(order), qid, dtype=np.int64))
-        out_i.append(ids[order])
-        out_d.append(d[order])
-    if out_q:
-        yield pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_i),
-                "dist": np.concatenate(out_d),
-            }
-        )
-
-
-def _emit_pairs_once(out_q: list, out_i: list):
-    """Final per-task emit for the candidate-cut kernels (r18): one
-    (qid, neighbor_id) DataFrame per task instead of one per cut group.
-    The candidate SETS are whatever the caller accumulated — unchanged."""
-    if out_i:
-        yield pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_i),
-            }
-        )
+        out.add(qid, ids[order], d[order])
+    return out.emit()
 
 
 def _train_quantizer(
@@ -702,25 +763,18 @@ class IVFIndex:
         # eviction: as-of reads of older snapshots never push out the hot
         # current one.
         sig = tuple(sorted((int(c), int(g)) for c, g in cells.items()))
-        cache = getattr(self, "_vectors_df_cache", None)
-        if cache is None:
-            cache = self._vectors_df_cache = OrderedDict()
-        hit = cache.get(sig)
-        if hit is not None:
-            cache.move_to_end(sig)
-            return hit
-        st = getattr(self, "_vec_schema", None)
-        reader = self.spark.read.option("basePath", root)
-        if st is not None:
-            reader = reader.schema(st)
-        df = reader.parquet(*dirs)
-        if st is None:
-            self._vec_schema = df.schema
-        out = df.drop("gen")
-        if len(cache) > 8:
-            cache.popitem(last=False)  # bound retained plans
-        cache[sig] = out
-        return out
+
+        def read() -> DataFrame:
+            st = getattr(self, "_vec_schema", None)
+            reader = self.spark.read.option("basePath", root)
+            if st is not None:
+                reader = reader.schema(st)
+            df = reader.parquet(*dirs)
+            if st is None:
+                self._vec_schema = df.schema
+            return df.drop("gen")
+
+        return self._memo("_vectors_df_cache", sig, read, 9)
 
     def stats(self) -> DataFrame:
         """Per-centroid occupancy — the index's health check.
@@ -769,28 +823,49 @@ class IVFIndex:
 
         if not snap or "cells" not in snap:
             return {}
-        gen = snap.get("latest_gen")
-        cache = getattr(self, "_cell_counts_cache", None)
-        if cache is None:
-            cache = self._cell_counts_cache = OrderedDict()
-        if gen is not None and gen in cache:
-            cache.move_to_end(gen)
-            return cache[gen]
         root = os.path.join(self.index_dir, "vectors")
-        counts: dict[int, int] = {}
-        for c, g in snap["cells"].items():
-            d = os.path.join(root, f"gen={g}", f"centroid_id={c}")
-            n = sum(
-                pq.ParquetFile(fp).metadata.num_rows
-                for fp in glob.glob(os.path.join(d, "*.parquet"))
-            )
-            if n > 0:
-                counts[int(c)] = n
-        if gen is not None:
-            if len(cache) > 16:
-                cache.popitem(last=False)  # bound retained generations
-            cache[gen] = counts
-        return counts
+
+        def count() -> dict[int, int]:
+            counts: dict[int, int] = {}
+            for c, g in snap["cells"].items():
+                d = os.path.join(root, f"gen={g}", f"centroid_id={c}")
+                n = sum(
+                    pq.ParquetFile(fp).metadata.num_rows
+                    for fp in glob.glob(os.path.join(d, "*.parquet"))
+                )
+                if n > 0:
+                    counts[int(c)] = n
+            return counts
+
+        gen = snap.get("latest_gen")
+        return count() if gen is None else self._memo(
+            "_cell_counts_cache", gen, count, 17
+        )
+
+    def _memo(self, name: str, key, make, bound: int, release=None):
+        """The per-instance memo rule: ``self.<name>`` is an
+        ``OrderedDict`` of at most ``bound`` entries, ``make()`` fills a
+        miss, and a full memo evicts only its least-recently-used entry
+        (``release`` runs on it) — so as-of traffic never pushes out the
+        hot current entry, and no memo clears itself or grows without
+        limit.  Memos hold metadata, plans and broadcasts, never
+        results.  Dict operations hold ``_MEMO_LOCK``; ``make()`` runs
+        outside it (it may run a Spark job), so two racing misses may
+        both fill — the later fill wins, both values are valid."""
+        with _MEMO_LOCK:
+            cache = self.__dict__.get(name)
+            if not isinstance(cache, OrderedDict):
+                cache = self.__dict__[name] = OrderedDict(cache or {})
+            if key in cache:
+                cache.move_to_end(key)
+                return cache[key]
+        value = make()
+        with _MEMO_LOCK:
+            cache[key] = value
+            old = cache.popitem(last=False)[1] if len(cache) > bound else None
+        if old is not None and release is not None:
+            release(old)
+        return value
 
     # -- search --------------------------------------------------------------
 
@@ -876,6 +951,13 @@ class IVFIndex:
             [], "qid long, neighbor_id long, rank long, dist_sq double"
         )
 
+    def _query_broadcast(self, qids: np.ndarray, Q: np.ndarray, cell_qidx):
+        """The serving kernels' payload: ``(qids, float64 queries,
+        cell -> probing-query positions)``."""
+        return self.spark.sparkContext.broadcast(
+            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
+        )
+
     def _float_cells(self, snap, cells, exclude_ids, predicate) -> DataFrame:
         """``(centroid_id, id, vector)`` rows of the pinned snapshot's
         probed float cells — the candidate source of ``search``,
@@ -942,31 +1024,34 @@ class IVFIndex:
         return rows
 
     def _exact_rescore(
-        self, cand: DataFrame, snap, needed, queries, qids, Q,
-        qid_col: str, qvec_col: str, k: int, round_output: bool,
+        self, cand: DataFrame, snap, cells, k: int, round_output: bool,
+        queries=None, qids=None, Q=None, qid_col: str = "qid",
+        qvec_col: str = "query",
     ) -> DataFrame:
-        """Final stage of the per-query quantized tiers: the ``(qid,
-        neighbor_id)`` survivors rejoin the float vectors (same pruned
-        partitions) and the broadcast queries for the exact float
+        """Final stage of the quantized tiers: the survivors rejoin the
+        float vectors (same pruned partitions) for the exact float
         distance, then the standard ``(dist, id)`` top-k — so every
-        returned row carries the true distance."""
+        returned row carries the true distance.  Serving tiers pass their
+        bounded query set (``queries``/``qids``/``Q``), which joins as a
+        broadcast on qid; for the bulk tiers (``queries=None``) the query
+        vector rides the survivor rows as ``query`` — emitted by the cut
+        kernel — so no join against the query table is needed."""
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
         base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
+            F.col("centroid_id").isin(cells)
         )
-        qdf = _queries_df(self.spark, queries, qids, Q, qid_col, qvec_col)
-        rescored = (
-            cand.join(
-                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-                "neighbor_id",
-            )
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-            )
+        rows = cand.join(
+            base.select(F.col(id_col).alias("neighbor_id"), vec_col),
+            "neighbor_id",
+        )
+        if queries is not None:
+            qdf = _queries_df(self.spark, queries, qids, Q, qid_col, qvec_col)
+            rows = rows.join(F.broadcast(qdf), "qid")
+        rescored = rows.select(
+            "qid",
+            "neighbor_id",
+            l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
         )
         return _finalize_topk(rescored, k, "l2_sq", round_output)
 
@@ -1004,43 +1089,28 @@ class IVFIndex:
         if plan is None:
             return self._empty_topk()
         qids, Q, snap, needed, cell_qidx = plan
-        bc = self.spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
-        )
+        bc = self._query_broadcast(qids, Q, cell_qidx)
         cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
         def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # r18 kernel shape (guide §4.2): ONE object-array stack per
             # Arrow batch (the per-cell np.stack was the dominant Python
-            # cost), contiguous cell slices via argsort instead of pandas
-            # groupby, a vectorized tie-inclusive cut per cell (argpartition
-            # over the full D matrix — keeps every candidate at or below the
-            # k-th smallest distance, a provable superset of the exact
-            # (dist, id) top-k, so the exact merges below are unchanged),
-            # and ONE DataFrame yield per task instead of one tiny Arrow
-            # batch per query.  Per-cell GEMM is the same l2_sq_matrix call
+            # cost), contiguous cell slices (``_cell_slices``), a
+            # vectorized tie-inclusive cut per cell (argpartition over the
+            # full D matrix — keeps every candidate at or below the k-th
+            # smallest distance, a provable superset of the exact (dist,
+            # id) top-k, so the exact merge below is unchanged), and ONE
+            # frame per task.  Per-cell GEMM is the same l2_sq_matrix call
             # as before — merged searches still rank indexed and delta
             # candidates with bitwise-identical arithmetic.
             qids_, Q_, cq = bc.value
-            nq = len(qids_)
-            acc_ids: list[list] = [[] for _ in range(nq)]
-            acc_d: list[list] = [[] for _ in range(nq)]
+            best: dict[int, list] = {}
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                cids = pdf["centroid_id"].to_numpy()
                 ids_all = pdf[id_col].to_numpy(dtype=np.int64)
                 V_all = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                order = np.argsort(cids, kind="stable")
-                cs = cids[order]
-                cuts = np.flatnonzero(cs[1:] != cs[:-1]) + 1
-                starts = np.concatenate(([0], cuts))
-                ends = np.concatenate((cuts, [len(cs)]))
-                for s, e in zip(starts, ends):
-                    qidx = cq.get(int(cs[s]))
-                    if not qidx:
-                        continue
-                    rows = order[s:e]
+                for _, qidx, rows in _cell_slices(pdf, cq):
                     ids = ids_all[rows]
                     D = l2_sq_matrix(V_all[rows], Q_[qidx])
                     if len(ids) > k:
@@ -1048,32 +1118,15 @@ class IVFIndex:
                         t = np.take_along_axis(D, part, 0).max(axis=0)
                         for j, qi in enumerate(qidx):
                             keep = D[:, j] <= t[j]
-                            acc_ids[qi].append(ids[keep])
-                            acc_d[qi].append(D[keep, j])
+                            best.setdefault(int(qids_[qi]), []).append(
+                                (ids[keep], D[keep, j])
+                            )
                     else:
                         for j, qi in enumerate(qidx):
-                            acc_ids[qi].append(ids)
-                            acc_d[qi].append(D[:, j])
-            out_q, out_i, out_d = [], [], []
-            for qi in range(nq):
-                if not acc_ids[qi]:
-                    continue
-                ids = np.concatenate(acc_ids[qi])
-                d = np.concatenate(acc_d[qi])
-                if len(ids) > k:
-                    o = np.lexsort((ids, d))[:k]
-                    ids, d = ids[o], d[o]
-                out_q.append(np.full(len(ids), qids_[qi], dtype=np.int64))
-                out_i.append(ids)
-                out_d.append(d)
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_i),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
+                            best.setdefault(int(qids_[qi]), []).append(
+                                (ids, D[:, j])
+                            )
+            yield from _emit_topk_once(best, k)
 
         cand_topk = cand.mapInPandas(
             local_topk, schema="qid long, neighbor_id long, dist double"
@@ -1125,14 +1178,8 @@ class IVFIndex:
             # predicate's unresolved-expression string is a stable
             # fingerprint for Column trees built the same way; a new
             # commit bumps latest_gen and naturally invalidates.
-            cache = getattr(self, "_survivor_cache", None)
-            if cache is None:
-                cache = self._survivor_cache = {}
-            gen = (snap or {}).get("latest_gen")
-            key = (str(predicate), gen)
-            if key in cache:
-                matches, total = cache[key]
-            else:
+            # Least-recently-used eviction past 256 entries (``_memo``).
+            def count() -> tuple[int, int]:
                 matches = self.vectors(snapshot=snap).filter(predicate).count()
                 total = self.meta.get("n_vectors") or 0
                 try:
@@ -1145,9 +1192,14 @@ class IVFIndex:
                     total = sum(self._snapshot_counts(snap).values()) or total
                 except Exception:
                     pass  # cost model only — build-time count is fine
-                if len(cache) > 256:
-                    cache.clear()  # bound the planner cache
-                cache[key] = (matches, total)
+                return matches, total
+
+            matches, total = self._memo(
+                "_survivor_cache",
+                (str(predicate), (snap or {}).get("latest_gen")),
+                count,
+                256,
+            )
             probed_frac = min(
                 1.0, nprobe / max(1, self.meta["n_centroids"])
             )
@@ -1421,23 +1473,18 @@ class IVFIndex:
             return self._empty_topk()
         qids, Q, snap, needed, cell_qidx = plan
         dp = max(1, min(int(prefix_dims), Q.shape[1]))
-        bc = self.spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
-        )
+        bc = self._query_broadcast(qids, Q, cell_qidx)
         cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
         def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qids_, Q_, cq = bc.value
             best: dict[int, list] = {}
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    V = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
+                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
+                vecs = pdf[vec_col].to_numpy()
+                for _, qidx, rows in _cell_slices(pdf, cq):
+                    ids = ids_all[rows]
+                    V = np.stack(vecs[rows]).astype(np.float64)
                     n = len(ids)
                     Vp = V[:, :dp]
                     VVp = (Vp * Vp).sum(axis=1)
@@ -1824,23 +1871,21 @@ class IVFIndex:
             qids_, Q_, QR_, cq = bc.value
             best: dict[int, list] = {}
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    Zp = np.stack(
-                        [z[:dp] for z in grp["rotvec"].to_numpy()]
-                    ).astype(np.float64)
+                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
+                rot_all = pdf["rotvec"].to_numpy()
+                vn_all = pdf["vnorm"].to_numpy(dtype=np.float64)
+                vecs = pdf[vec_col].to_numpy()
+                for _, qidx, rows in _cell_slices(pdf, cq):
+                    ids = ids_all[rows]
+                    Zp = np.stack([z[:dp] for z in rot_all[rows]]).astype(
+                        np.float64
+                    )
                     ZZp = (Zp * Zp).sum(axis=1)
-                    vn = grp["vnorm"].to_numpy(dtype=np.float64)
                     n = len(ids)
                     # float32-storage error budget (see docstring)
-                    e_v = (2.0 ** -23) * vn + 1e-9
+                    e_v = (2.0 ** -23) * vn_all[rows] + 1e-9
                     kk = min(k, n)
-                    vec_arr = grp[vec_col].to_numpy()
+                    vec_arr = vecs[rows]
                     for qi in qidx:
                         q = Q_[qi]
                         qp = QR_[qi][:dp]
@@ -1961,12 +2006,8 @@ class IVFIndex:
         vec_col = self.meta["vec_col"]
 
         def batch_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            out_q: list = []
-            out_i: list = []
-            out_d: list = []
+            out = _Rows("dist")
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
                 for qid, grp in pdf.groupby("qid"):
                     q = np.asarray(
                         grp["query"].iloc[0], dtype=np.float32
@@ -1976,17 +2017,8 @@ class IVFIndex:
                     d = (V * V).sum(axis=1) - 2.0 * (V @ q) + float(q @ q)
                     np.maximum(d, 0.0, out=d)
                     order = np.lexsort((ids, d))[:k]
-                    out_q.append(np.full(len(order), int(qid), dtype=np.int64))
-                    out_i.append(ids[order])
-                    out_d.append(d[order])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_i),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
+                    out.add(int(qid), ids[order], d[order])
+            yield from out.emit()
 
         return batch_topk
 
@@ -2040,23 +2072,11 @@ class IVFIndex:
         ef-bounded beam plays the same per-query "scan less than
         everything" role; this is the set-oriented, provably exact
         analog."""
-        spark = self.spark
         snap = self._read_manifest()
-        cids, C = self._centroids_for(snap)
-        radii = {
-            int(r["centroid_id"]): float(r["r_sq"])
-            for r in self.vectors(snapshot=snap)
-            .groupBy("centroid_id")
-            .agg(F.max("dist_to_centroid").alias("r_sq"))
-            .collect()
-        }
-        R_cell = np.sqrt(
-            np.array([radii.get(int(c), 0.0) for c in cids], dtype=np.float64)
-        )
 
         # ---- pass 1: seed top-k over nprobe_seed cells (cogroup scan)
         probes_seed, _, _ = self._assign_probes_distributed(
-            queries, qid_col, qvec_col, snap, min(nprobe_seed, len(cids))
+            queries, qid_col, qvec_col, snap, nprobe_seed
         )
         seed_cand = self._cell_cogroup_topk(
             probes_seed, self.vectors(snapshot=snap), k
@@ -2081,14 +2101,56 @@ class IVFIndex:
                 .alias("_r"),
             )
         )
-        bc = spark.sparkContext.broadcast((cids, C, R_cell))
+        cand_topk = self._cell_cogroup_topk(
+            self._triangle_probes(qb, snap), self.vectors(snapshot=snap), k
+        )
+        return _finalize_topk(cand_topk, k, "l2_sq", round_output)
+
+    def _cell_radii(self, snap: dict | None):
+        """``(cids, centroids, R)`` of a pinned snapshot, ``R[i]`` the
+        radius of cell ``cids[i]``: the square root of the cell's max
+        ``dist_to_centroid`` (stored squared at build; 0 for an empty
+        cell).  One column-pruned aggregation over the index's stats
+        column, memoized per generation (cells are immutable per
+        generation), so repeated triangle-inequality prunes against one
+        snapshot pay the scan once."""
+        def aggregate() -> dict[int, float]:
+            return {
+                int(r["centroid_id"]): float(r["r_sq"])
+                for r in self.vectors(snapshot=snap)
+                .groupBy("centroid_id")
+                .agg(F.max("dist_to_centroid").alias("r_sq"))
+                .collect()
+            }
+
+        radii = self._memo(
+            "_radii_cache", self._sidecar_gen(snap), aggregate, 17
+        )
+        cids, C = self._centroids_for(snap)
+        R = np.array([radii.get(int(c), 0.0) for c in cids], dtype=np.float64)
+        return cids, C, np.sqrt(R)
+
+    def _triangle_probes(
+        self, qb: DataFrame, snap: dict | None, qid_col: str = "qid",
+        qvec_col: str = "query",
+    ) -> DataFrame:
+        """``(qid, query, centroid_id)`` probe stubs for every cell the
+        triangle inequality cannot exclude: query q probes cell c iff
+        ``sqrt(d(q, c)) <= r_q + R_c`` (``R_c`` from ``_cell_radii``,
+        ``r_q`` from ``qb``'s ``_r`` column) — a zero-loss prune, since
+        ``d(q, v) >= d(q, c) - R_c`` for every v in c.  Runs inside the
+        query table's partitions (centroids and radii ride a broadcast,
+        O(cells)); shared by ``radius_search_distributed`` and the
+        verify pass of ``search_exact_bounded_distributed``."""
+        cids, C, R = self._cell_radii(snap)
+        bc = self.spark.sparkContext.broadcast((cids, C, R))
 
         def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             cids_, C_, Rc_ = bc.value
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                Q = np.stack(pdf["query"].to_numpy()).astype(np.float64)
+                Q = np.stack(pdf[qvec_col].to_numpy()).astype(np.float64)
                 D = l2_sq_matrix(Q, C_)
                 r_q = pdf["_r"].to_numpy(dtype=np.float64)
                 hit = np.sqrt(D) <= (r_q[:, None] + Rc_[None, :])
@@ -2097,110 +2159,106 @@ class IVFIndex:
                     continue
                 yield pd.DataFrame(
                     {
-                        "qid": pdf["qid"].to_numpy(dtype=np.int64)[qi],
-                        "query": pdf["query"].to_numpy()[qi],
+                        "qid": pdf[qid_col].to_numpy(dtype=np.int64)[qi],
+                        "query": pdf[qvec_col].to_numpy()[qi],
                         "centroid_id": cids_[ci].astype(np.int32),
                     }
                 )
 
-        probes = qb.mapInPandas(
+        return qb.mapInPandas(
             probe, schema="qid long, query array<float>, centroid_id int"
         )
-        cand_topk = self._cell_cogroup_topk(
-            probes, self.vectors(snapshot=snap), k
-        )
-        return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
-    def _cell_cogroup_topk(
-        self,
-        probes: DataFrame,
-        base: DataFrame,
-        k: int,
-        max_tile_cells: int = 16_000_000,
+    def _cell_cogroup(
+        self, probes: DataFrame, side: DataFrame, cols, kernel, schema: str
     ) -> DataFrame:
-        """Shared scan kernel of the bulk-|Q| exact tiers: cogroup the
-        ``(qid, query, centroid_id)`` probe stubs with the index cells
-        on ``centroid_id`` and run ONE chunked GEMM per cell, emitting
-        the local (dist, id) top-k per query — the cell-blocked twin of
-        ``knn_exact_distributed``'s kernel, so shuffle volume stays
-        ``probe stubs + N`` rows, never the ``|Q|·fanout·|cell|``
-        candidate rows the join scan materializes through Arrow (the
-        shape that caps the join scan at ~10k-query tables — SCALING
-        finding 25/30).  ``base`` is the caller-prepared index side
-        (snapshot pinned, predicate/exclude_ids already applied) with
-        ``(centroid_id, id_col, vec_col)`` columns.
+        """The per-cell cogroup of the bulk-|Q| tiers: the ``(qid,
+        query, centroid_id)`` probe stubs meet the cell rows of ``side``
+        (``centroid_id``, the id as ``nid``, plus ``cols``) on
+        ``centroid_id``, and ``kernel(cell, qpdf, vpdf)`` runs once per
+        cell that both sides populate, returning a ``schema`` frame (or
+        None for no rows).  Shuffle volume is probe stubs + each cell
+        once — never the ``|Q|·fanout·|cell|`` candidate rows a
+        probes⋈cells join materializes through Arrow (SCALING findings
+        25/30/48).
 
-        Both cogroup sides' grouping key is cast to ONE type (int) —
-        the finding-28 discipline (see ``knn.block_cogroup_keys``):
-        mixed int/bigint keys hash-partition differently and silently
-        drop whole cells.  Tile chunking caps the per-task distance
-        matrix at ``max_tile_cells`` float64 cells (~128 MB) no matter
-        how many queries probe one hot cell.  Practical bound: one
-        (cell, its probing queries) cogroup materializes as ONE pandas
-        pair, so per-task memory is O(|cell| + queries probing it) rows
-        — the hot-cell analog of the block join's tile; the engine's
-        hot-cell splitting keeps |cell| bounded."""
-        import pandas as pd  # noqa: F811 — executor-side closure import
+        Both sides' key is cast to ONE type (int) and checked — the
+        finding-28 discipline (see ``knn.block_cogroup_keys``): mixed
+        int/bigint keys hash-partition differently and silently drop
+        whole cells.
 
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
+        Memory bound, for every cogroup kernel: one task holds one cell
+        as a pandas frame, every query probing it, and all the pairs it
+        emits — O(|cell| + probing queries + emitted pairs) rows, where
+        the streamed join shape held one Arrow batch.  GEMM kernels tile
+        only their distance matrix (``_TILE_CELLS``).  ``rebalance``
+        bounds |cell| but not the probing queries, so a hot cell under a
+        full-probe, dataset-sized query table (worst: a radius search
+        with many hits) is the memory peak; the 100k×100k rung that
+        priced this shape (SCALING finding 48) ran with it."""
         qside = probes.select(
             F.col("centroid_id").cast("int").alias("centroid_id"),
             "qid",
             "query",
         )
-        vside = base.select(
+        vside = side.select(
             F.col("centroid_id").cast("int").alias("centroid_id"),
-            F.col(id_col).alias("nid"),
-            F.col(vec_col).alias("nvec"),
+            F.col(self.meta["id_col"]).alias("nid"),
+            *cols,
         )
         if qside.schema["centroid_id"].dataType != vside.schema[
             "centroid_id"
         ].dataType:  # pragma: no cover - structural guard (finding 28)
             raise AssertionError("cell cogroup key type mismatch")
+        dtypes = {"long": "int64", "double": "float64"}
+        fields = [f.split() for f in schema.split(",")]
 
-        def cell_topk(qpdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "qid": pd.Series(dtype="int64"),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                    "dist": pd.Series(dtype="float64"),
-                }
-            )
-            if len(qpdf) == 0 or len(vpdf) == 0:
-                return empty
+        def cell_kernel(key, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
+            out = None
+            if len(qpdf) and len(vpdf):
+                out = kernel(int(key[0]), qpdf, vpdf)
+            if out is None:
+                out = pd.DataFrame(
+                    {n: pd.Series(dtype=dtypes.get(t, object))
+                     for n, t in fields}
+                )
+            return out
+
+        cell_kernel.__name__ = kernel.__name__  # plans name the tier kernel
+        return (
+            qside.groupBy("centroid_id")
+            .cogroup(vside.groupBy("centroid_id"))
+            .applyInPandas(cell_kernel, schema=schema)
+        )
+
+    def _cell_cogroup_topk(
+        self, probes: DataFrame, base: DataFrame, k: int
+    ) -> DataFrame:
+        """Shared scan kernel of the bulk-|Q| exact tiers: per probed
+        cell (``_cell_cogroup``), ONE chunked GEMM of the cell's vectors
+        against its probing queries and the local (dist, id) top-k per
+        query — the cell-blocked twin of ``knn_exact_distributed``'s
+        kernel.  ``base`` is the caller-prepared index side (snapshot
+        pinned, predicate/exclude_ids already applied) with
+        ``(centroid_id, id_col, vec_col)`` columns."""
+        def cell_topk(cid, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
             qids = qpdf["qid"].to_numpy(dtype=np.int64)
             Q = np.stack(qpdf["query"].to_numpy())
             ids = vpdf["nid"].to_numpy(dtype=np.int64)
             V = np.stack(vpdf["nvec"].to_numpy())
             kk = min(k, len(ids))
-            step = max(1, max_tile_cells // max(len(ids), 1))
-            out_qid, out_id, out_dist = [], [], []
+            step = max(1, _TILE_CELLS // max(len(ids), 1))
+            out = _Rows("dist")
             for c0 in range(0, len(qids), step):
-                qs, Qc = qids[c0 : c0 + step], Q[c0 : c0 + step]
-                D = l2_sq_matrix(V, Qc)  # (n, m_chunk)
-                for j in range(len(qs)):
+                D = l2_sq_matrix(V, Q[c0 : c0 + step])  # (n, m_chunk)
+                for j, qid in enumerate(qids[c0 : c0 + step]):
                     order = np.lexsort((ids, D[:, j]))[:kk]
-                    out_qid.append(np.full(kk, qs[j], dtype=np.int64))
-                    out_id.append(ids[order])
-                    out_dist.append(D[order, j])
-            if not out_qid:
-                return empty
-            return pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_qid),
-                    "neighbor_id": np.concatenate(out_id),
-                    "dist": np.concatenate(out_dist),
-                }
-            )
+                    out.add(qid, ids[order], D[order, j])
+            return out.frame()
 
-        return (
-            qside.groupBy("centroid_id")
-            .cogroup(vside.groupBy("centroid_id"))
-            .applyInPandas(
-                lambda ql, vl: cell_topk(ql, vl),
-                schema="qid long, neighbor_id long, dist double",
-            )
+        return self._cell_cogroup(
+            probes, base, (F.col(self.meta["vec_col"]).alias("nvec"),),
+            cell_topk, "qid long, neighbor_id long, dist double",
         )
 
     def _assign_probes_distributed(
@@ -2328,8 +2386,6 @@ class IVFIndex:
         ``search_sq8``).  Reference anchor: the merged serve loop
         ``engine.h:100-144`` is the per-query analog; this is its bulk
         twin through the byte-cut tier."""
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         dim = self.meta["dim"]
         snap = self._pin(snapshot)
         sq_dir = self.ensure_sq8(snapshot=snap, bits=bits)
@@ -2344,91 +2400,33 @@ class IVFIndex:
             sq_dir, snap, cells, exclude_ids, predicate,
             cols=("code", "lo", "hi"),
         )
-
-        # r18 (verdict task 3): the probes⋈codes shuffle join duplicated
-        # every code row once per probing query BEFORE the Python boundary
-        # (|Q|·fanout·|cell| Arrow rows at full probe) — the same fan-out
-        # r17 removed from the per-query tiers.  The cut stage is now a
-        # per-cell COGROUP (the _cell_cogroup_topk scan shape): codes
-        # shuffle ONCE + probe stubs, each cell's codes decode once, and
-        # one GEMM evaluates the SAME lossless bound for all of the
-        # cell's probing queries (_sq_bound_mask_multi — its docstring
-        # carries the subset-composability argument; exact rescore below
-        # unchanged, so results are identical).  Survivors still carry
-        # their query vector, so the rescore needs no query join.
-        qside = probes.select(
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            "qid",
-            "query",
-        )
-        vside = codes.select(
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            F.col(id_col).alias("nid"),
-            "code",
-            "lo",
-            "hi",
-        )
-
-        def cell_cut(qpdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "qid": pd.Series(dtype="int64"),
-                    "query": pd.Series(dtype=object),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                }
-            )
-            if len(qpdf) == 0 or len(vpdf) == 0:
-                return empty
-            qids_ = qpdf["qid"].to_numpy(dtype=np.int64)
+        # r18 (verdict task 3): the cut stage is a per-cell COGROUP
+        # (``_cell_cogroup``) instead of a probes⋈codes join that
+        # duplicated every code row once per probing query: each cell's
+        # codes decode once, and one GEMM evaluates the SAME lossless
+        # bound for all of the cell's probing queries
+        # (_sq_bound_mask_multi — its docstring carries the
+        # subset-composability argument).  Survivors carry their query
+        # vector, so the rescore needs no query join.
+        def cell_cut(cid, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
             qv = qpdf["query"].to_numpy()
-            Qm = np.stack(qv).astype(np.float64)
             ids = vpdf["nid"].to_numpy(dtype=np.int64)
             KEEP = _sq_bound_mask_multi(
                 vpdf["code"],
                 vpdf["lo"].to_numpy(dtype=np.float64),
                 vpdf["hi"].to_numpy(dtype=np.float64),
-                Qm, dim, bits, k,
+                np.stack(qv).astype(np.float64), dim, bits, k,
             )
-            out_q: list = []
-            out_i: list = []
-            out_v: list = []
-            for j in range(len(qids_)):
-                kept = ids[KEEP[:, j]]
-                out_q.append(np.full(len(kept), qids_[j], dtype=np.int64))
-                out_i.append(kept)
-                out_v.extend([qv[j]] * len(kept))
-            if not out_i:
-                return empty
-            return pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "query": out_v,
-                    "neighbor_id": np.concatenate(out_i),
-                }
-            )
+            out = _Rows("query")
+            for j, qid in enumerate(qpdf["qid"].to_numpy(dtype=np.int64)):
+                out.add(qid, ids[KEEP[:, j]], qv[j])
+            return out.frame()
 
-        cand = (
-            qside.groupBy("centroid_id")
-            .cogroup(vside.groupBy("centroid_id"))
-            .applyInPandas(
-                lambda ql, vl: cell_cut(ql, vl),
-                schema="qid long, query array<float>, neighbor_id long",
-            )
+        cand = self._cell_cogroup(
+            probes, codes, ("code", "lo", "hi"), cell_cut,
+            "qid long, query array<float>, neighbor_id long",
         )
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(cells)
-        )
-        from vector_search_engine_spark.functions.vector import l2_sq
-
-        rescored = cand.join(
-            base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            "neighbor_id",
-        ).select(
-            "qid",
-            "neighbor_id",
-            l2_sq(F.col(vec_col), F.col("query")).alias("dist"),
-        )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
+        return self._exact_rescore(cand, snap, cells, k, round_output)
 
     def search_cascade_distributed(
         self,
@@ -2475,7 +2473,6 @@ class IVFIndex:
         dim-length json — driver-side scalar, broadcast to the kernel),
         exactly as the per-query cascade does."""
         id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         dim = self.meta["dim"]
         spark = self.spark
         C = int(candidates_per_cell) if candidates_per_cell else 8 * k
@@ -2509,80 +2506,29 @@ class IVFIndex:
             bq_dir, snap, cells, exclude_ids, predicate, cols=("code", "dim")
         )
 
-        # r18 (verdict task 3): stage 1 drops the probes⋈codes fan-out
-        # join (each 1-bit code row crossed Arrow once per probing query)
-        # for the per-cell COGROUP scan — codes shuffle once + probe
-        # stubs, each cell's bits unpack ONCE and one GEMM scores all of
-        # the cell's probing queries.  The top-C budget becomes per
-        # (query, WHOLE cell) instead of per (query, Arrow-batch slice)
-        # — at the graded unbounded-C configuration both keep everything
-        # (results identical, oracle-gated); at finite C the whole-cell
-        # cut honors the budget semantics (the auto budget IS per-cell
-        # population) without the b·C per-batch inflation.
-        qside1 = probes.select(
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            "qid",
-            "query",
-        )
-        vside1 = bq_codes.select(
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            F.col(id_col).alias("nid"),
-            "code",
-            "dim",
-        )
-
-        def bq_cell_cut(
-            key, qpdf: pd.DataFrame, vpdf: pd.DataFrame
-        ) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "qid": pd.Series(dtype="int64"),
-                    "query": pd.Series(dtype=object),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                }
-            )
-            if len(qpdf) == 0 or len(vpdf) == 0:
-                return empty
-            thr_ = bc_thr.value
+        # r18 (verdict task 3): stage 1 is a per-cell COGROUP, not a
+        # probes⋈codes fan-out join — codes shuffle once + probe stubs,
+        # and each cell's bits unpack ONCE for all of its probing
+        # queries (``_sign_cut``).  The top-C budget is per (query, WHOLE
+        # cell); at the graded unbounded-C configuration it keeps
+        # everything (results identical, oracle-gated).
+        def bq_cell_cut(cid, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
             bm = bc_budget.value if bc_budget is not None else None
-            cid = int(key[0])
-            qids_ = qpdf["qid"].to_numpy(dtype=np.int64)
             qv = qpdf["query"].to_numpy()
-            Qc = np.stack(qv).astype(np.float64) - thr_[None, :]
+            Qc = np.stack(qv).astype(np.float64) - bc_thr.value[None, :]
             ids = vpdf["nid"].to_numpy(dtype=np.int64)
-            d = int(vpdf["dim"].iloc[0])
-            raw = np.frombuffer(b"".join(vpdf["code"]), dtype=np.uint8)
-            bits_ = np.unpackbits(raw.reshape(len(ids), -1), axis=1)[:, :d]
-            S = (2.0 * bits_ - 1.0) @ Qc.T  # (n, |probing queries|)
-            cap_c = C if bm is None else bm.get(cid, C)
-            keep = min(cap_c, len(ids))
-            out_q: list = []
-            out_i: list = []
-            out_v: list = []
-            for j in range(len(qids_)):
-                sel = (
-                    np.argpartition(-S[:, j], keep - 1)[:keep]
-                    if len(ids) > keep
-                    else np.arange(len(ids))
-                )
-                out_q.append(np.full(len(sel), qids_[j], dtype=np.int64))
-                out_i.append(ids[sel])
-                out_v.extend([qv[j]] * len(sel))
-            return pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "query": out_v,
-                    "neighbor_id": np.concatenate(out_i),
-                }
+            sels = _sign_cut(
+                vpdf["code"], int(vpdf["dim"].iloc[0]), Qc,
+                C if bm is None else bm.get(cid, C),
             )
+            out = _Rows("query")
+            for j, qid in enumerate(qpdf["qid"].to_numpy(dtype=np.int64)):
+                out.add(qid, ids[sels[j]], qv[j])
+            return out.frame()
 
-        cand1 = (
-            qside1.groupBy("centroid_id")
-            .cogroup(vside1.groupBy("centroid_id"))
-            .applyInPandas(
-                bq_cell_cut,
-                schema="qid long, query array<float>, neighbor_id long",
-            )
+        cand1 = self._cell_cogroup(
+            probes, bq_codes, ("code", "dim"), bq_cell_cut,
+            "qid long, query array<float>, neighbor_id long",
         )
 
         # ---- stage 2: lossless SQ8 bound cut over stage-1 survivors
@@ -2594,55 +2540,26 @@ class IVFIndex:
         cand2_codes = cand1.join(sq_side, "neighbor_id")
 
         def sq_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            out_q: list = []
-            out_i: list = []
-            out_v: list = []
+            out = _Rows("query")
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
                 for qid, grp in pdf.groupby("qid"):
-                    q = np.asarray(
-                        grp["query"].iloc[0], dtype=np.float32
-                    ).astype(np.float64)
-                    ids = grp["neighbor_id"].to_numpy(dtype=np.int64)
+                    qv = grp["query"].iloc[0]
                     keep = _sq_bound_mask(
                         grp["code"],
                         grp["lo"].to_numpy(dtype=np.float64),
                         grp["hi"].to_numpy(dtype=np.float64),
-                        q, dim, 8, k,
+                        np.asarray(qv, dtype=np.float32).astype(np.float64),
+                        dim, 8, k,
                     )
-                    kept = ids[keep]
-                    out_q.append(np.full(len(kept), int(qid), dtype=np.int64))
-                    out_i.append(kept)
-                    out_v.extend([grp["query"].iloc[0]] * len(kept))
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "query": out_v,
-                        "neighbor_id": np.concatenate(out_i),
-                    }
-                )
+                    ids = grp["neighbor_id"].to_numpy(dtype=np.int64)
+                    out.add(int(qid), ids[keep], qv)
+            yield from out.emit()
 
         cand2 = cand2_codes.mapInPandas(
             sq_cut, schema="qid long, query array<float>, neighbor_id long"
         )
-
         # ---- stage 3: exact float rescore of the remnant
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(cells)
-        )
-        from vector_search_engine_spark.functions.vector import l2_sq
-
-        rescored = cand2.join(
-            base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            "neighbor_id",
-        ).select(
-            "qid",
-            "neighbor_id",
-            l2_sq(F.col(vec_col), F.col("query")).alias("dist"),
-        )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
+        return self._exact_rescore(cand2, snap, cells, k, round_output)
 
     def rebalance(
         self,
@@ -2858,15 +2775,13 @@ class IVFIndex:
         if plan is None:
             return self._empty_topk()
         qids, Q, snap, needed, cell_qidx = plan
-        # each cell decodes once with the bound evaluated for all its
-        # probing queries in one GEMM (_sq_bound_mask_multi).  The cut
+        # each cell slice decodes once with the bound evaluated for all
+        # its probing queries in one GEMM (_sq_bound_mask_multi).  The cut
         # group is (cell slice of an Arrow batch, query) — a still
         # lossless superset, so the exact rescore yields identical
         # results.  The sidecar is keyed by and built from the pinned
         # snapshot, so codes and the float rescore base always agree.
-        bc = self.spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
-        )
+        bc = self._query_broadcast(qids, Q, cell_qidx)
         sq_dir = self.ensure_sq8(snapshot=snap, bits=bits)
         cand_codes = self._sidecar_cells(
             sq_dir, snap, needed, exclude_ids, predicate,
@@ -2875,36 +2790,26 @@ class IVFIndex:
 
         def approx_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qids_, Q_, cq = bc.value
-            out_q: list = []
-            out_id: list = []
+            out = _Rows()
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
+                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
+                codes = pdf["code"].to_numpy()
+                lo = pdf["lo"].to_numpy(dtype=np.float64)
+                hi = pdf["hi"].to_numpy(dtype=np.float64)
+                for _, qidx, rows in _cell_slices(pdf, cq):
                     KEEP = _sq_bound_mask_multi(
-                        grp["code"],
-                        grp["lo"].to_numpy(dtype=np.float64),
-                        grp["hi"].to_numpy(dtype=np.float64),
-                        Q_[qidx], dim, bits, k,
+                        codes[rows], lo[rows], hi[rows], Q_[qidx], dim, bits, k
                     )
                     for j, qi in enumerate(qidx):
-                        kept = ids[KEEP[:, j]]
-                        out_q.append(
-                            np.full(len(kept), qids_[qi], dtype=np.int64)
-                        )
-                        out_id.append(kept)
-            yield from _emit_pairs_once(out_q, out_id)
+                        out.add(qids_[qi], ids_all[rows][KEEP[:, j]])
+            yield from out.emit()
 
         cand = cand_codes.mapInPandas(
             approx_cut, schema="qid long, neighbor_id long"
         )
         return self._exact_rescore(
-            cand, snap, needed, queries, qids, Q, qid_col, qvec_col, k,
-            round_output,
+            cand, snap, needed, k, round_output, queries, qids, Q, qid_col,
+            qvec_col,
         )
 
     def ensure_bq(self, snapshot: dict | None = None) -> str:
@@ -3155,67 +3060,106 @@ class IVFIndex:
         blocks without bound.  The budget map is a pure function of the
         generation's footer counts and ``k`` (``max(8k, min(pop, cap))``
         — same formula as ``_auto_sign_budget``), so one broadcast
-        serves every search against that generation; eviction (>16
-        retained keys, same bound as ``_cell_counts_cache``) destroys
-        the stale broadcasts it drops.  Probed-cell WARNING semantics
-        are unchanged: ``_auto_sign_budget`` still runs per call on the
-        probed set (memoized counts — no extra footer reads) purely for
-        its capped-cell / pre-manifest diagnostics.  A pre-manifest raw
-        layout broadcasts ``None`` — the kernel then falls back to its
-        closure floor, matching the per-query fallback."""
+        serves every search against that generation.  Past 17 retained
+        keys (``_memo``, same bound as ``_cell_counts_cache``) the
+        least-recently-used broadcast is evicted and UNPERSISTED, never
+        destroyed: a search DataFrame built earlier but not yet run may
+        still reference it, and an unpersisted broadcast re-ships on
+        use, while a destroyed one fails the job.  Probed-cell WARNING
+        semantics are unchanged: ``_auto_sign_budget`` still runs per
+        call on the probed set (memoized counts — no extra footer reads)
+        purely for its capped-cell / pre-manifest diagnostics.  A
+        pre-manifest raw layout broadcasts ``None`` — the kernel then
+        falls back to its closure floor, matching the per-query
+        fallback."""
         gen = (snap or {}).get("latest_gen")
-        cache = getattr(self, "_sign_budget_bc_cache", None)
-        if cache is None:
-            cache = self._sign_budget_bc_cache = {}
-        key = (gen, int(k))
-        bc = cache.get(key) if gen is not None else None
-        if bc is None:
-            counts = self._snapshot_counts(snap)
+
+        def make():
             floor = 8 * int(k)
             budgets = {
                 int(c): max(floor, min(int(n), AUTO_SIGN_BUDGET_CAP))
-                for c, n in counts.items()
+                for c, n in self._snapshot_counts(snap).items()
             } or None
-            bc = self.spark.sparkContext.broadcast(budgets)
-            if gen is not None:
-                if len(cache) > 16:
-                    for old in cache.values():
-                        try:
-                            old.destroy()
-                        except Exception:
-                            pass
-                    cache.clear()
-                cache[key] = bc
+            return self.spark.sparkContext.broadcast(budgets)
+
+        bc = make() if gen is None else self._memo(
+            "_sign_budget_bc_cache", (gen, int(k)), make, 17,
+            release=Broadcast.unpersist,
+        )
         # per-call diagnostics on the PROBED cells (warnings only; the
         # returned driver-side dict is discarded)
         self._auto_sign_budget(k, snap, cells, tier)
         return bc
 
     def _bq_thr_broadcast(self, bq_dir: str):
-        """Memoized broadcast of a BQ sidecar's threshold vector, keyed
-        by sidecar dir (generation-specific path, so a regenerated
-        sidecar gets a fresh broadcast).  Same leak discipline as
+        """Memoized broadcast of a BQ sidecar's threshold vector — the one
+        place a search reads ``thresholds.json`` — keyed by sidecar dir
+        (generation-specific path, so a regenerated sidecar gets a fresh
+        broadcast).  Same leak and eviction discipline as
         ``_sign_budget_broadcast`` — the dim-length array is small, but
         per-search broadcasts still accumulate in a serving loop."""
-        cache = getattr(self, "_bq_thr_bc_cache", None)
-        if cache is None:
-            cache = self._bq_thr_bc_cache = {}
-        bc = cache.get(bq_dir)
-        if bc is None:
+        def make():
             with open(os.path.join(bq_dir, "thresholds.json")) as f:
-                thr = np.array(
-                    json.load(f)["thresholds"], dtype=np.float64
-                )
-            bc = self.spark.sparkContext.broadcast(thr)
-            if len(cache) > 16:
-                for old in cache.values():
-                    try:
-                        old.destroy()
-                    except Exception:
-                        pass
-                cache.clear()
-            cache[bq_dir] = bc
-        return bc
+                thr = np.array(json.load(f)["thresholds"], dtype=np.float64)
+            return self.spark.sparkContext.broadcast(thr)
+
+        return self._memo(
+            "_bq_thr_bc_cache", bq_dir, make, 17, release=Broadcast.unpersist
+        )
+
+    def _bq_stage(
+        self, plan, k: int, candidates_per_cell: int | None, exclude_ids,
+        predicate, tier: str,
+    ) -> tuple[DataFrame, dict[int, int] | None]:
+        """The BQ stage of the serving sign tiers — all of ``search_bq``
+        before its rescore, and stage 1 of ``search_cascade``: the probed
+        cells' packed sign codes (pre-cut exclude/predicate,
+        ``_sidecar_cells``) cross Arrow once, each cell slice scores all
+        of its probing queries in one GEMM (``_sign_cut``; the queries
+        are centered by the sidecar's thresholds, the exact rescore uses
+        the UNcentered ones), and each (cell slice of an Arrow batch,
+        query) keeps its top C.  C is the caller's uniform
+        ``candidates_per_cell``, else the per-cell auto budget
+        (``_auto_sign_budget``, finding 41; ``tier`` names the caller in
+        its warnings).  ``plan`` is the ``_probe_plan`` tuple.  Returns
+        the ``(qid, neighbor_id)`` survivors and the auto budget map
+        (None for an explicit C)."""
+        id_col = self.meta["id_col"]
+        qids, Q, snap, needed, cell_qidx = plan
+        C = int(candidates_per_cell) if candidates_per_cell else 8 * k
+        budget_map = (
+            self._auto_sign_budget(k, snap, needed, tier)
+            if candidates_per_cell is None
+            else None
+        )
+        bq_dir = self.ensure_bq(snapshot=snap)
+        bc_thr = self._bq_thr_broadcast(bq_dir)
+        bc = self._query_broadcast(qids, Q, cell_qidx)
+        cand_codes = self._sidecar_cells(
+            bq_dir, snap, needed, exclude_ids, predicate, cols=("code", "dim")
+        )
+
+        def bq_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            qids_, Q_, cq = bc.value
+            Qc_ = Q_ - bc_thr.value[None, :]
+            out = _Rows()
+            for pdf in batches:
+                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
+                codes = pdf["code"].to_numpy()
+                dims = pdf["dim"].to_numpy()
+                for cid, qidx, rows in _cell_slices(pdf, cq):
+                    sels = _sign_cut(
+                        codes[rows], int(dims[rows[0]]), Qc_[qidx],
+                        C if budget_map is None else budget_map.get(cid, C),
+                    )
+                    for qi, sel in zip(qidx, sels):
+                        out.add(qids_[qi], ids_all[rows][sel])
+            yield from out.emit()
+
+        cand = cand_codes.mapInPandas(
+            bq_cut, schema="qid long, neighbor_id long"
+        )
+        return cand, budget_map
 
     def search_bq(
         self,
@@ -3249,82 +3193,16 @@ class IVFIndex:
         per-cell budget.  ``predicate`` / ``exclude_ids`` /
         ``snapshot`` compose exactly as in ``search_sq8`` (pre-cut
         metadata semi-join / anti-join; generation-keyed sidecar)."""
-        id_col = self.meta["id_col"]
-        C = int(candidates_per_cell) if candidates_per_cell else 8 * k
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
             return self._empty_topk()
-        qids, Q, snap, needed, cell_qidx = plan
-        budget_map = (
-            self._auto_sign_budget(k, snap, needed, "search_bq")
-            if candidates_per_cell is None
-            else None
+        cand, _ = self._bq_stage(
+            plan, k, candidates_per_cell, exclude_ids, predicate, "search_bq"
         )
-        bq_dir = self.ensure_bq(snapshot=snap)
-        with open(os.path.join(bq_dir, "thresholds.json")) as f:
-            thr = np.array(json.load(f)["thresholds"], dtype=np.float64)
-        # each cell slice unpacks its bits once, scoring all its probing
-        # queries in one GEMM; cut unit per (cell slice of an Arrow
-        # batch, query), budget per cell.  The asymmetric score works in
-        # centered space: bits encode sign(v − t), so the scan side
-        # ranks by (q − t) · sign(v − t); the exact rescore uses the
-        # UNcentered queries.
-        bc = self.spark.sparkContext.broadcast(
-            (
-                qids.astype(np.int64),
-                Q.astype(np.float64) - thr[None, :],
-                cell_qidx,
-            )
-        )
-        cand_codes = self._sidecar_cells(
-            bq_dir, snap, needed, exclude_ids, predicate, cols=("code", "dim")
-        )
-
-        def approx_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # per (cell slice of an Arrow batch, query): the cut budget
-            # is the auto-derived per-cell population (finding 41) when
-            # the caller left candidates_per_cell unset, else the
-            # caller's uniform C
-            qids_, Qc_, cq = bc.value
-            out_q: list = []
-            out_id: list = []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    d = int(grp["dim"].iloc[0])
-                    raw = np.frombuffer(b"".join(grp["code"]), dtype=np.uint8)
-                    bits = np.unpackbits(raw.reshape(len(ids), -1), axis=1)[
-                        :, :d
-                    ]
-                    S = (2.0 * bits - 1.0) @ Qc_[qidx].T  # (n, |qidx|)
-                    cap_c = (
-                        C if budget_map is None
-                        else budget_map.get(int(cid), C)
-                    )
-                    keep = min(cap_c, len(ids))
-                    for j, qi in enumerate(qidx):
-                        sel = (
-                            np.argpartition(-S[:, j], keep - 1)[:keep]
-                            if len(ids) > keep
-                            else np.arange(len(ids))
-                        )
-                        out_q.append(
-                            np.full(len(sel), qids_[qi], dtype=np.int64)
-                        )
-                        out_id.append(ids[sel])
-            yield from _emit_pairs_once(out_q, out_id)
-
-        cand = cand_codes.mapInPandas(
-            approx_cut, schema="qid long, neighbor_id long"
-        )
+        qids, Q, snap, needed, _ = plan
         return self._exact_rescore(
-            cand, snap, needed, queries, qids, Q, qid_col, qvec_col, k,
-            round_output,
+            cand, snap, needed, k, round_output, queries, qids, Q, qid_col,
+            qvec_col,
         )
 
     def search_cascade(
@@ -3345,8 +3223,9 @@ class IVFIndex:
         bits → exact floats), composed from this index's existing
         sidecars:
 
-        1. **BQ stage** (1 bit/dim, 32× scan-byte cut): probed cells'
-           packed sign codes ranked by the asymmetric score; top
+        1. **BQ stage** (1 bit/dim, 32× scan-byte cut) — exactly
+           ``search_bq``'s stage (``_bq_stage``): probed cells' packed
+           sign codes ranked by the asymmetric score; top
            ``candidates_per_cell`` per (query, cell slice of an Arrow
            batch) survive — note the PER-BATCH semantics: a cell split
            across Arrow batches can keep more than C per (query, cell),
@@ -3394,71 +3273,11 @@ class IVFIndex:
         if plan is None:
             return self._empty_topk()
         qids, Q, snap, needed, cell_qidx = plan
-        budget_map = (
-            self._auto_sign_budget(k, snap, needed, "search_cascade")
-            if candidates_per_cell is None
-            else None
-        )
 
-        # ---- stage 1: BQ asymmetric top-C over the probed 1-bit codes
-        # (the search_bq kernel shape: codes cross Arrow once, each cell
-        # slice unpacks once and scores all its probing queries in one
-        # GEMM; cut unit per (cell slice of an Arrow batch, query),
-        # budget per cell).
-        bq_dir = self.ensure_bq(snapshot=snap)
-        with open(os.path.join(bq_dir, "thresholds.json")) as f:
-            thr = np.array(json.load(f)["thresholds"], dtype=np.float64)
-        bc_c = spark.sparkContext.broadcast(
-            (
-                qids.astype(np.int64),
-                Q.astype(np.float64) - thr[None, :],
-                cell_qidx,
-            )
-        )
-        cand_codes = self._sidecar_cells(
-            bq_dir, snap, needed, exclude_ids, predicate, cols=("code", "dim")
-        )
-
-        def bq_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # per (cell slice of an Arrow batch, query); budget = the
-            # auto-derived cell population (finding 41) unless the
-            # caller passed an explicit uniform candidates_per_cell
-            qids_, Qc_, cq = bc_c.value
-            out_q: list = []
-            out_id: list = []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    d = int(grp["dim"].iloc[0])
-                    raw = np.frombuffer(b"".join(grp["code"]), dtype=np.uint8)
-                    bits = np.unpackbits(raw.reshape(len(ids), -1), axis=1)[
-                        :, :d
-                    ]
-                    S = (2.0 * bits - 1.0) @ Qc_[qidx].T
-                    cap_c = (
-                        C if budget_map is None
-                        else budget_map.get(int(cid), C)
-                    )
-                    keep = min(cap_c, len(ids))
-                    for j, qi in enumerate(qidx):
-                        sel = (
-                            np.argpartition(-S[:, j], keep - 1)[:keep]
-                            if len(ids) > keep
-                            else np.arange(len(ids))
-                        )
-                        out_q.append(
-                            np.full(len(sel), qids_[qi], dtype=np.int64)
-                        )
-                        out_id.append(ids[sel])
-            yield from _emit_pairs_once(out_q, out_id)
-
-        cand1 = cand_codes.mapInPandas(
-            bq_cut, schema="qid long, neighbor_id long"
+        # ---- stage 1: search_bq's BQ stage over the probed 1-bit codes
+        cand1, budget_map = self._bq_stage(
+            plan, k, candidates_per_cell, exclude_ids, predicate,
+            "search_cascade",
         )
 
         # ---- stage 2: lossless SQ8 bound cut over stage-1 survivors only.
@@ -3518,24 +3337,18 @@ class IVFIndex:
 
         def sq_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qm = bc_q.value
-            out_q: list = []
-            out_id: list = []
+            out = _Rows()
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
                 for qid, grp in pdf.groupby("qid"):
-                    q = qm[int(qid)]
-                    ids = grp["neighbor_id"].to_numpy(dtype=np.int64)
                     keep = _sq_bound_mask(
                         grp["code"],
                         grp["lo"].to_numpy(dtype=np.float64),
                         grp["hi"].to_numpy(dtype=np.float64),
-                        q, dim, 8, k,
+                        qm[int(qid)], dim, 8, k,
                     )
-                    kept = ids[keep]
-                    out_q.append(np.full(len(kept), int(qid), dtype=np.int64))
-                    out_id.append(kept)
-            yield from _emit_pairs_once(out_q, out_id)
+                    ids = grp["neighbor_id"].to_numpy(dtype=np.int64)
+                    out.add(int(qid), ids[keep])
+            yield from out.emit()
 
         cand2 = cand2_codes.mapInPandas(
             sq_cut, schema="qid long, neighbor_id long"
@@ -3543,8 +3356,8 @@ class IVFIndex:
 
         # ---- stage 3: exact float rescore of the remaining handful
         return self._exact_rescore(
-            cand2, snap, needed, queries, qids, Q, qid_col, qvec_col, k,
-            round_output,
+            cand2, snap, needed, k, round_output, queries, qids, Q, qid_col,
+            qvec_col,
         )
 
     def ensure_graph(
@@ -4139,9 +3952,8 @@ class IVFIndex:
         # Cut group is (cell slice of an Arrow batch, query) — for the
         # lossless bound a still-lossless superset (exact rescore
         # unchanged); for top-C mode a per-cell-slice C.
-        Qs = Q.astype(np.float64) if R is None else Q.astype(np.float64) @ R
-        q_bc = spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Qs, cell_qidx)
+        q_bc = self._query_broadcast(
+            qids, Q if R is None else Q.astype(np.float64) @ R, cell_qidx
         )
         books_bc = spark.sparkContext.broadcast(books)
         cm = self.center_map(snap) if residual else None
@@ -4164,24 +3976,21 @@ class IVFIndex:
             m_, _, _ = B.shape
             qids_, Qs_, cq = q_bc.value
             CM = cm_bc.value if cm_bc is not None else None
-            out_q: list = []
-            out_i: list = []
+            out = _Rows()
+            cols = np.arange(m_)[None, :]
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    raw = np.frombuffer(b"".join(grp["code"]), dtype=np.uint8)
+                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
+                codes = pdf["code"].to_numpy()
+                resid_all = pdf["resid"].to_numpy(dtype=np.float64)
+                for cid, qidx, rows in _cell_slices(pdf, cq):
+                    ids = ids_all[rows]
+                    raw = np.frombuffer(b"".join(codes[rows]), dtype=np.uint8)
                     Cc = raw.reshape(len(ids), m_)
-                    resid = grp["resid"].to_numpy(dtype=np.float64)
-                    cols = np.arange(m_)[None, :]
+                    resid = resid_all[rows]
                     for qi in qidx:
                         q = Qs_[qi]
                         if CM is not None:
-                            q = q - CM[int(cid)]
+                            q = q - CM[cid]
                         lut = _adc_lut(q, B)
                         # ADC: d̂ = Σ_j lut[j, code_j] — m lookups/vector
                         d_adc = lut[cols, Cc].sum(axis=1)
@@ -4194,24 +4003,15 @@ class IVFIndex:
                             kept = ids[part]
                         else:
                             kept = ids[bound_cut_mask(d_adc, resid, k)]
-                        out_q.append(
-                            np.full(len(kept), qids_[qi], dtype=np.int64)
-                        )
-                        out_i.append(kept)
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_i),
-                    }
-                )
+                        out.add(qids_[qi], kept)
+            yield from out.emit()
 
         cand = cand_codes.mapInPandas(
             adc_cut, schema="qid long, neighbor_id long"
         )
         return self._exact_rescore(
-            cand, snap, needed, queries, qids, Q, qid_col, qvec_col, k,
-            round_output,
+            cand, snap, needed, k, round_output, queries, qids, Q, qid_col,
+            qvec_col,
         )
 
     def radius_search(
@@ -4246,83 +4046,36 @@ class IVFIndex:
 
         # pin one (manifest, centroids) view for radii, probes, and scan
         snap = self._pin(None)
-        cids, C = self._centroids_for(snap)
-        # per-cell radii: one column-pruned scan of the index's stats
-        # column, MEMOIZED per generation (r17 — the _snapshot_counts
-        # discipline): cells are immutable per generation, so repeated
-        # radius searches against one snapshot pay the scan once
-        radii_cache = getattr(self, "_radii_cache", None)
-        if radii_cache is None:
-            radii_cache = self._radii_cache = {}
-        gen_key = self._sidecar_gen(snap)
-        radii = radii_cache.get(gen_key)
-        if radii is None:
-            radii = {
-                int(r["centroid_id"]): float(r["r_sq"])
-                for r in self.vectors(snapshot=snap)
-                .groupBy("centroid_id")
-                .agg(F.max("dist_to_centroid").alias("r_sq"))
-                .collect()
-            }
-            radii_cache[gen_key] = radii
+        cids, C, R = self._cell_radii(snap)
         Dqc = l2_sq_matrix(Q.astype(np.float64), C)  # (|Q|, C)
         r = float(np.sqrt(radius_sq))
-        pairs = [
-            (int(q), int(cid))
-            for qi, q in enumerate(qids)
-            for ci, cid in enumerate(cids)
-            if np.sqrt(Dqc[qi, ci]) <= r + np.sqrt(radii.get(int(cid), 0.0))
-        ]
+        qi, ci = np.nonzero(np.sqrt(Dqc) <= r + R[None, :])
+        pairs = [(int(qids[a]), int(cids[b])) for a, b in zip(qi, ci)]
         if not pairs:
             return spark.createDataFrame([], "qid long, neighbor_id long, dist_sq double")
         needed = sorted({c for _, c in pairs})
         # the kernel keeps the per-query matrix-vector distance form:
         # these distances ARE the output values
-        bc = spark.sparkContext.broadcast(
-            (
-                qids.astype(np.int64),
-                Q.astype(np.float64),
-                self._cell_map(qids, pairs),
-            )
-        )
+        bc = self._query_broadcast(qids, Q, self._cell_map(qids, pairs))
         cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
         def in_radius(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qids_, Q_, cq = bc.value
-            out_q: list = []
-            out_i: list = []
-            out_d: list = []
+            out = _Rows("dist")
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    V = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
+                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
+                vecs = pdf[vec_col].to_numpy()
+                for _, qidx, rows in _cell_slices(pdf, cq):
+                    ids = ids_all[rows]
+                    V = np.stack(vecs[rows]).astype(np.float64)
                     VV = (V * V).sum(axis=1)
                     for qi in qidx:
                         q = Q_[qi]
                         d = VV - 2.0 * (V @ q) + float(q @ q)
                         np.maximum(d, 0.0, out=d)
                         hit = d <= radius_sq
-                        if hit.any():
-                            out_q.append(
-                                np.full(
-                                    int(hit.sum()), qids_[qi], dtype=np.int64
-                                )
-                            )
-                            out_i.append(ids[hit])
-                            out_d.append(d[hit])
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_i),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
+                        out.add(qids_[qi], ids[hit], d[hit])
+            yield from out.emit()
 
         out = cand.mapInPandas(
             in_radius, schema="qid long, neighbor_id long, dist double"
@@ -4347,134 +4100,59 @@ class IVFIndex:
         path's coverage of the serving surface.  Same zero-recall-loss
         triangle-inequality cell prune as ``radius_search`` (cell probed
         iff sqrt(d(q,c)) <= r + R_c), but the prune runs INSIDE the
-        query table's partitions: the centroid matrix AND the per-cell
-        radii ship in the UDF closure (both O(cells) — a few MB at 4096
-        cells), so queries never visit the driver.  Probe hits
-        shuffle-join the float cells on ``centroid_id`` (scan pruned to
-        the probed-cell set — one bounded distinct-collect, ≤ n_cells
-        ints, same class as ``_probed_cells_distributed``), and the
-        per-(query, batch) kernel emits exactly the within-radius pairs.
+        query table's partitions (``_triangle_probes``: the centroid
+        matrix AND the per-cell radii ride a broadcast, both O(cells) —
+        a few MB at 4096 cells), so queries never visit the driver.
+        Probe hits meet the float cells in a per-cell cogroup (scan
+        pruned to the probed-cell set — one bounded distinct-collect,
+        ≤ n_cells ints, same class as ``_probed_cells_distributed``),
+        and the per-cell kernel emits exactly the within-radius pairs.
         Bit-identical to ``radius_search`` / the brute-force oracle.
 
         ``exclude_ids`` anti-joins the index side pre-scan (merged
         engine contract); ``predicate`` narrows the scan losslessly
         (the radius is absolute — no k-th-bound interplay)."""
-        spark = self.spark
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         snap = self._read_manifest()
-        cids, C = self._centroids_for(snap)
-        radii = {
-            int(r["centroid_id"]): float(r["r_sq"])
-            for r in self.vectors(snapshot=snap)
-            .groupBy("centroid_id")
-            .agg(F.max("dist_to_centroid").alias("r_sq"))
-            .collect()
-        }
-        R_cell = np.sqrt(
-            np.array([radii.get(int(c), 0.0) for c in cids], dtype=np.float64)
-        )
-        r = float(np.sqrt(radius_sq))
-        bc = spark.sparkContext.broadcast((cids, C, R_cell, r))
-
-        def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cids_, C_, Rc_, r_ = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                Q = np.stack(pdf[qvec_col].to_numpy()).astype(np.float64)
-                D = l2_sq_matrix(Q, C_)
-                hit = np.sqrt(D) <= (r_ + Rc_)[None, :]
-                qi, ci = np.nonzero(hit)
-                if len(qi) == 0:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "qid": pdf[qid_col].to_numpy(dtype=np.int64)[qi],
-                        "query": pdf[qvec_col].to_numpy()[qi],
-                        "centroid_id": cids_[ci].astype(np.int32),
-                    }
-                )
-
-        probes = queries.select(qid_col, qvec_col).mapInPandas(
-            probe, schema="qid long, query array<float>, centroid_id int"
+        probes = self._triangle_probes(
+            queries.select(
+                qid_col, qvec_col, F.lit(float(np.sqrt(radius_sq))).alias("_r")
+            ),
+            snap, qid_col, qvec_col,
         )
         needed = sorted(
             int(x[0])
             for x in probes.select("centroid_id").distinct().collect()
         )
         if not needed:
-            out0 = spark.createDataFrame(
+            return self.spark.createDataFrame(
                 [], "qid long, neighbor_id long, dist_sq double"
             )
-            return out0
         base = self._float_cells(snap, needed, exclude_ids, predicate)
-        # r18 (finding 48's shape applied to the radius sibling): the
-        # probes⋈cells join duplicated every float row once per probing
-        # query before the Python boundary; the scan is now a per-cell
-        # COGROUP — cells shuffle once + probe stubs, one stack per
-        # cell.  The distance arithmetic stays the PER-QUERY
-        # matrix-vector expression (these distances ARE the output
-        # values, rounded at 4 decimals — the GEMM form could differ in
-        # the last ulp), and each row's dot product is row-independent,
-        # so the emitted values are byte-identical to the join shape.
-        qside = probes.select(
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            "qid",
-            "query",
-        )
-        vside = base.select(
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            F.col(id_col).alias("nid"),
-            F.col(vec_col).alias("nvec"),
-        )
-
-        def cell_radius(qpdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "qid": pd.Series(dtype="int64"),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                    "dist": pd.Series(dtype="float64"),
-                }
-            )
-            if len(qpdf) == 0 or len(vpdf) == 0:
-                return empty
-            qids_ = qpdf["qid"].to_numpy(dtype=np.int64)
+        # r18 (finding 48's shape applied to the radius sibling): the scan
+        # is a per-cell COGROUP (``_cell_cogroup``) — cells shuffle once
+        # + probe stubs, one stack per cell.  The distance arithmetic
+        # stays the PER-QUERY matrix-vector expression (these distances
+        # ARE the output values, rounded at 4 decimals — the GEMM form
+        # could differ in the last ulp), and each row's dot product is
+        # row-independent, so the emitted values are byte-identical to
+        # the join shape.
+        def cell_radius(cid, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
             qv = qpdf["query"].to_numpy()
             ids = vpdf["nid"].to_numpy(dtype=np.int64)
             V = np.stack(vpdf["nvec"].to_numpy()).astype(np.float64)
             VV = (V * V).sum(axis=1)
-            out_q: list = []
-            out_i: list = []
-            out_d: list = []
-            for j in range(len(qids_)):
+            out = _Rows("dist")
+            for j, qid in enumerate(qpdf["qid"].to_numpy(dtype=np.int64)):
                 q = np.asarray(qv[j], dtype=np.float32).astype(np.float64)
                 d = VV - 2.0 * (V @ q) + float(q @ q)
                 np.maximum(d, 0.0, out=d)
                 hit = d <= radius_sq
-                if hit.any():
-                    out_q.append(
-                        np.full(int(hit.sum()), qids_[j], dtype=np.int64)
-                    )
-                    out_i.append(ids[hit])
-                    out_d.append(d[hit])
-            if not out_i:
-                return empty
-            return pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_i),
-                    "dist": np.concatenate(out_d),
-                }
-            )
+                out.add(qid, ids[hit], d[hit])
+            return out.frame()
 
-        out = (
-            qside.groupBy("centroid_id")
-            .cogroup(vside.groupBy("centroid_id"))
-            .applyInPandas(
-                lambda ql, vl: cell_radius(ql, vl),
-                schema="qid long, neighbor_id long, dist double",
-            )
+        out = self._cell_cogroup(
+            probes, base, (F.col(self.meta["vec_col"]).alias("nvec"),),
+            cell_radius, "qid long, neighbor_id long, dist double",
         )
         d = (
             F.round("dist", 4) if round_output else F.col("dist").cast("double")
