@@ -26,17 +26,6 @@ def test_bq_encode_roundtrip_bits(spark, embeddings):
         assert (bits == (v > 0.0)).all()
 
 
-def test_hamming_pairs_matches_numpy():
-    rng = np.random.default_rng(3)
-    A = rng.integers(0, 256, (20, 8), dtype=np.uint8)
-    B = rng.integers(0, 256, (15, 8), dtype=np.uint8)
-    got = bq_ops.hamming_pairs(A, B)
-    bits_a = np.unpackbits(A, axis=1)
-    bits_b = np.unpackbits(B, axis=1)
-    want = (bits_a[:, None, :] != bits_b[None, :, :]).sum(axis=2)
-    assert (got == want).all()
-
-
 def test_bq_rescore_exhaustive_is_exact(spark, embeddings):
     """Unbounded C keeps every candidate, so the float rescore is
     exhaustive and the output is identical to exact kNN — the lossless

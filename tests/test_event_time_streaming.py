@@ -123,3 +123,47 @@ def test_streaming_dedup_drops_redelivered_rows(spark, sf_dir, tmp_path):
     deduped = spark.read.parquet(out_dir)
     assert deduped.count() == n_distinct
     assert deduped.select("event_id").distinct().count() == n_distinct
+
+
+def test_overlapping_drains_restore_shuffle_partitions():
+    """Two drains that overlap must leave spark.sql.shuffle.partitions at
+    the session's own value.  The interleaving that leaked the pin: A
+    saves 200 and pins 8, B saves 8, A restores 200, B restores 8.  B
+    waits inside its drain until A has exited, and A gives B one second
+    to enter; with the save-to-restore lock B cannot enter before A
+    exits, so it saves 200 and restores 200.  Spark-free: a fake conf."""
+    import threading
+    from types import SimpleNamespace
+
+    class Conf:
+        def __init__(self):
+            self.v = {"spark.sql.shuffle.partitions": "200"}
+
+        def get(self, key, default=None):
+            return self.v.get(key, default)
+
+        def set(self, key, value):
+            self.v[key] = value
+
+    spark = SimpleNamespace(conf=Conf())
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+
+    def drain_a():
+        with et._pinned_state_partitions(spark, 8):
+            a_in.set()
+            b_in.wait(timeout=1.0)
+        a_out.set()
+
+    def drain_b():
+        a_in.wait(timeout=10)
+        with et._pinned_state_partitions(spark, 8):
+            b_in.set()
+            a_out.wait(timeout=10)
+
+    threads = [threading.Thread(target=f) for f in (drain_a, drain_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+        assert not t.is_alive()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "200"

@@ -1412,15 +1412,18 @@ def test_pca_staleness_monitor_and_retrain(spark, tmp_path):
 def test_pca_carry_forward_recovers_from_donor_missing_rotation(
     spark, tmp_path
 ):
-    """r13 regression (ADVICE): a pcarot donor can carry _SUCCESS but no
-    rotation.npy (the parquet write publishes _SUCCESS before np.save
-    runs, and _sidecar_carry_forward vets donors on _SUCCESS alone — a
-    crash in that window poisons the donor permanently).  The r12
-    rewrite of ensure_pca_rot dropped the recovery: with build_cells
-    set but no donor rotation, neither branch assigned R and
-    broadcast(R) raised UnboundLocalError on EVERY retry — a crash
-    loop.  The fix mirrors ensure_bq's missing-thresholds rule: discard
-    the donor and retrain from scratch."""
+    """r13 regression (ADVICE), extended to every sidecar with state: a
+    donor can carry _SUCCESS but not its state file (thresholds.json,
+    codebooks.npy, rotation.npy).  Before the shared sidecar lifecycle
+    the parquet write published _SUCCESS before the state file, donors
+    were vetted on _SUCCESS alone, and the r12 ensure_pca_rot crash-
+    looped on such a donor (UnboundLocalError on every retry).  A dir
+    is now ready only with _SUCCESS AND its state files, so the
+    poisoned dir never donates: after the compaction each tier rebuilds
+    in full (no part file copied from the donor) with fresh state, and
+    serves the float tier's hash at full probe."""
+    import glob
+    import json as _json
     import os
 
     import pandas as pd
@@ -1437,14 +1440,42 @@ def test_pca_carry_forward_recovers_from_donor_missing_rotation(
     )
     eng = VectorEngine.create(df_a, str(tmp_path / "eng"), n_centroids=6)
     idx = eng.index
-    rot0 = idx.ensure_pca_rot()
-    rpath0 = os.path.join(rot0, "rotation.npy")
-    assert os.path.exists(rpath0)
-    # simulate the crash window: donor dir keeps _SUCCESS, loses the npy
-    os.remove(rpath0)
-    assert os.path.exists(os.path.join(rot0, "_SUCCESS"))
+    nc = idx.meta["n_centroids"]
+    tiers = {  # tier: (build, state file, full-probe search)
+        "bq": (
+            idx.ensure_bq,
+            "thresholds.json",
+            lambda q: idx.search_bq(
+                q, k=5, nprobe=nc, candidates_per_cell=10**9
+            ),
+        ),
+        "pq": (
+            lambda: os.path.dirname(idx.ensure_pq(m=8)[0]),
+            "codebooks.npy",
+            lambda q: idx.search_pq(q, k=5, nprobe=nc, m=8),
+        ),
+        "pcarot": (
+            idx.ensure_pca_rot,
+            "rotation.npy",
+            lambda q: idx.search_prefix_pca(q, k=5, nprobe=nc, prefix_dims=8),
+        ),
+    }
 
-    # advance the generation so the poisoned dir becomes the donor
+    def part_files(root: str) -> set[str]:
+        return {
+            os.path.basename(f)
+            for f in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+        }
+
+    gen0 = {}
+    for name, (build, state, _) in tiers.items():
+        root = build()
+        gen0[name] = (root, part_files(root))
+        assert part_files(root), name
+        # simulate the crash window: the dir keeps _SUCCESS, loses state
+        os.remove(os.path.join(root, state))
+
+    # advance the generation so the poisoned dirs become donors
     B = (rng.normal(0, 1, (200, d)) + 5.0).astype(np.float32)
     df_b = spark.createDataFrame(
         pd.DataFrame(
@@ -1457,32 +1488,25 @@ def test_pca_carry_forward_recovers_from_donor_missing_rotation(
     eng.insert(df_b)
     assert eng.compact() > 0
 
-    # pre-fix: UnboundLocalError here, and on every retry
-    rot1 = idx.ensure_pca_rot()
-    assert rot1 != rot0
-    R1 = np.load(os.path.join(rot1, "rotation.npy"))
-    assert R1.shape == (d, d)
-    # the from-scratch retrain records a fresh baseline
-    import json as _json
-
-    with open(os.path.join(rot1, "energy.json")) as f:
-        e = _json.load(f)
-    assert e["energy_ratio"] == 1.0
-
-    # exactness through the tier after recovery
     q = (np.arange(6, dtype=np.int64), np.vstack([A[:3], B[:3]]))
-    nc = idx.meta["n_centroids"]
     exact = [
         tuple(r)
         for r in idx.search(q, k=5, nprobe=nc).orderBy("qid", "rank").collect()
     ]
-    got = [
-        tuple(r)
-        for r in idx.search_prefix_pca(q, k=5, nprobe=nc, prefix_dims=8)
-        .orderBy("qid", "rank")
-        .collect()
-    ]
-    assert got == exact
+    for name, (build, state, search) in tiers.items():
+        root = build()  # pre-fix (pcarot): UnboundLocalError, every retry
+        root0, files0 = gen0[name]
+        assert root != root0, name
+        assert os.path.exists(os.path.join(root, state)), name
+        # full build: every partition freshly written, none carried
+        assert part_files(root) and not part_files(root) & files0, name
+        got = [tuple(r) for r in search(q).orderBy("qid", "rank").collect()]
+        assert got == exact, name
+    # the from-scratch pcarot retrain records a fresh baseline
+    with open(os.path.join(idx.ensure_pca_rot(), "energy.json")) as f:
+        assert _json.load(f)["energy_ratio"] == 1.0
+    R1 = np.load(os.path.join(idx.ensure_pca_rot(), "rotation.npy"))
+    assert R1.shape == (d, d)
 
 
 def test_metric_distributed_quantized_stage_identical(spark, sf_dir):

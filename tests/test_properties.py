@@ -138,30 +138,6 @@ def test_sessionize_matches_python_fold(spark, events):
     assert got == want
 
 
-@given(
-    rows=st.lists(
-        st.one_of(
-            st.lists(coord, min_size=4, max_size=4),  # valid dim
-            st.lists(coord, min_size=1, max_size=3),  # wrong dim
-            st.none(),
-        ),
-        min_size=1,
-        max_size=15,
-    )
-)
-@SET
-def test_validate_vectors_partitions_rows(spark, rows):
-    df = spark.createDataFrame(
-        [(i, r if r is None else [float(x) for x in r]) for i, r in enumerate(rows)],
-        "vec_id long, embedding array<float>",
-    )
-    valid, rejected = knn_ops.validate_vectors(df, dim=4)
-    n_valid = sum(1 for r in rows if r is not None and len(r) == 4)
-    assert valid.count() == n_valid
-    assert rejected.count() == len(rows) - n_valid
-    assert valid.filter(F.size("embedding") != 4).count() == 0
-
-
 def _uf_components(n_nodes: list[int], edges: list[tuple[int, int]]) -> dict:
     """Union-find reference: node -> min id of its component."""
     parent = {n: n for n in n_nodes}

@@ -33,28 +33,32 @@ def _rows(df, *order):
 # ---------------------------------------------------------------------------
 
 
-def test_bm25_matches_numpy_reference(spark):
+def test_bm25_matches_numpy_reference(spark, monkeypatch):
     """Engine BM25 equals a from-first-principles computation on a tiny
-    corpus with known tf/df/dl."""
+    corpus with known tf/df/dl — through both term-set branches of
+    ``_matched_tokens`` (Column ``isin`` and, with BM25_SQL_IN_TERMS at
+    0, the parsed SQL ``IN`` over ``SQL_TOKENS``), and with a document
+    whose leading, trailing and doubled spaces the tokenizer must
+    drop."""
     corpus = [
         (0, "cat dog cat"),
         (1, "cat fish"),
         (2, "dog dog dog dog"),
         (3, "bird"),
+        (4, "  cat  dog "),
     ]
     docs = spark.createDataFrame(corpus, "doc_id long, text string")
     q = spark.createDataFrame([(0, "cat"), (1, "dog"), (1, "cat")],
                               "query_id long, term string")
-    out = {
-        (r.query_id, r.doc_id): (r.rank, r.bm25)
-        for r in retrieval.bm25_topk(docs, q, k=10).collect()
-    }
 
     k1, b = retrieval.BM25_K1, retrieval.BM25_B
-    dls = {0: 3, 1: 2, 2: 4, 3: 1}
-    n_docs, avgdl = 4, (3 + 2 + 4 + 1) / 4.0
-    tfs = {("cat", 0): 2, ("cat", 1): 1, ("dog", 0): 1, ("dog", 2): 4}
-    dfs = {"cat": 2, "dog": 2}
+    dls = {0: 3, 1: 2, 2: 4, 3: 1, 4: 2}
+    n_docs, avgdl = 5, (3 + 2 + 4 + 1 + 2) / 5.0
+    tfs = {
+        ("cat", 0): 2, ("cat", 1): 1, ("cat", 4): 1,
+        ("dog", 0): 1, ("dog", 2): 4, ("dog", 4): 1,
+    }
+    dfs = {"cat": 3, "dog": 3}
 
     def score(terms, d):
         s = 0.0
@@ -76,7 +80,13 @@ def test_bm25_matches_numpy_reference(spark):
         )
         for rank, (s, d) in enumerate(scored, 1):
             expect[(qid, d)] = (rank, s)
-    assert out == expect
+    for sql_in_terms in (retrieval.BM25_SQL_IN_TERMS, 0):
+        monkeypatch.setattr(retrieval, "BM25_SQL_IN_TERMS", sql_in_terms)
+        out = {
+            (r.query_id, r.doc_id): (r.rank, r.bm25)
+            for r in retrieval.bm25_topk(docs, q, k=10).collect()
+        }
+        assert out == expect, sql_in_terms
 
 
 def test_bm25_only_matching_docs_and_contiguous_ranks(spark, documents):

@@ -25,6 +25,11 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.trim(text), " "), lambda x: x != "")
 
 
+# ``tokens`` as Spark-SQL text ({t} = text expression), for expressions
+# parsed in one call instead of built Column by Column
+SQL_TOKENS = "filter(split(trim({t}), ' '), x -> x != '')"
+
+
 def normalized(text: Column) -> Column:
     return F.lower(F.trim(F.regexp_replace(text, r"\s+", " ")))
 

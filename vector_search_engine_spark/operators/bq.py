@@ -119,19 +119,6 @@ def bq_encode(
     )
 
 
-def hamming_pairs(codes_a: np.ndarray, codes_b: np.ndarray) -> np.ndarray:
-    """All-pairs Hamming distance between two packed uint8 code matrices
-    ((na, B) x (nb, B) -> (na, nb)) via the 256-entry popcount table —
-    the symmetric-scoring kernel (diagnostics / code-only dedup)."""
-    pop = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(
-        axis=1
-    )
-    out = np.zeros((len(codes_a), len(codes_b)), dtype=np.int32)
-    for j in range(len(codes_b)):
-        out[:, j] = pop[np.bitwise_xor(codes_a, codes_b[j][None, :])].sum(axis=1)
-    return out
-
-
 def knn_bq_rescore(
     vectors: DataFrame,
     queries: DataFrame,

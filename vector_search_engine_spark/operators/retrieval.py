@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vector_search_engine_spark.functions.hashing import salted_md5_long
-from vector_search_engine_spark.functions.text import DD_TOKENS, tokens
+from vector_search_engine_spark.functions.text import DD_TOKENS, SQL_TOKENS, tokens
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -66,8 +66,9 @@ BM25_SQL_IN_TERMS = 512
 
 def _matched_tokens(toks, qterms: list[str]):
     """``filter(toks, t -> t IN qterms)`` built the cheap way for large
-    term sets (see BM25_SQL_IN_TERMS).  The parsed branch inlines the
-    SAME tokenizer expression (functions.text.tokens) as SQL text."""
+    term sets (see BM25_SQL_IN_TERMS).  The parsed branch tokenizes the
+    ``text`` column with ``functions.text.SQL_TOKENS``, the SQL twin of
+    ``tokens``."""
     if len(qterms) <= BM25_SQL_IN_TERMS:
         return F.filter(toks, lambda t: t.isin(*qterms))
 
@@ -76,8 +77,7 @@ def _matched_tokens(toks, qterms: list[str]):
 
     in_list = ",".join(esc(t) for t in qterms)
     return F.expr(
-        "filter(filter(split(trim(text), ' '), x -> x != ''), "
-        f"t -> t IN ({in_list}))"
+        f"filter({SQL_TOKENS.format(t='text')}, t -> t IN ({in_list}))"
     )
 
 # Fixture query set (query_id, terms) — mirrored verbatim in the oracle

@@ -20,7 +20,6 @@ Scale notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 DOCUMENTS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -53,19 +52,4 @@ def scan_jsonl(
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", corrupt_col)
         .json(path)
-    )
-
-
-def quarantine_stats(scanned: DataFrame, corrupt_col: str = "_corrupt_record") -> DataFrame:
-    """Accounting for a scanned JSONL corpus: clean vs quarantined lines.
-
-    The parsed frame is cached first — Spark disallows queries that
-    reference ONLY the corrupt-record column of a raw JSON scan
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN); in a real
-    pipeline the parsed result is persisted before accounting anyway."""
-    scanned = scanned.cache()
-    return scanned.agg(
-        F.count("*").cast("long").alias("n_lines"),
-        F.count(corrupt_col).cast("long").alias("n_corrupt"),
-        (F.count("*") - F.count(corrupt_col)).cast("long").alias("n_clean"),
     )

@@ -435,51 +435,22 @@ class VectorEngine:
         the fixed 8·k default collapsed recall on clustered corpora);
         an explicit value is the uniform per-cell serving knob.
         The delta side always scans exact floats, deltas are small."""
-        id_col = self.index.meta["id_col"]
-        vec_col = self.index.meta["vec_col"]
-        # pin the delta snapshot ONCE: the exclude anti-join and the delta
-        # scan below must see the same seq set even if a concurrent insert
-        # or compaction advances the delta mid-query
-        delta_latest = self.delta_latest(seqs=self._live_seqs())
         # shadowed ids exclude via anti-join — the delta can be arbitrarily
         # large under sustained ingest; ids never visit the driver.  Each
         # tier drops them where its cut stays exact: pre-cut for the
         # lossless tiers and the sign tiers' stage 1, after the walk for
         # graph (removing nodes pre-walk would disconnect the graph).
-        indexed_part = _run_tier(
-            self.index, _SERVING_TIERS, tier, queries, candidates_per_cell,
-            k=k,
-            nprobe=nprobe,
-            exclude_ids=delta_latest.select(id_col),
-            predicate=predicate,
-            round_output=False,
-        )
-        # tombstones (NULL vector = deleted id) stay in delta_latest so
-        # their ids keep shadowing the indexed side via the anti-join
-        # above, but they carry nothing to scan
-        delta_live = delta_latest.filter(F.col(vec_col).isNotNull())
-        if predicate is not None:
-            delta_live = delta_live.filter(predicate)
-        delta_part = knn_exact(
-            delta_live,
-            queries,
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            round_output=False,
-        )
-        merged = indexed_part.select("qid", "neighbor_id", F.col("dist_sq")).unionByName(
-            delta_part.select("qid", "neighbor_id", F.col("dist_sq"))
-        )
-        # ranks were per-source; recompute the global top-k on RAW float64
-        # dists (both parts pass round_output=False) — ranking on rounded
-        # values would break a 4-decimal tie between sources by id instead
-        # of by the true distance, diverging from the exact oracle.  The
-        # single output rounding happens here.
-        return _finalize_topk(
-            merged.select("qid", "neighbor_id", F.col("dist_sq").alias("dist")),
+        return self._merged(
+            lambda shadowed: _run_tier(
+                self.index, _SERVING_TIERS, tier, queries, candidates_per_cell,
+                k=k, nprobe=nprobe, exclude_ids=shadowed, predicate=predicate,
+                round_output=False,
+            ),
+            lambda live, **cols: knn_exact(
+                live, queries, k=k, round_output=False, **cols
+            ),
+            predicate,
             k,
-            "l2_sq",
         )
 
     def search_filtered(
@@ -500,32 +471,16 @@ class VectorEngine:
         planner carried into the streaming contract."""
         if predicate is None:
             raise ValueError("search_filtered requires a predicate")
-        id_col = self.index.meta["id_col"]
-        vec_col = self.index.meta["vec_col"]
-        delta_latest = self.delta_latest(seqs=self._live_seqs())
-        indexed_part = self.index.search_filtered(
-            queries,
-            k=k,
-            nprobe=nprobe,
-            predicate=predicate,
-            strategy=strategy,
-            exclude_ids=delta_latest.select(id_col),
-            round_output=False,
-        )
-        delta_live = delta_latest.filter(F.col(vec_col).isNotNull()).filter(
-            predicate
-        )
-        delta_part = knn_exact(
-            delta_live, queries, k=k, id_col=id_col, vec_col=vec_col,
-            round_output=False,
-        )
-        merged = indexed_part.select(
-            "qid", "neighbor_id", F.col("dist_sq")
-        ).unionByName(delta_part.select("qid", "neighbor_id", F.col("dist_sq")))
-        return _finalize_topk(
-            merged.select("qid", "neighbor_id", F.col("dist_sq").alias("dist")),
+        return self._merged(
+            lambda shadowed: self.index.search_filtered(
+                queries, k=k, nprobe=nprobe, predicate=predicate,
+                strategy=strategy, exclude_ids=shadowed, round_output=False,
+            ),
+            lambda live, **cols: knn_exact(
+                live, queries, k=k, round_output=False, **cols
+            ),
+            predicate,
             k,
-            "l2_sq",
         )
 
     def search_distributed(
@@ -571,35 +526,18 @@ class VectorEngine:
         (float tier only, r14): the indexed side's physical scan shape
         — "join" (serving-sized |Q|) or "cogroup" (per-cell GEMM, the
         dataset-sized-|Q| shape; see IVFIndex.search_distributed)."""
-        id_col = self.index.meta["id_col"]
-        vec_col = self.index.meta["vec_col"]
-        # pin the delta snapshot ONCE (same discipline as search):
-        # exclusion and the delta scan must see identical seq sets
-        delta_latest = self.delta_latest(seqs=self._live_seqs())
-        indexed_part = _run_tier(
-            self.index, _DISTRIBUTED_TIERS, tier, queries,
-            candidates_per_cell, scan,
-            k=k, nprobe=nprobe, exclude_ids=delta_latest.select(id_col),
-            predicate=predicate, round_output=False,
-        )
-        delta_live = delta_latest.filter(F.col(vec_col).isNotNull())
-        if predicate is not None:
-            delta_live = delta_live.filter(predicate)
-        delta_part = knn_exact_distributed(
-            delta_live, queries, k=k, id_col=id_col, vec_col=vec_col,
-            round_output=False,
-        )
-        merged = indexed_part.select(
-            "qid", "neighbor_id", F.col("dist_sq")
-        ).unionByName(
-            delta_part.select("qid", "neighbor_id", F.col("dist_sq"))
-        )
-        return _finalize_topk(
-            merged.select(
-                "qid", "neighbor_id", F.col("dist_sq").alias("dist")
+        return self._merged(
+            lambda shadowed: _run_tier(
+                self.index, _DISTRIBUTED_TIERS, tier, queries,
+                candidates_per_cell, scan,
+                k=k, nprobe=nprobe, exclude_ids=shadowed,
+                predicate=predicate, round_output=False,
             ),
+            lambda live, **cols: knn_exact_distributed(
+                live, queries, k=k, round_output=False, **cols
+            ),
+            predicate,
             k,
-            "l2_sq",
         )
 
     def radius_search(
@@ -614,26 +552,15 @@ class VectorEngine:
         exists here, so the merge is a plain union — id sets are
         disjoint by the exclusion, no dedup pass; results round once at
         output like every user-facing distance."""
-        id_col = self.index.meta["id_col"]
-        vec_col = self.index.meta["vec_col"]
-        delta_latest = self.delta_latest(seqs=self._live_seqs())
-        indexed_part = self.index.radius_search(
-            queries,
-            radius_sq,
-            exclude_ids=delta_latest.select(id_col),
-            predicate=predicate,
-            round_output=False,
-        )
-        delta_live = delta_latest.filter(F.col(vec_col).isNotNull())
-        if predicate is not None:
-            delta_live = delta_live.filter(predicate)
-        delta_part = radius_search_exact(
-            delta_live, queries, radius_sq, id_col=id_col, vec_col=vec_col,
-            round_output=False,
-        )
-        merged = indexed_part.unionByName(delta_part)
-        return merged.select(
-            "qid", "neighbor_id", F.round("dist_sq", 4).alias("dist_sq")
+        return self._merged(
+            lambda shadowed: self.index.radius_search(
+                queries, radius_sq, exclude_ids=shadowed,
+                predicate=predicate, round_output=False,
+            ),
+            lambda live, **cols: radius_search_exact(
+                live, queries, radius_sq, round_output=False, **cols
+            ),
+            predicate,
         )
 
     def radius_search_distributed(
@@ -652,39 +579,68 @@ class VectorEngine:
         ranking); one rounding at output."""
         from vector_search_engine_spark.functions.vector import l2_sq
 
-        id_col = self.index.meta["id_col"]
-        vec_col = self.index.meta["vec_col"]
-        delta_latest = self.delta_latest(seqs=self._live_seqs())
-        indexed_part = self.index.radius_search_distributed(
-            queries,
-            radius_sq,
-            exclude_ids=delta_latest.select(id_col),
-            predicate=predicate,
-            round_output=False,
-        )
-        delta_live = delta_latest.filter(F.col(vec_col).isNotNull())
-        if predicate is not None:
-            delta_live = delta_live.filter(predicate)
-        delta_part = (
-            queries.select("qid", "query")
-            .crossJoin(
-                F.broadcast(
-                    delta_live.select(
-                        F.col(id_col).alias("neighbor_id"),
-                        F.col(vec_col).alias("_v"),
+        return self._merged(
+            lambda shadowed: self.index.radius_search_distributed(
+                queries, radius_sq, exclude_ids=shadowed,
+                predicate=predicate, round_output=False,
+            ),
+            lambda live, id_col, vec_col: (
+                queries.select("qid", "query")
+                .crossJoin(
+                    F.broadcast(
+                        live.select(
+                            F.col(id_col).alias("neighbor_id"),
+                            F.col(vec_col).alias("_v"),
+                        )
                     )
                 )
-            )
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col("_v"), F.col("query")).alias("dist_sq"),
-            )
-            .filter(F.col("dist_sq") <= radius_sq)
+                .select(
+                    "qid",
+                    "neighbor_id",
+                    l2_sq(F.col("_v"), F.col("query")).alias("dist_sq"),
+                )
+                .filter(F.col("dist_sq") <= radius_sq)
+            ),
+            predicate,
         )
-        merged = indexed_part.unionByName(delta_part)
-        return merged.select(
-            "qid", "neighbor_id", F.round("dist_sq", 4).alias("dist_sq")
+
+    def _merged(self, indexed, delta, predicate, k: int | None = None):
+        """The one merged read (reference ``engine.h:100-144``) behind
+        every search method: pin the delta snapshot ONCE, so the
+        exclusion and the delta scan see the same seq set even if a
+        concurrent insert or compaction advances the delta mid-query;
+        run ``indexed(shadowed_ids)`` — the indexed side with every id
+        the delta shadows excluded (a one-column DataFrame, never
+        collected); run ``delta(live, id_col=..., vec_col=...)`` over
+        the latest delta rows minus
+        tombstones (NULL vector = deleted id: its id shadows the indexed
+        side but it carries nothing to scan), filtered by ``predicate``
+        against each row's LATEST version.  With ``k`` the two sides'
+        raw float64 ``dist_sq`` merge into one global top-k — ranks were
+        per-source, and ranking on rounded values would break a
+        4-decimal tie between sources by id instead of by the true
+        distance, diverging from the exact oracle — rounded once at
+        output; without ``k`` (radius search) the merge is a plain union
+        (id sets are disjoint by the exclusion), rounded once."""
+        id_col = self.index.meta["id_col"]
+        vec_col = self.index.meta["vec_col"]
+        latest = self.delta_latest(seqs=self._live_seqs())
+        indexed_part = indexed(latest.select(id_col))
+        live = latest.filter(F.col(vec_col).isNotNull())
+        if predicate is not None:
+            live = live.filter(predicate)
+        delta_part = delta(live, id_col=id_col, vec_col=vec_col)
+        if k is None:
+            return indexed_part.unionByName(delta_part).select(
+                "qid", "neighbor_id", F.round("dist_sq", 4).alias("dist_sq")
+            )
+        merged = indexed_part.select(
+            "qid", "neighbor_id", F.col("dist_sq")
+        ).unionByName(delta_part.select("qid", "neighbor_id", F.col("dist_sq")))
+        return _finalize_topk(
+            merged.select("qid", "neighbor_id", F.col("dist_sq").alias("dist")),
+            k,
+            "l2_sq",
         )
 
     def search_timed(

@@ -24,6 +24,7 @@ the compaction is a normal batch query over the sink table.
 from __future__ import annotations
 
 import os
+import threading
 import time
 from typing import Any, Iterator, Tuple
 
@@ -59,22 +60,41 @@ def _state_partitions(spark: SparkSession) -> int:
     return min(8, cur)
 
 
+_STATE_PARTITIONS_LOCK = threading.Lock()
+
+
 class _pinned_state_partitions:
     """Temporarily pin spark.sql.shuffle.partitions for a stateful
     streaming query's lifetime (the value is captured into the
-    checkpoint at first start; restored after the blocking drain)."""
+    checkpoint at first start; restored after the blocking drain).
+
+    Invariant: the save, the pin and the restore all run under
+    ``_STATE_PARTITIONS_LOCK``, held from ``__enter__`` to ``__exit__``.
+    Overlapping drains therefore run one after the other, and each
+    restores the value it saved — without the lock, A saves 200 and
+    pins 8, B saves 8, A restores 200, B restores 8, and the session
+    stays at 8.  The lock is not reentrant: pinned drains must not
+    nest."""
 
     def __init__(self, spark: SparkSession, n: int | None):
         self.spark, self.n = spark, n
 
     def __enter__(self):
         if self.n is not None:
-            self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
+            _STATE_PARTITIONS_LOCK.acquire()
+            try:
+                self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
+                self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
+            except BaseException:
+                _STATE_PARTITIONS_LOCK.release()
+                raise
 
     def __exit__(self, *exc):
         if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
+            try:
+                self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
+            finally:
+                _STATE_PARTITIONS_LOCK.release()
         return False
 
 
