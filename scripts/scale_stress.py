@@ -14,6 +14,9 @@ Usage:
     python scripts/scale_stress.py [--ppjoin]   # ppjoin tier is ~4 min extra
     python scripts/scale_stress.py --only-docs  # document-op section only
     python scripts/scale_stress.py --only-vecs  # vector-op section only
+    python scripts/scale_stress.py --only-<section>  # one finding's
+        # section (see main() for the flags, e.g. --only-sift-merged)
+    python scripts/scale_stress.py --help       # this text; starts nothing
 
 Treat ratios, not absolutes (box variance 2-5x run-to-run); compare
 against the table in SCALING.md.
@@ -65,6 +68,9 @@ def timed(results: dict, name: str, fn):
 
 
 def main() -> None:
+    if {"-h", "--help"} & set(sys.argv[1:]):
+        print(__doc__)
+        return
     spark = get_spark("vse-scale-stress")
     results: dict = {}
     only_docs = "--only-docs" in sys.argv
@@ -2264,21 +2270,9 @@ def _sift_merged_section(spark, results: dict) -> None:
     structured like sift_scale.py's: 1024 seeded centers + sigma-75
     noise, clipped to 0..255) under LIVE state (40k new inserts + 10k
     upserts shadowing indexed ids + 10k tombstones).  Measures the
-    |Q| ladder the r13 verdict asked for at 1M:
-
-      * |Q|=1k: engine float tier, scan='join' — the finding-25 shape's
-        feasible anchor at 1M (a first attempt at |Q|=10k join ran >55
-        min wall on one straggler task before being killed: ~8x10^7
-        candidate rows x ~1 KB through Arrow, with AQE-coalesced
-        centroid ranges leaving one partition holding the largest
-        cells — the measured pathology the cogroup shape removes);
-      * |Q|=10k: scan='cogroup' float + the sq8 join tier;
-      * |Q|=100k: scan='cogroup' float — the join shapes are EXCLUDED
-        by volume at this |Q| (8x10^8 candidate rows; the sq8
-        candidate stage has the same row count — their dataset-|Q|
-        form is the cogroup shape, which is the finding);
-      * exactness: 50-query full-probe sample vs brute-force kNN over
-        the latest-wins union (the finding-28 discipline).
+    engine float tier (the per-cell cogroup scan) at |Q| = 10k and
+    100k, plus exactness: a 50-query full-probe sample vs brute-force
+    kNN over the latest-wins union (the finding-28 discipline).
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -2340,7 +2334,7 @@ def _sift_merged_section(spark, results: dict) -> None:
     results["ensure_sq8_sec"] = round(time.time() - t0, 2)
 
     nprobe = 8
-    for nq in (1_000, 10_000, 100_000):
+    for nq in (10_000, 100_000):
         Q = chunk_vecs(0, nq)
         qdf = spark.createDataFrame(
             pd.DataFrame(
@@ -2348,31 +2342,17 @@ def _sift_merged_section(spark, results: dict) -> None:
             )
         ).cache()
         qdf.count()
-        # the join shapes (float @ |Q|=1k, sq8 @ |Q|=10k) were measured
-        # in the first pass (636 s / killed >45 min - SCALING finding
-        # 31's table); VSE_SIFT_JOINS=1 re-enables them
-        if os.environ.get("VSE_SIFT_JOINS") == "1":
-            if nq == 1_000:
-                shapes = [("float", "join"), ("float", "cogroup")]
-            elif nq == 10_000:
-                shapes = [("float", "cogroup"), ("sq8", "join")]
-            else:
-                shapes = [("float", "cogroup")]
-        else:
-            shapes = [] if nq == 1_000 else [("float", "cogroup")]
-        for tier, scan in shapes:
-            t0 = time.time()
-            cnt = eng.search_distributed(
-                qdf, k=6, nprobe=nprobe, tier=tier,
-                **({"scan": scan} if tier == "float" else {}),
-            ).count()
-            key = f"q{nq}_{tier}_{scan}"
-            results[key] = {"sec": round(time.time() - t0, 2), "rows": cnt}
-            print(f"  {key}: {results[key]}", file=sys.stderr)
+        t0 = time.time()
+        cnt = eng.search_distributed(
+            qdf, k=6, nprobe=nprobe, tier="float"
+        ).count()
+        key = f"q{nq}_float_cogroup"
+        results[key] = {"sec": round(time.time() - t0, 2), "rows": cnt}
+        print(f"  {key}: {results[key]}", file=sys.stderr)
         qdf.unpersist()
 
-    # exactness: 50-query full-probe cogroup float + sq8 join vs brute
-    # force over the latest-wins union
+    # exactness: 50-query full-probe float + sq8 vs brute force over
+    # the latest-wins union
     Q50 = chunk_vecs(0, 50)
     q50 = spark.createDataFrame(
         pd.DataFrame({"qid": np.arange(50, dtype=np.int64),
@@ -2381,7 +2361,7 @@ def _sift_merged_section(spark, results: dict) -> None:
     q50.count()
     nc = len(eng.index.centroid_ids)
     got_cg = sorted(map(tuple, eng.search_distributed(
-        q50, k=6, nprobe=nc, tier="float", scan="cogroup").collect()))
+        q50, k=6, nprobe=nc, tier="float").collect()))
     got_sq8 = sorted(map(tuple, eng.search_distributed(
         q50, k=6, nprobe=nc, tier="sq8").collect()))
     delta_latest = eng.delta_latest()

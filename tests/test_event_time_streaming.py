@@ -167,3 +167,33 @@ def test_overlapping_drains_restore_shuffle_partitions():
         t.join(timeout=30)
         assert not t.is_alive()
     assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+
+
+def test_load_events_leaves_matching_nanos_conf_untouched():
+    """``load_table`` writes the session-global nanosAsLong conf only
+    when the session holds another value: a session that already has
+    ``"true"`` sees no ``conf.set`` on an ``events`` read, and one that
+    does not gets exactly one.  Spark-free: a fake conf and reader."""
+    from types import SimpleNamespace
+
+    class Conf:
+        def __init__(self, v):
+            self.v = dict(v)
+            self.sets = []
+
+        def get(self, key, default=None):
+            return self.v.get(key, default)
+
+        def set(self, key, value):
+            self.sets.append((key, value))
+            self.v[key] = value
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    df = SimpleNamespace(dtypes=[("user_id", "bigint"), ("ts", "timestamp")])
+    for before, want_sets in (({key: "true"}, []), ({}, [(key, "true")])):
+        spark = SimpleNamespace(
+            conf=Conf(before),
+            read=SimpleNamespace(parquet=lambda path: df),
+        )
+        assert load_table(spark, "/sf", "events") is df
+        assert spark.conf.sets == want_sets

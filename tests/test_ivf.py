@@ -704,19 +704,159 @@ def test_search_snapshot_survives_concurrent_rebalance(spark, tmp_path):
 
 
 def test_search_distributed_identical_to_search(spark, embeddings, index):
-    """The large-|Q| shuffle-join path must return exactly what the
+    """The large-|Q| per-cell cogroup path must return exactly what the
     collect-and-broadcast path returns at the same nprobe."""
     q = knn_ops.make_queries(embeddings, n=10)
     for nprobe in (2, 8):
         a = index.search(q, k=10, nprobe=nprobe).orderBy("qid", "rank")
         b = index.search_distributed(q, k=10, nprobe=nprobe).orderBy("qid", "rank")
         assert [tuple(r) for r in b.collect()] == [tuple(r) for r in a.collect()]
-        # r14: the cogroup scan shape is the same logical operator —
-        # identical output at every nprobe, only the physical scan differs
-        c = index.search_distributed(
-            q, k=10, nprobe=nprobe, scan="cogroup"
-        ).orderBy("qid", "rank")
-        assert [tuple(r) for r in c.collect()] == [tuple(r) for r in a.collect()]
+
+
+def _hot_cell_index(spark, path):
+    """An index with one deliberately hot cell that every query probes
+    at nprobe=2: 8 far cells at ``±R·e_i`` (pairwise ``R·sqrt(2)`` or
+    ``2R`` apart) around a central cell at the origin holding 60% of
+    the rows.  A query near a far centroid has the centre as its second
+    nearest centroid (distance ~R), and a query near the centre probes
+    it first."""
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    dim, R = 8, 100.0
+    far = np.concatenate([np.eye(dim)[:4], -np.eye(dim)[:4]]) * R
+    C = np.vstack([np.zeros((1, dim)), far])
+    home = np.concatenate([np.zeros(600, dtype=int), rng.integers(1, 9, 400)])
+    V = (C[home] + rng.normal(0, 5.0, (len(home), dim))).astype(np.float32)
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": np.arange(len(V), dtype=np.int64),
+                "embedding": list(V),
+                "label": (np.arange(len(V)) % 7).astype(np.int64),
+            }
+        )
+    )
+    return IVFIndex.build(df, path, centroids=C, extra_cols=("label",)), V
+
+
+def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path):
+    """``search_distributed`` equals ``search()`` at partial nprobe with
+    a predicate, with excluded ids and at a pinned as-of snapshot, on a
+    hot cell every query probes, with Arrow batches (37 rows) far
+    smaller than the cells: no shape of the per-cell cogroup may drop,
+    duplicate or re-rank a candidate."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    idx, V = _hot_cell_index(spark, str(tmp_path / "hot"))
+    root = os.path.join(idx.index_dir, "vectors")
+    # publish a second generation of the hot cell with its odd ids
+    # dropped, so the as-of snapshot and the current one differ
+    src = os.path.join(root, "gen=0", "centroid_id=0")
+    dst = os.path.join(root, "gen=1", "centroid_id=0")
+    os.makedirs(dst)
+    for f in sorted(os.listdir(src)):
+        if f.endswith(".parquet"):
+            t = pq.read_table(os.path.join(src, f))
+            keep = np.asarray(t.column("vec_id")) % 2 == 0
+            pq.write_table(t.filter(keep), os.path.join(dst, f))
+    idx.commit_cells(1, [0], retain=2)
+    assert idx.vectors(snapshot="prev").count() == len(V)
+    assert idx.vectors().count() < len(V)
+
+    rows = np.random.default_rng(12).choice(len(V), 24, replace=False)
+    q = spark.createDataFrame(
+        [(int(i), V[i].tolist()) for i in rows], "qid long, query array<float>"
+    )
+    qrows = q.collect()
+    pairs = set(idx.probe_pairs(
+        np.array([r.qid for r in qrows], dtype=np.int64),
+        np.array([r.query for r in qrows], dtype=np.float32), nprobe=2,
+    ))
+    assert {qid for qid, c in pairs if c == 0} == {int(i) for i in rows}
+
+    excluded = [int(i) for i in rows[:6]] + [2, 4, 6]
+    excl_df = spark.createDataFrame([(i,) for i in excluded], "vec_id long")
+    pred = F.col("label") != 3
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "37")
+    try:
+        for snapshot in (None, "prev"):
+            for kw, dkw in (
+                ({}, {}),
+                ({"predicate": pred}, {"predicate": pred}),
+                ({"exclude_ids": excluded}, {"exclude_ids": excl_df}),
+                (
+                    {"predicate": pred, "exclude_ids": excluded},
+                    {"predicate": pred, "exclude_ids": excl_df},
+                ),
+            ):
+                a = idx.search(q, k=10, nprobe=2, snapshot=snapshot, **kw)
+                b = idx.search_distributed(
+                    q, k=10, nprobe=2, snapshot=snapshot, **dkw
+                )
+                want = [tuple(r) for r in a.orderBy("qid", "rank").collect()]
+                got = [tuple(r) for r in b.orderBy("qid", "rank").collect()]
+                assert len(want) == 10 * len(rows), (snapshot, kw)
+                assert got == want, (snapshot, kw)
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_search_distributed_reuses_probe_broadcast(spark, embeddings, index,
+                                                   monkeypatch):
+    """Two identical ``search_distributed`` calls ship the centroid
+    matrix once: the probe broadcast is memoized per (centroids file,
+    nprobe), not created (and leaked) per search."""
+    fresh = IVFIndex(spark, index.index_dir)
+    sc = spark.sparkContext
+    made = []
+    orig = sc.broadcast
+
+    def spy(value):
+        made.append(value)
+        return orig(value)
+
+    monkeypatch.setattr(sc, "broadcast", spy)
+    q = knn_ops.make_queries(embeddings, n=5)
+    a = fresh.search_distributed(q, k=5, nprobe=3).collect()
+    b = fresh.search_distributed(q, k=5, nprobe=3).collect()
+    probe_bcs = [
+        v for v in made
+        if isinstance(v, tuple) and len(v) == 3 and isinstance(v[2], int)
+    ]
+    assert len(probe_bcs) == 1
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+def test_vectors_schema_follows_other_instance_rebuild(spark, embeddings,
+                                                       tmp_path):
+    """An ``IVFIndex`` sees the column set that a rebuild committed by
+    another instance over the same dir publishes: the schema is
+    inferred per published cell map, not memoized for the instance
+    lifetime."""
+    import os
+
+    a = IVFIndex.build(
+        embeddings, str(tmp_path / "index"), n_centroids=4,
+        extra_cols=("label",),
+    )
+    b = IVFIndex(spark, a.index_dir)
+    assert "extra" not in a.vectors().columns
+    gen = b.next_gen()
+    (
+        b.vectors()
+        .withColumn("extra", F.col("vec_id") * 2)
+        .write.partitionBy("centroid_id")
+        .parquet(os.path.join(b.index_dir, "vectors", f"gen={gen}"))
+    )
+    b.commit_cells(gen, [int(c) for c in b._read_manifest()["cells"]])
+    got = a.vectors()
+    assert "extra" in got.columns
+    assert got.filter(F.col("extra") != F.col("vec_id") * 2).count() == 0
 
 
 def test_cosine_ivf_full_probe_equals_flat_cosine(spark, embeddings, tmp_path):

@@ -1070,18 +1070,13 @@ def test_search_distributed_merged_equals_exact(spark, embeddings, engine):
     )
     exact = knn_ops.knn_exact(union, q, k=10)
     want = _sorted(exact)
+    # the float tier is the per-cell cogroup scan: shadowed-id exclusion
+    # runs on the base BEFORE the cogroup
     for tier in _DISTRIBUTED_TIERS:
         got = engine.search_distributed(
             q, k=10, nprobe=nc, tier=tier, candidates_per_cell=10**9
         )
         assert _sorted(got) == want, tier
-    # r14: the cogroup scan shape through the merged contract — same
-    # logical operator, identical output (shadowed-id exclusion runs on
-    # the base BEFORE the per-cell cogroup)
-    got_cg = engine.search_distributed(
-        q, k=10, nprobe=nc, tier="float", scan="cogroup"
-    )
-    assert _sorted(got_cg) == want
     # partial nprobe: bulk path == per-query merged path, tier by tier
     a = _sorted(engine.search(q, k=10, nprobe=3))
     for tier in ("float", "sq8"):

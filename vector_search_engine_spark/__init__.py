@@ -49,13 +49,21 @@ def load_table(spark, sf_dir: str, name: str):
       NTZ→LTZ cast interprets the wall-clock in the session timezone and
       display converts back with the same timezone, so wall-clock values
       (and oracle hashes) are preserved.
+
+    The NANOS read needs the session-global
+    ``spark.sql.legacy.parquet.nanosAsLong=true``.  Invariant: it is set
+    only when the session holds another value, so once a session has it,
+    ``events`` reads never write the conf again — no conf churn under
+    concurrent queries on a shared session.
     """
     path = f"{sf_dir}/{name}.parquet"
     if name != "events":
         return spark.read.parquet(path)
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    if spark.conf.get(nanos, "false") != "true":
+        spark.conf.set(nanos, "true")
     df = spark.read.parquet(path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":

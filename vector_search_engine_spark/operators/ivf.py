@@ -349,6 +349,13 @@ def _train_quantizer(
     return C
 
 
+def _centroids_file(manifest: dict | None) -> str:
+    """The centroids file a manifest snapshot references.  ``or`` (not a
+    .get default): history entries committed before any rebalance carry
+    an explicit ``centroids_file=None``."""
+    return (manifest or {}).get("centroids_file") or "centroids.parquet"
+
+
 def _write_centroids_parquet(path: str, C, centroid_ids=None) -> None:
     """Driver-side Arrow write of the (tiny — n_centroids ≤ 4096) centroid
     table: one parquet file, no Spark job.  The index's metadata artifacts
@@ -398,9 +405,7 @@ class IVFIndex:
         manifest keeps probing against the MATCHING centroid set even if a
         concurrent rebalance publishes a new one (centroids files are
         versioned and never deleted; see ``rebalance``)."""
-        # `or` (not a .get default): history entries committed before any
-        # rebalance carry an explicit centroids_file=None
-        cfile = (manifest or {}).get("centroids_file") or "centroids.parquet"
+        cfile = _centroids_file(manifest)
         cache = getattr(self, "_cent_cache", None)
         if cache is None:
             cache = self._cent_cache = {}
@@ -652,12 +657,10 @@ class IVFIndex:
         with open(tmp, "w") as f:
             json.dump(out, f)
         os.rename(tmp, self._manifest_path())
-        # invalidate the per-snapshot read memos: superseded generations
-        # may be GC'd above, and an in-place rebuild changing the column
-        # set must re-infer the schema (the memos are metadata caches,
-        # never result caches — see vectors())
+        # invalidate the per-snapshot read memo: superseded generations
+        # may be GC'd above (the memo is a metadata cache, never a result
+        # cache — see vectors())
         self._vectors_df_cache = OrderedDict()
-        self._vec_schema = None
 
     def next_gen(self) -> int:
         m = self._read_manifest()
@@ -786,23 +789,20 @@ class IVFIndex:
         # dir (O(n_cells) driver+FS work on every search), while the plan
         # itself is pure metadata: every execution still scans parquet, so
         # this caches no results.  Cell files are immutable between
-        # commits and both memos are invalidated by ``commit_cells`` (the
-        # single commit bottleneck), so a rebuild that changes the column
-        # set re-infers instead of being silently masked (r17 kept the
-        # schema memo for the instance lifetime).  Least-recently-used
-        # eviction: as-of reads of older snapshots never push out the hot
-        # current one.
+        # commits, so the signature (every cell's generation) is the key:
+        # the schema is inferred inside the memo, once per signature, and
+        # a rebuild that changes the column set — committed by this or
+        # any other ``IVFIndex`` over the dir — publishes new generations
+        # and re-infers.  Least-recently-used eviction: as-of reads of
+        # older snapshots never push out the hot current one.
         sig = tuple(sorted((int(c), int(g)) for c, g in cells.items()))
 
         def read() -> DataFrame:
-            st = getattr(self, "_vec_schema", None)
-            reader = self.spark.read.option("basePath", root)
-            if st is not None:
-                reader = reader.schema(st)
-            df = reader.parquet(*dirs)
-            if st is None:
-                self._vec_schema = df.schema
-            return df.drop("gen")
+            return (
+                self.spark.read.option("basePath", root)
+                .parquet(*dirs)
+                .drop("gen")
+            )
 
         return self._memo("_vectors_df_cache", sig, read, 9)
 
@@ -1857,45 +1857,35 @@ class IVFIndex:
         predicate=None,
         exclude_ids: DataFrame | None = None,
         round_output: bool = True,
-        scan: str = "join",
     ) -> DataFrame:
         """ANN top-k for a LARGE query table — the tier for when ``|Q|``
         itself is a dataset (bulk re-embedding joins, all-corpus retrieval
         passes) and ``search()``'s collect-and-broadcast contract breaks:
 
         * probe assignment runs INSIDE the query table's partitions
-          (centroid matrix in the UDF closure — a few MB even at 4096
+          (centroid matrix in a broadcast — a few MB even at 4096
           cells); queries never visit the driver;
-        * candidates come from a shuffle join with the index table on
-          ``centroid_id`` (AQE skew-join splits hot cells probed by many
-          queries);
-        * each joined partition emits ≤ k rows per query (GEMM per
-          (batch, qid) group), then the usual global window top-k.
+        * the ``(qid, query, centroid_id)`` probe stubs meet the index
+          cells in a per-cell cogroup (``_cell_cogroup_topk``): one
+          chunked GEMM per probed cell emits ≤ k rows per query, so the
+          shuffle carries the probe stubs and each probed cell once,
+          never the |Q|·nprobe·|cell| candidate rows a probes⋈cells
+          join streams through Arrow;
+        * then the usual global window top-k.
+
+        One scan shape serves every |Q|: against a probes⋈cells
+        candidate join the cogroup measured equal at 16 queries and
+        ahead from 256 queries up, with identical output (SCALING
+        finding 31).
 
         Identical results to ``search()`` at the same nprobe (same stable
         centroid ordering; pinned in tests).  ``predicate``: optional
-        metadata Column over the index side, applied before the shuffle
-        join (pushed to the scan) — the large-|Q| filtered tier.
-        ``exclude_ids``: one-column DataFrame of ids to drop PRE-JOIN
-        (anti-join on the index side — the merged engine contract's
-        shadowed-id exclusion; ids never visit the driver).
-
-        ``scan`` (r14) picks the physical scan shape, identical output:
-
-        * ``"join"`` (default) — probes shuffle-join the cells and the
-          |Q|·nprobe·|cell| candidate rows stream through Arrow into
-          the per-batch kernel.  Right for SERVING-sized query tables:
-          at 10k queries × 100k×64d the volume is ~14 GB (finding 25);
-          at 1M×128d the same shape is ~250 GB of Arrow traffic — the
-          wall the cogroup shape removes.
-        * ``"cogroup"`` — per-cell cogroup (``_cell_cogroup_topk``):
-          one chunked GEMM per probed cell, shuffle volume = probe
-          stubs + each cell once, never materialized candidate pairs.
-          Right for DATASET-SIZED |Q| (kNN-graph builds, all-corpus
-          retrieval passes); SCALING finding 31 measures the crossover
-          at SIFT1M."""
+        metadata Column over the index side, applied before the cogroup
+        (pushed to the scan) — the large-|Q| filtered tier.
+        ``exclude_ids``: one-column DataFrame of ids to drop before the
+        cogroup (anti-join on the index side — the merged engine
+        contract's shadowed-id exclusion; ids never visit the driver)."""
         id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         # same snapshot discipline as search(): centroids and cells from
         # ONE manifest view (historical when an as-of snapshot is given)
         snap = self._pin(snapshot)
@@ -1909,45 +1899,9 @@ class IVFIndex:
             base = base.join(
                 exclude_ids.toDF(id_col), id_col, "left_anti"
             )
-        if scan == "cogroup":
-            cand_topk = self._cell_cogroup_topk(probes, base, k)
-        elif scan == "join":
-            cand = probes.join(base, "centroid_id").select(
-                "qid", "query", F.col(id_col), F.col(vec_col)
-            )
-            cand_topk = cand.mapInPandas(
-                self._bulk_l2_topk_kernel(k),
-                schema="qid long, neighbor_id long, dist double",
-            )
-        else:
-            raise ValueError(f"unknown scan shape {scan!r}")
-        return _finalize_topk(cand_topk, k, "l2_sq", round_output)
-
-    def _bulk_l2_topk_kernel(self, k: int):
-        """Per-batch kernel shared by the bulk-|Q| tiers
-        (``search_distributed``, ``search_exact_bounded_distributed``):
-        one exact float64 L2 evaluation + local (dist, id) top-k per
-        (qid, candidate-group); the global window merge keeps the true
-        top-k over all of a query's batches."""
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
-
-        def batch_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            out = _Rows("dist")
-            for pdf in batches:
-                for qid, grp in pdf.groupby("qid"):
-                    q = np.asarray(
-                        grp["query"].iloc[0], dtype=np.float32
-                    ).astype(np.float64)
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    V = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
-                    d = (V * V).sum(axis=1) - 2.0 * (V @ q) + float(q @ q)
-                    np.maximum(d, 0.0, out=d)
-                    order = np.lexsort((ids, d))[:k]
-                    out.add(int(qid), ids[order], d[order])
-            yield from out.emit()
-
-        return batch_topk
+        return _finalize_topk(
+            self._cell_cogroup_topk(probes, base, k), k, "l2_sq", round_output
+        )
 
     def search_exact_bounded_distributed(
         self,
@@ -1986,16 +1940,16 @@ class IVFIndex:
         a row-materializing join — a (cell, its queries, its vectors)
         group runs ONE chunked GEMM and emits ≤ k rows per query, so
         shuffle volume is ``|Q|·fanout + N`` rows (probe stubs + each
-        cell once), never the ``|Q|·fanout·|cell|`` candidate rows the
-        ``search_distributed`` join shape would materialize at
-        dataset-sized |Q|.  The verify fan-out is data-adaptive: on
-        clustered corpora d_k is small, most cells fail the triangle
-        test, and the probed fraction is ~the query's own cluster; on
-        isotropic high-dim data d_k concentrates at the bulk distance
-        and the bound excludes little, degenerating toward the full
-        grid — prefer ``knn_exact_distributed`` (block GEMM) there.
-        SCALING r14 (finding 30) records the measured crossover at 100k
-        rows on both geometries.  Reference anchor: ``hnsw_index.h``'s
+        cell once), never the ``|Q|·fanout·|cell|`` candidate rows a
+        probes⋈cells join would materialize at dataset-sized |Q|.  The
+        verify fan-out is data-adaptive: on clustered corpora d_k is
+        small, most cells fail the triangle test, and the probed
+        fraction is ~the query's own cluster; on isotropic high-dim
+        data d_k concentrates at the bulk distance and the bound
+        excludes little, degenerating toward the full grid — prefer
+        ``knn_exact_distributed`` (block GEMM) there.  SCALING r14
+        (finding 30) records the measured crossover at 100k rows on
+        both geometries.  Reference anchor: ``hnsw_index.h``'s
         ef-bounded beam plays the same per-query "scan less than
         everything" role; this is the set-oriented, provably exact
         analog."""
@@ -2067,10 +2021,16 @@ class IVFIndex:
         ``r_q`` from ``qb``'s ``_r`` column) — a zero-loss prune, since
         ``d(q, v) >= d(q, c) - R_c`` for every v in c.  Runs inside the
         query table's partitions (centroids and radii ride a broadcast,
-        O(cells)); shared by ``radius_search_distributed`` and the
-        verify pass of ``search_exact_bounded_distributed``."""
-        cids, C, R = self._cell_radii(snap)
-        bc = self.spark.sparkContext.broadcast((cids, C, R))
+        O(cells), memoized per generation like the radii and released
+        on eviction — ``_sign_budget_broadcast``'s discipline); shared
+        by ``radius_search_distributed`` and the verify pass of
+        ``search_exact_bounded_distributed``."""
+        radii = self._cell_radii(snap)
+        bc = self._memo(
+            "_radii_bc_cache", self._sidecar_gen(snap),
+            lambda: self.spark.sparkContext.broadcast(radii),
+            17, release=Broadcast.unpersist,
+        )
 
         def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             cids_, C_, Rc_ = bc.value
@@ -2197,15 +2157,22 @@ class IVFIndex:
         nprobe: int,
     ) -> tuple[DataFrame, int, int]:
         """Probe assignment for the bulk-query tiers: ranks the pinned
-        snapshot's centroids INSIDE the query table's partitions (the
-        centroid matrix ships in the UDF closure — a few MB even at
-        4096 cells; queries never visit the driver) and emits one
-        ``(qid, query, centroid_id)`` row per probe.  Shared by
+        snapshot's centroids INSIDE the query table's partitions and
+        emits one ``(qid, query, centroid_id)`` row per probe; queries
+        never visit the driver.  The centroid matrix rides a broadcast
+        (a few MB even at 4096 cells) memoized per ``(centroids file,
+        nprobe)`` — centroids files are versioned and immutable (see
+        ``_centroids_for``) — and released on eviction, so a serving
+        loop does not leak one broadcast per search.  Shared by
         ``search_distributed`` and the quantized distributed tiers.
         Returns ``(probes_df, n_cells, clamped_nprobe)``."""
         cids, C = self._centroids_for(snap)
         nprobe = min(nprobe, len(cids))
-        bc = self.spark.sparkContext.broadcast((cids, C, nprobe))
+        bc = self._memo(
+            "_probe_bc_cache", (_centroids_file(snap), nprobe),
+            lambda: self.spark.sparkContext.broadcast((cids, C, nprobe)),
+            17, release=Broadcast.unpersist,
+        )
 
         def assign_probes(
             batches: Iterator[pd.DataFrame],
@@ -2289,15 +2256,16 @@ class IVFIndex:
 
         1. probe assignment inside the query table's partitions
            (``_assign_probes_distributed``);
-        2. shuffle join of the probes with the generation-keyed SQ8/SQ4
-           code sidecar on ``centroid_id`` (AQE skew-join splits hot
-           cells) — the scan reads 4× (SQ8) / 8× (SQ4) fewer bytes than
-           the float cells, and is partition-pruned to the probed cells
-           (``_probed_cells_distributed``);
-        3. the PROVABLY lossless bound cut per (query, Arrow batch)
-           group (``_sq_bound_mask`` — the subset-composability argument
-           in its docstring is what makes the per-slice cut sound after
-           a shuffle join scatters a query's candidates);
+        2. per-cell cogroup (``_cell_cogroup``) of the probes with the
+           generation-keyed SQ8/SQ4 code sidecar on ``centroid_id`` —
+           the scan reads 4× (SQ8) / 8× (SQ4) fewer bytes than the float
+           cells, is partition-pruned to the probed cells
+           (``_probed_cells_distributed``), and shuffles each cell's
+           codes once;
+        3. the PROVABLY lossless bound cut per (query, cell), one GEMM
+           per cell for all of its probing queries
+           (``_sq_bound_mask_multi`` — the subset-composability argument
+           in its docstring is what makes a per-cell cut sound);
         4. survivors rejoin the float cells (same pruned partitions) on
            id for the exact rescore — the query vector RIDES the
            survivor rows (emitted by the cut kernel), so no extra join
@@ -2372,12 +2340,14 @@ class IVFIndex:
         ``search_cascade``'s three stages re-expressed under
         ``search_distributed``'s no-driver-collect contract:
 
-        1. probes (in-partition assignment) shuffle-join the 1-bit BQ
-           sidecar on ``centroid_id`` (32× scan-byte cut, pruned to the
-           probed cells); the asymmetric sign score keeps the top
-           ``candidates_per_cell`` per (query, WHOLE cell) — the only
-           lossy stage, with the same finding-41 per-cell auto-derived
-           default as the per-query cascade when unset.  Since r18's
+        1. probes (in-partition assignment) meet the 1-bit BQ sidecar
+           in a per-cell cogroup on ``centroid_id`` (``_cell_cogroup``:
+           32× scan-byte cut, pruned to the probed cells, each cell's
+           codes shuffled and unpacked once); the asymmetric sign score
+           keeps the top ``candidates_per_cell`` per (query, WHOLE
+           cell) — the only lossy stage, with the same finding-41
+           per-cell auto-derived default as the per-query cascade when
+           unset.  Since r18's
            per-cell cogroup a finite C keeps exactly min(C, cell size)
            survivors per (query, cell); r17 kept C per (query,
            Arrow-batch slice of a cell), so a finite-C caller can now
@@ -4172,37 +4142,36 @@ def _build_or_construct(
     return inst
 
 
-def _no_knob(c, scan):
+def _no_knob(c):
     return {}
 
 
 # The tier tables: each serving tier is the same probed top-k with a
 # different candidate cut, so a tier is just (IVFIndex method, the kwargs
-# its own knob takes from the shared options).  The shared options are
-# ``candidates_per_cell`` C — the sign tiers' stage-1 budget, the graph
-# tier's beam width (unbounded C → exhaustive beam → exact) — and the
-# bulk float tier's ``scan`` shape.  Every tier is exact-equivalent to
-# the float probe at full probe (lossless cuts, or unbounded C), so
-# callers that rescore (the metric wrappers) or merge (the streaming
-# engine) hold tier-independently.  ``_run_tier`` is the one place a
-# tier name becomes a call.
+# its own knob takes from the shared ``candidates_per_cell`` C — the sign
+# tiers' stage-1 budget, the graph tier's beam width (unbounded C →
+# exhaustive beam → exact)).  Every tier is exact-equivalent to the float
+# probe at full probe (lossless cuts, or unbounded C), so callers that
+# rescore (the metric wrappers) or merge (the streaming engine) hold
+# tier-independently.  ``_run_tier`` is the one place a tier name becomes
+# a call.
 _SERVING_TIERS = {
     "float": ("search", _no_knob),
     "sq8": ("search_sq8", _no_knob),
-    "sq4": ("search_sq8", lambda c, scan: {"bits": 4}),
+    "sq4": ("search_sq8", lambda c: {"bits": 4}),
     "pq": ("search_pq", _no_knob),
-    "bq": ("search_bq", lambda c, scan: {"candidates_per_cell": c}),
+    "bq": ("search_bq", lambda c: {"candidates_per_cell": c}),
     "prefix": ("search_prefix", _no_knob),
     "prefix_pca": ("search_prefix_pca", _no_knob),
-    "cascade": ("search_cascade", lambda c, scan: {"candidates_per_cell": c}),
-    "graph": ("search_graph", lambda c, scan: {"ef": c or 64}),
+    "cascade": ("search_cascade", lambda c: {"candidates_per_cell": c}),
+    "graph": ("search_graph", lambda c: {"ef": c or 64}),
 }
 _DISTRIBUTED_TIERS = {
-    "float": ("search_distributed", lambda c, scan: {"scan": scan}),
+    "float": ("search_distributed", _no_knob),
     "sq8": ("search_sq8_distributed", _no_knob),
     "cascade": (
         "search_cascade_distributed",
-        lambda c, scan: {"candidates_per_cell": c},
+        lambda c: {"candidates_per_cell": c},
     ),
 }
 
@@ -4213,7 +4182,6 @@ def _run_tier(
     tier: str,
     queries,
     candidates_per_cell: int | None = None,
-    scan: str = "join",
     **kwargs,
 ) -> DataFrame:
     """Run ``tier`` of a tier table (``_SERVING_TIERS`` /
@@ -4225,7 +4193,7 @@ def _run_tier(
         )
     method, knob = tiers[tier]
     return getattr(index, method)(
-        queries, **knob(candidates_per_cell, scan), **kwargs
+        queries, **knob(candidates_per_cell), **kwargs
     )
 
 

@@ -383,19 +383,18 @@ def knn_sq8_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_ivf_cogroup_scan_distributed", oracle=ORACLES["knn_exact_l2"])
 def ann_ivf_cogroup_scan_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bulk path's COGROUP scan shape at full probe (r14): one
+    """The bulk path's per-cell COGROUP scan at full probe (r14): one
     chunked GEMM per probed cell, shuffle = probe stubs + each cell
-    once — the dataset-sized-|Q| shape that removes the join scan's
-    |Q|·fanout·|cell| Arrow materialization (SCALING finding 31 pins
-    the SIFT1M crossover).  Exact at full probe — identical results to
-    scan='join' at any nprobe (pytest) and to exact kNN here."""
+    once, never the |Q|·fanout·|cell| candidate rows a probes⋈cells
+    join streams through Arrow (SCALING finding 31).  It is the only
+    shape of ``search_distributed``, so this is the same plan as
+    ``ann_ivf_distributed``, kept under its own name as the oracle row
+    of the cogroup scan.  Exact at full probe; identical to
+    ``search()`` at any nprobe (pytest)."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = ivf.build_or_load(spark, sf_dir)
     return idx.search_distributed(
-        knn_ops.make_queries(emb),
-        k=10,
-        nprobe=idx.meta["n_centroids"],
-        scan="cogroup",
+        knn_ops.make_queries(emb), k=10, nprobe=idx.meta["n_centroids"]
     )
 
 
@@ -846,8 +845,8 @@ def ann_ivf_ip_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ann_ivf_distributed", oracle=ORACLES["knn_exact_l2"])
 def ann_ivf_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-|Q| tier: probe assignment inside the query table's
-    partitions (no driver collect, no query broadcast), candidates via
-    shuffle join on centroid_id — exact at full probe, same oracle."""
+    partitions (no driver collect, no query broadcast), one per-cell
+    cogroup on centroid_id — exact at full probe, same oracle."""
     index = ivf.build_or_load(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     return index.search_distributed(
@@ -858,8 +857,8 @@ def ann_ivf_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ann_ivf_distributed_filtered", oracle=ORACLES["knn_filtered"])
 def ann_ivf_distributed_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED search through the large-|Q| distributed tier (r7): the
-    predicate filters the index side before the shuffle join (pushed to
-    the scan); full probe == the exact filtered oracle."""
+    predicate filters the index side before the per-cell cogroup (pushed
+    to the scan); full probe == the exact filtered oracle."""
     index = ivf.build_or_load(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     return index.search_distributed(
@@ -874,11 +873,11 @@ def ann_ivf_distributed_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_sq8_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quantized ladder on the bulk-query path (r12 — the r11
     verdict's top item): probe assignment inside the query table's
-    partitions, candidates from a shuffle join with the partition-pruned
-    int8 SQ8 sidecar (4× fewer scan bytes than the float cells), the
-    provably lossless bound cut per (query, batch) slice, exact float
-    rescore of survivors only — hash-identical to the exact flat oracle
-    at full probe, same oracle as ann_ivf_distributed."""
+    partitions, a per-cell cogroup with the partition-pruned int8 SQ8
+    sidecar (4× fewer scan bytes than the float cells), the provably
+    lossless bound cut per (query, cell), exact float rescore of
+    survivors only — hash-identical to the exact flat oracle at full
+    probe, same oracle as ann_ivf_distributed."""
     index = ivf.build_or_load(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     return index.search_sq8_distributed(

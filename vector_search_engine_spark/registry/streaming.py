@@ -612,8 +612,8 @@ def streaming_search_distributed(
 ) -> DataFrame:
     """The merged Q4 contract for DATASET-SIZED query tables (r13):
     engine.search_distributed — IVF bulk path (in-partition probe
-    assignment + centroid_id shuffle join) with shadowed ids anti-joined
-    out pre-cut, plus knn_exact_distributed's block-join delta scan; no
+    assignment + per-cell cogroup on centroid_id) with shadowed ids
+    anti-joined out pre-cut, plus knn_exact_distributed's block-join delta scan; no
     per-query data ever visits the driver on either side.  Exact at
     full probe over the logical union — same oracle as every merged
     search row.  Same 50-id upsert overlap trap as the radius sibling

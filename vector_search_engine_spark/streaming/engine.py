@@ -491,7 +491,6 @@ class VectorEngine:
         tier: str = "float",
         candidates_per_cell: int | None = None,
         predicate=None,
-        scan: str = "join",
     ) -> DataFrame:
         """The merged Q4 contract for DATASET-SIZED query tables — the
         reference's serve loop (``engine.h:100-144``) answers one query
@@ -505,7 +504,7 @@ class VectorEngine:
         side:
 
         * indexed side: ``IVFIndex.search_{,sq8_,cascade_}distributed``
-          (in-partition probe assignment + shuffle join on
+          (in-partition probe assignment + a per-cell cogroup on
           ``centroid_id``, the quantized tiers reading 4×/32× fewer
           scan bytes) with shadowed ids removed PRE-CUT by an anti-join
           against the pinned delta snapshot's id set — the anti-join's
@@ -522,15 +521,11 @@ class VectorEngine:
         results to float), or ``"cascade"`` (BQ→SQ8→float; exact when
         ``candidates_per_cell`` is unbounded, recall-measured when
         finite).  ``predicate``: metadata Column applied to BOTH sides'
-        latest versions, same semantics as ``search``.  ``scan``
-        (float tier only, r14): the indexed side's physical scan shape
-        — "join" (serving-sized |Q|) or "cogroup" (per-cell GEMM, the
-        dataset-sized-|Q| shape; see IVFIndex.search_distributed)."""
+        latest versions, same semantics as ``search``."""
         return self._merged(
             lambda shadowed: _run_tier(
                 self.index, _DISTRIBUTED_TIERS, tier, queries,
-                candidates_per_cell, scan,
-                k=k, nprobe=nprobe, exclude_ids=shadowed,
+                candidates_per_cell, k=k, nprobe=nprobe, exclude_ids=shadowed,
                 predicate=predicate, round_output=False,
             ),
             lambda live, **cols: knn_exact_distributed(
