@@ -15,8 +15,10 @@ Usage:
     python scripts/scale_stress.py --only-docs  # document-op section only
     python scripts/scale_stress.py --only-vecs  # vector-op section only
     python scripts/scale_stress.py --only-<section>  # one finding's
-        # section (see main() for the flags, e.g. --only-sift-merged)
+        # section (see _SECTIONS for the flags, e.g. --only-sift-merged)
     python scripts/scale_stress.py --help       # this text; starts nothing
+    [--out FILE] also writes the JSON line to FILE; --churn-modes X picks
+    the --only-churn modes.  Any other argument exits 2 with this text.
 
 Treat ratios, not absolutes (box variance 2-5x run-to-run); compare
 against the table in SCALING.md.
@@ -67,106 +69,49 @@ def timed(results: dict, name: str, fn):
     print(f"  {name}: {results[name]}", file=sys.stderr)
 
 
-def main() -> None:
-    if {"-h", "--help"} & set(sys.argv[1:]):
+def _usage_exit(msg: str) -> None:
+    print(f"scale_stress.py: {msg}\n{__doc__}", file=sys.stderr)
+    sys.exit(2)
+
+
+def _section_flag(argv: list[str]) -> str | None:
+    """The one ``--only-*`` section flag of ``argv`` (None: the full
+    run).  Any other argument but ``--ppjoin``, ``--out FILE`` and
+    ``--churn-modes X`` prints the usage to stderr and exits 2, so a
+    mistyped flag never falls through to the full stress run."""
+    flags, i = [], 0
+    while i < len(argv):
+        a = argv[i]
+        if a in ("--out", "--churn-modes"):
+            if i + 1 == len(argv):
+                _usage_exit(f"{a} needs a value")
+            i += 2
+            continue
+        if a in _SECTIONS or a in _DOC_SECTIONS:
+            flags.append(a)
+        elif a != "--ppjoin":
+            _usage_exit(f"unknown argument {a!r}")
+        i += 1
+    if len(flags) > 1:
+        _usage_exit(f"more than one section flag: {' '.join(flags)}")
+    return flags[0] if flags else None
+
+
+def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    if {"-h", "--help"} & set(argv):
         print(__doc__)
         return
+    flag = _section_flag(argv)
     spark = get_spark("vse-scale-stress")
     results: dict = {}
-    only_docs = "--only-docs" in sys.argv
-    only_vecs = "--only-vecs" in sys.argv
-    only_fn = "--only-fn" in sys.argv  # finding-18 section alone
-    only_eps = "--only-eps" in sys.argv  # finding-19 section alone
-    if "--only-sidecar" in sys.argv:  # finding-21 section alone
-        _sidecar_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if "--only-deltagraph" in sys.argv:  # finding-22 section alone
-        _delta_graph_section(results)
-        _emit(({"results": results}))
-        return
-    if "--only-churn" in sys.argv:  # finding-23 section alone
-        _churn_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if "--only-pca" in sys.argv:  # finding-24 section alone
-        _pca_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if "--only-distq" in sys.argv:  # finding-25 section alone
-        _distq_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if "--only-distq-merged" in sys.argv:  # finding-28 section alone
-        _distq_merged_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if "--only-exactknn" in sys.argv:  # finding-30 section alone
-        _exact_knn_graph_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if "--only-sift-merged" in sys.argv:  # finding-31 section alone
-        _sift_merged_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-graphedge1m" in sys.argv:  # finding-40 section alone
-        _graph_edge_1m_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-mixedsf1" in sys.argv:  # finding-41 section alone
-        _mixed_rw_sf1_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-text1m" in sys.argv:  # finding-44 section alone
-        _text_1m_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-pipeline1m" in sys.argv:  # finding-47 section alone
-        _pipeline_1m_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-pipeline100k" in sys.argv:  # finding-42 section alone
-        _pipeline_scale_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-blockskew" in sys.argv:  # finding-32 section alone
-        _block_skew_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-hardneg" in sys.argv:  # finding-34 section alone
-        _hardneg_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if "--only-lsh" in sys.argv:  # finding-33 section alone
-        _lsh_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if "--only-dsir" in sys.argv:  # finding-35 section alone
-        _dsir_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-rank" in sys.argv:  # finding-36 section alone
-        _rank_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-whitenivf" in sys.argv:  # finding-37 section alone
-        _whiten_ivf_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-contskew" in sys.argv:  # finding-38 section alone
-        _containment_skew_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if "--only-textscale" in sys.argv:  # finding-39 section alone
-        _text_scale_section(spark, results)
-        _emit(({"results": results}))
-        return
-    if only_eps:
-        _eps_section(spark, results)
-        _emit(({"n_vecs": N_VECS, "results": results}))
-        return
-    if only_vecs:
-        _vector_section(spark, results, n_docs=0)
+    if flag in _SECTIONS:
+        run, payload = _SECTIONS[flag]
+        run(spark, results)
+        if payload == "n_vecs":
+            _emit({"n_vecs": N_VECS, "results": results})
+        elif payload == "results":
+            _emit({"results": results})
         return
 
     base = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
@@ -189,12 +134,8 @@ def main() -> None:
     n_docs = docs.count()
     print(f"stress corpus: {n_docs} documents", file=sys.stderr)
 
-    if only_fn:
-        _fngrams_section(results, docs)
-        _emit(({"n_docs": n_docs, "results": results}))
-        return
-    if "--only-overlap" in sys.argv:  # finding-27 section alone
-        _overlap_section(results, docs)
+    if flag in ("--only-fn", "--only-overlap"):
+        _DOC_SECTIONS[flag](results, docs)
         _emit(({"n_docs": n_docs, "results": results}))
         return
 
@@ -222,7 +163,7 @@ def main() -> None:
         "ngram_jaccard_pairs",
         lambda: dedup_ops.ngram_jaccard_pairs(docs).count(),
     )
-    if "--ppjoin" in sys.argv:
+    if "--ppjoin" in argv:
         timed(
             results,
             "ngram_jaccard_pairs_ppjoin",
@@ -419,7 +360,7 @@ def main() -> None:
 
     docs.unpersist()
 
-    if only_docs:
+    if flag == "--only-docs":
         _emit(({"n_docs": n_docs, "results": results}))
         return
     _vector_section(spark, results, n_docs)
@@ -3100,6 +3041,43 @@ def _text_scale_section(spark, results: dict) -> None:
         f"({len(got_sl)} rows)",
         file=sys.stderr,
     )
+
+
+# --only-<section> flag -> (run(spark, results), what its JSON line
+# holds besides the results: "n_vecs", "results" alone, or None when the
+# section prints its own line); the SCALING finding each one measures
+_SECTIONS = {
+    "--only-sidecar": (_sidecar_section, "n_vecs"),  # 21
+    "--only-deltagraph": (lambda spark, r: _delta_graph_section(r), "results"),  # 22
+    "--only-churn": (_churn_section, "n_vecs"),  # 23
+    "--only-pca": (_pca_section, "n_vecs"),  # 24
+    "--only-distq": (_distq_section, "n_vecs"),  # 25
+    "--only-distq-merged": (_distq_merged_section, "n_vecs"),  # 28
+    "--only-exactknn": (_exact_knn_graph_section, "n_vecs"),  # 30
+    "--only-sift-merged": (_sift_merged_section, "results"),  # 31
+    "--only-graphedge1m": (_graph_edge_1m_section, "results"),  # 40
+    "--only-mixedsf1": (_mixed_rw_sf1_section, "results"),  # 41
+    "--only-text1m": (_text_1m_section, "results"),  # 44
+    "--only-pipeline1m": (_pipeline_1m_section, "results"),  # 47
+    "--only-pipeline100k": (_pipeline_scale_section, "results"),  # 42
+    "--only-blockskew": (_block_skew_section, "results"),  # 32
+    "--only-hardneg": (_hardneg_section, "n_vecs"),  # 34
+    "--only-lsh": (_lsh_section, "n_vecs"),  # 33
+    "--only-dsir": (_dsir_section, "results"),  # 35
+    "--only-rank": (_rank_section, "results"),  # 36
+    "--only-whitenivf": (_whiten_ivf_section, "results"),  # 37
+    "--only-contskew": (_containment_skew_section, "results"),  # 38
+    "--only-textscale": (_text_scale_section, "results"),  # 39
+    "--only-eps": (_eps_section, "n_vecs"),  # 19
+    "--only-vecs": (lambda spark, r: _vector_section(spark, r, n_docs=0), None),
+}
+# sections over the document stress corpus (main builds it first):
+# flag -> run(results, docs), or None for the whole document part
+_DOC_SECTIONS = {
+    "--only-docs": None,
+    "--only-fn": _fngrams_section,  # 18
+    "--only-overlap": _overlap_section,  # 27
+}
 
 
 if __name__ == "__main__":

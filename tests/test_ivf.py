@@ -741,11 +741,14 @@ def _hot_cell_index(spark, path):
 
 
 def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path):
-    """``search_distributed`` equals ``search()`` at partial nprobe with
-    a predicate, with excluded ids and at a pinned as-of snapshot, on a
-    hot cell every query probes, with Arrow batches (37 rows) far
-    smaller than the cells: no shape of the per-cell cogroup may drop,
-    duplicate or re-rank a candidate."""
+    """Each tier's bulk form equals its serving form at partial nprobe
+    with a predicate, with excluded ids and at a pinned as-of snapshot,
+    on a hot cell every query probes, with Arrow batches (37 rows) far
+    smaller than the cells: the serving runner (cell slices of Arrow
+    batches) and the bulk runner (whole cells) run one kernel per tier,
+    and no shape of either may drop, duplicate or re-rank a candidate.
+    Pairs: float, sq8, cascade at unbounded C, and radius (current
+    snapshot only: ``radius_search`` has no ``snapshot``)."""
     import os
 
     import pyarrow.parquet as pq
@@ -780,30 +783,76 @@ def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path):
     excluded = [int(i) for i in rows[:6]] + [2, 4, 6]
     excl_df = spark.createDataFrame([(i,) for i in excluded], "vec_id long")
     pred = F.col("label") != 3
+    # (serving kwargs, bulk kwargs); the serving side takes the id list
+    cases = (
+        ({}, {}),
+        ({"predicate": pred}, {"predicate": pred}),
+        ({"exclude_ids": excluded}, {"exclude_ids": excl_df}),
+        (
+            {"predicate": pred, "exclude_ids": excluded},
+            {"predicate": pred, "exclude_ids": excl_df},
+        ),
+    )
+    topk = {"k": 10, "nprobe": 2}
+    # the float pair runs every case; the other pairs run the combined
+    # one, which composes both pre-cut filters with their cut kernel
+    tiers = (
+        (idx.search, idx.search_distributed, topk, cases),
+        (idx.search_sq8, idx.search_sq8_distributed, topk, cases[-1:]),
+        (
+            idx.search_cascade, idx.search_cascade_distributed,
+            {**topk, "candidates_per_cell": 10**9}, cases[-1:],
+        ),
+        (
+            idx.radius_search, idx.radius_search_distributed,
+            {"radius_sq": 300.0}, cases[-1:],
+        ),
+    )
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf)
     spark.conf.set(conf, "37")
     try:
-        for snapshot in (None, "prev"):
-            for kw, dkw in (
-                ({}, {}),
-                ({"predicate": pred}, {"predicate": pred}),
-                ({"exclude_ids": excluded}, {"exclude_ids": excl_df}),
-                (
-                    {"predicate": pred, "exclude_ids": excluded},
-                    {"predicate": pred, "exclude_ids": excl_df},
-                ),
-            ):
-                a = idx.search(q, k=10, nprobe=2, snapshot=snapshot, **kw)
-                b = idx.search_distributed(
-                    q, k=10, nprobe=2, snapshot=snapshot, **dkw
-                )
-                want = [tuple(r) for r in a.orderBy("qid", "rank").collect()]
-                got = [tuple(r) for r in b.orderBy("qid", "rank").collect()]
-                assert len(want) == 10 * len(rows), (snapshot, kw)
-                assert got == want, (snapshot, kw)
+        for serve, bulk, args, tier_cases in tiers:
+            ranked = "k" in args
+            for snapshot in (None, "prev") if ranked else (None,):
+                snap = {"snapshot": snapshot} if ranked else {}
+                for kw, dkw in tier_cases:
+                    a = serve(q, **args, **snap, **kw)
+                    b = bulk(q, **args, **snap, **dkw)
+                    order = ("qid", "rank" if ranked else "neighbor_id")
+                    want = [tuple(r) for r in a.orderBy(*order).collect()]
+                    got = [tuple(r) for r in b.orderBy(*order).collect()]
+                    where = (serve.__name__, snapshot, kw)
+                    if ranked:
+                        assert len(want) == 10 * len(rows), where
+                    else:
+                        assert len(want) > len(rows), where
+                    assert got == want, where
     finally:
         spark.conf.set(conf, old)
+
+
+def test_every_serving_tier_accepts_an_exclude_id_list(embeddings, index):
+    """One exclusion rule: every serving tier takes ``exclude_ids`` as a
+    plain list of ids, as ``search()`` always did, and at full probe
+    with an unbounded budget returns the float tier's result."""
+    from vector_search_engine_spark.operators.ivf import _SERVING_TIERS, _run_tier
+
+    q = knn_ops.make_queries(embeddings, n=5)
+    full = index.meta["n_centroids"]
+    excluded = sorted(
+        {r.neighbor_id for r in index.search(q, k=2, nprobe=full).collect()}
+    )
+    want = sorted(
+        map(tuple, index.search(q, k=10, nprobe=full, exclude_ids=excluded).collect())
+    )
+    assert len(want) == 50 and not {r[1] for r in want} & set(excluded)
+    for tier in _SERVING_TIERS:
+        got = _run_tier(
+            index, _SERVING_TIERS, tier, q, 10**9, k=10, nprobe=full,
+            exclude_ids=excluded,
+        )
+        assert sorted(map(tuple, got.collect())) == want, tier
 
 
 def test_search_distributed_reuses_probe_broadcast(spark, embeddings, index,
@@ -1749,3 +1798,127 @@ def test_exact_bounded_prunes_on_clustered_data(spark, tmp_path):
         dqc = np.sqrt(((C - Qm[i]) ** 2).sum(axis=1))
         probed += int((dqc <= np.sqrt(dk[qid]) + Rc).sum())
     assert probed <= len(qids) * 2  # ~1 cell/query vs the 8-cell grid
+
+
+# -- the shared per-cell kernels, on NumPy arrays (no Spark) -----------------
+
+
+def test_topk_kernel_ties_small_cell_and_tiling(monkeypatch):
+    """The float kernel keeps each query's exact ``(dist, id)`` top-k of
+    the cell: duplicates straddling the k-th distance keep their
+    smallest ids, a cell smaller than k returns every row, and tiling
+    the query axis (``_TILE_CELLS``) keeps the same rows."""
+    from vector_search_engine_spark.functions.vector import l2_sq_matrix
+    from vector_search_engine_spark.operators import ivf
+
+    rng = np.random.default_rng(5)
+    V = rng.normal(size=(30, 6))
+    q = rng.normal(size=6)
+    V[0] = q  # two rows nearer than the duplicates
+    V[1] = q + 0.01
+    V[10:17] = q + 0.5  # seven duplicates straddling rank k=5
+    Q = np.vstack([q, rng.normal(size=(3, 6))])
+    ids = np.arange(200, 170, -1, dtype=np.int64)  # ids against row order
+    cell = {"ids": ids, "vec": V}
+    D = l2_sq_matrix(V, Q)
+
+    def want(kk):
+        return [
+            sorted(zip(D[:, j], ids))[:kk] for j in range(len(Q))
+        ]
+
+    def got(kernel):
+        return [
+            list(zip(d, i)) for i, d in kernel(0, Q, cell)
+        ]
+
+    top5 = got(ivf._topk_kernel(5))
+    assert top5 == want(5)
+    assert sorted(i for _, i in top5[0][2:]) == [184, 185, 186]
+    assert got(ivf._topk_kernel(50)) == want(30)
+    # one query per tile: the same rows; a one-column GEMM may round a
+    # distance's last ulp differently
+    monkeypatch.setattr(ivf, "_TILE_CELLS", len(V))
+    tiled = got(ivf._topk_kernel(5))
+    assert [[i for _, i in r] for r in tiled] == [[i for _, i in r] for r in top5]
+    np.testing.assert_allclose(
+        [[d for d, _ in r] for r in tiled], [[d for d, _ in r] for r in top5],
+        rtol=1e-12, atol=1e-12,
+    )
+
+
+def _sq8_cell(V):
+    """SQ8 sidecar columns of ``V``, encoded as ``sq.sq8_encode`` does."""
+    V = V.astype(np.float32)
+    lo, hi = V.min(axis=1), V.max(axis=1)
+    span = np.where(hi > lo, hi - lo, 1.0).astype(np.float32)
+    codes = np.rint((V - lo[:, None]) / span[:, None] * 255).astype(np.uint8)
+    return {
+        "ids": np.arange(len(V), dtype=np.int64),
+        "code": np.array([c.tobytes() for c in codes], dtype=object),
+        "lo": lo,
+        "hi": hi,
+    }
+
+
+def test_sq_cut_kernel_keeps_true_topk_for_one_query_row():
+    from vector_search_engine_spark.operators import ivf
+
+    rng = np.random.default_rng(6)
+    V = rng.normal(size=(400, 16)).astype(np.float32)
+    cell = _sq8_cell(V)
+    for q in rng.normal(size=(5, 16)):
+        ((kept, d),) = ivf._sq_cut_kernel(16, 8, 10)(3, q[None, :], cell)
+        assert d is None
+        true = np.argsort(((V.astype(np.float64) - q) ** 2).sum(axis=1))[:10]
+        assert set(true) <= set(kept.tolist())
+        assert len(kept) < len(V)  # the cut prunes
+
+
+def test_radius_kernel_equals_brute_force():
+    from vector_search_engine_spark.operators import ivf
+
+    rng = np.random.default_rng(7)
+    V = rng.normal(size=(300, 8))
+    Q = rng.normal(size=(4, 8))
+    D = ((V[:, None, :] - Q[None, :, :]) ** 2).sum(axis=2)
+    # a radius halfway inside the widest gap near the median distance
+    s = np.sort(D.ravel())
+    mid = len(s) // 2
+    g = mid + int(np.argmax(s[mid + 1 : mid + 50] - s[mid : mid + 49]))
+    radius_sq = float((s[g] + s[g + 1]) / 2)
+    ids = np.arange(1000, 1300, dtype=np.int64)
+    got = list(ivf._radius_kernel(radius_sq)(0, Q, {"ids": ids, "vec": V}))
+    for j, (hit, d) in enumerate(got):
+        want = np.flatnonzero(D[:, j] <= radius_sq)
+        assert hit.tolist() == ids[want].tolist()
+        np.testing.assert_allclose(d, D[want, j], rtol=1e-9, atol=1e-9)
+
+
+def test_sign_kernel_keeps_min_budget_and_cell_rows():
+    from vector_search_engine_spark.operators import ivf
+
+    rng = np.random.default_rng(8)
+    dim = 12
+    V = rng.normal(size=(40, dim))
+    thr = V.mean(axis=0)
+    bits = np.packbits((V > thr).astype(np.uint8), axis=1)
+    cell = {
+        "ids": np.arange(500, 540, dtype=np.int64),
+        "code": np.array([b.tobytes() for b in bits], dtype=object),
+        "dim": np.full(len(V), dim),
+    }
+    Q = rng.normal(size=(3, dim))
+    for C, budget, cid, keep in (
+        (7, None, 0, 7),
+        (100, None, 0, 40),
+        (100, {0: 9}, 0, 9),  # a cell's own budget wins
+        (11, {0: 9}, 1, 11),  # C for a cell outside the budget
+        (100, {0: 64}, 0, 40),
+    ):
+        got = ivf._sign_kernel(C, thr, budget)(cid, Q, cell)
+        assert len(got) == len(Q)
+        for kept, d in got:
+            assert d is None
+            assert len(set(kept.tolist())) == len(kept) == min(keep, len(V))
+            assert set(kept.tolist()) <= set(cell["ids"].tolist())

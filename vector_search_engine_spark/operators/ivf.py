@@ -98,6 +98,13 @@ AUTO_SIGN_BUDGET_CAP = 65_536
 # matrix is tiled over query columns to stay near 128 MB
 _TILE_CELLS = 16_000_000
 
+# The runners' output schemas: scored rows (top-k and radius kernels),
+# bare survivor pairs (serving cuts), and bulk cut survivors with the
+# riding query vector
+_SCORED = "qid long, neighbor_id long, dist double"
+_PAIRS = "qid long, neighbor_id long"
+_RIDING = "qid long, query array<float>, neighbor_id long"
+
 
 def _merge_built_partitions(tmp: str | None, out_dir: str) -> None:
     """Finish a sidecar build (``IVFIndex._sidecar``): move the freshly
@@ -154,53 +161,51 @@ def _write_state(path: str, value) -> None:
     os.rename(tmp, path)
 
 
-def _sq_bound_mask(
-    codes, lo: np.ndarray, hi: np.ndarray, q: np.ndarray, dim: int,
-    bits: int, k: int,
-) -> np.ndarray:
-    """Keep-mask of the PROVABLY lossless SQ bound cut over one candidate
-    group (shared by ``search_sq8``, ``search_cascade`` stage 2, and the
-    distributed forms — identical arithmetic everywhere so the tiers stay
-    bit-equivalent): with per-vector dequantization error
-    ``e = sqrt(dim)·span/(2·levels)`` (+ float32 slop), every row whose
-    lower bound ``sqrt(d̂)−e`` ≤ the k-th smallest upper bound survives —
-    a superset of the group's true top-k.  The argument composes: a
-    group is any subset of a query's candidates (Arrow batch, partition,
-    shuffle-join slice), and a global top-k member beats all but < k
-    candidates in EVERY subset containing it, so it always survives the
-    subset's cut (ties covered by the non-strict ≤ plus the error
-    slack)."""
-    from vector_search_engine_spark.operators.sq import sq_codes_matrix
-
-    levels = float((1 << bits) - 1)
-    M = sq_codes_matrix(codes, len(lo), bits, dim)
-    span = hi - lo
-    span[span <= 0] = 1.0
-    V = lo[:, None] + M * (span[:, None] / levels)
-    d = (V * V).sum(axis=1) - 2.0 * (V @ q) + float(q @ q)
-    np.maximum(d, 0.0, out=d)
-    sd = np.sqrt(d)
-    e = np.sqrt(dim) * (span / (2.0 * levels)) * (1 + 1e-5) + 1e-6
-    ub = sd + e
-    kth = np.partition(ub, min(k, len(ub)) - 1)[min(k, len(ub)) - 1]
-    return (sd - e) <= kth
+def _drop_ids(rows: DataFrame, exclude_ids, id_col: str) -> DataFrame:
+    """The one shadowed-id exclusion rule of every search: drop the rows
+    whose ``id_col`` is in ``exclude_ids`` — a list of ids (an ``isin``
+    filter), or a one-column DataFrame anti-joined on ``id_col``, since
+    the shadowed set can be arbitrarily large under sustained streaming
+    and is never driver-collected.  ``None`` or an empty list drops
+    nothing."""
+    if exclude_ids is None:
+        return rows
+    if isinstance(exclude_ids, DataFrame):
+        return rows.join(
+            exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
+            id_col,
+            "left_anti",
+        )
+    ids = [int(i) for i in exclude_ids]
+    return rows.filter(~F.col(id_col).isin(ids)) if ids else rows
 
 
 def _sq_bound_mask_multi(
-    codes, lo: np.ndarray, hi: np.ndarray, Qm: np.ndarray, dim: int,
-    bits: int, k: int,
+    codes, lo, hi, Qm: np.ndarray, dim: int, bits: int, k: int,
 ) -> np.ndarray:
-    """Multi-query form of ``_sq_bound_mask`` (r17): decode the group's
-    codes ONCE and evaluate the same lossless bound against every probing
-    query via one GEMM — returns an (n_rows, n_queries) keep mask, column
-    j being the cut for query j.  The bound argument is per (group,
-    query) and does not care how d̂ is computed (any faithful float64
-    evaluation yields a superset of the true top-k; the exact rescore
-    stage makes the final results identical), so the GEMM expansion is
-    safe here even though its last-ulp rounding can differ from the
-    matrix-vector form."""
+    """Keep-mask of the PROVABLY lossless SQ bound cut over one candidate
+    group (the SQ kernel ``_sq_cut_kernel`` and both cascade stage-2
+    cuts; identical arithmetic everywhere so the tiers stay
+    bit-equivalent): the group's codes decode ONCE and one GEMM
+    evaluates the bound against every query row of ``Qm`` — an
+    (n_rows, n_queries) mask, column j being the cut for query j.  With
+    per-vector dequantization error ``e = sqrt(dim)·span/(2·levels)``
+    (+ float32 slop), every row whose lower bound ``sqrt(d̂)−e`` ≤ the
+    k-th smallest upper bound survives — a superset of the group's true
+    top-k.
+
+    Subset composability: a group is any subset of a query's candidates
+    (a cell, a cell slice of an Arrow batch, a shuffle-join slice), and
+    a global top-k member beats all but < k candidates in EVERY subset
+    containing it, so it always survives the subset's cut (ties covered
+    by the non-strict ≤ plus the error slack).  The argument is per
+    (group, query) and does not care how d̂ is computed — any faithful
+    float64 evaluation yields a superset of the true top-k, and the
+    exact rescore makes the final results identical."""
     from vector_search_engine_spark.operators.sq import sq_codes_matrix
 
+    lo = np.asarray(lo, dtype=np.float64)
+    hi = np.asarray(hi, dtype=np.float64)
     levels = float((1 << bits) - 1)
     M = sq_codes_matrix(codes, len(lo), bits, dim)
     span = hi - lo
@@ -224,25 +229,115 @@ def _sq_bound_mask_multi(
     return outs[0] if len(outs) == 1 else np.concatenate(outs, axis=1)
 
 
-def _sign_cut(codes, d: int, Qc: np.ndarray, keep: int) -> list[np.ndarray]:
-    """The BQ stage-1 cut of one cell group, shared by every sign tier:
-    the group's packed sign codes unpack ONCE, one GEMM of the ±1 block
-    scores every probing query at once — the asymmetric score
-    ``(q − t) · sign(v − t)`` against the centered queries ``Qc`` (bits
-    encode ``sign(v − t)``) — and each query keeps its top ``keep``
-    rows.  Returns one row-position array per row of ``Qc`` (every row
-    when the group holds at most ``keep``)."""
-    n = len(codes)
-    if n <= keep:
-        return [np.arange(n)] * len(Qc)
-    raw = np.frombuffer(b"".join(codes), dtype=np.uint8)
-    bits = np.unpackbits(raw.reshape(n, -1), axis=1)[:, :d]
-    S = (2.0 * bits - 1.0) @ Qc.T  # (n, |probing queries|)
-    return [np.argpartition(-S[:, j], keep - 1)[:keep] for j in range(len(Qc))]
+# The per-cell kernels.  A kernel is ``kernel(cid, Q, cell)``: ``cid``
+# the cell, ``Q`` the (m, dim) float64 rows of the queries probing it,
+# ``cell`` the cell's columns as NumPy arrays (``ids`` int64, ``vec``
+# and any other stacked column as (n, dim) float64, the rest raw).  It
+# yields, for each query row j in order, ``(kept ids, their distances)``
+# — ``None`` distances for a cut kernel.  A kernel never knows which
+# runner calls it: ``IVFIndex._serve_cells`` (serving, cell slices of
+# Arrow batches) or ``IVFIndex._cell_cogroup`` (bulk, whole cells).
+
+
+def _topk_kernel(k: int):
+    """The float ``(dist, id)`` top-k: one GEMM (``l2_sq_matrix``) of
+    the cell against its probing queries, tiled over query columns at
+    ``_TILE_CELLS`` (a hot cell can be probed by a whole query table),
+    and each query's exact ``(dist, id)`` top-k of the cell."""
+    def cell_topk(cid, Q, cell):
+        V, ids = cell["vec"], cell["ids"]
+        kk = min(k, len(ids))
+        step = max(1, _TILE_CELLS // max(len(ids), 1))
+        for c0 in range(0, len(Q), step):
+            D = l2_sq_matrix(V, Q[c0 : c0 + step])  # (n, tile)
+            for j in range(D.shape[1]):
+                order = np.lexsort((ids, D[:, j]))[:kk]
+                yield ids[order], D[order, j]
+
+    return cell_topk
+
+
+def _sq_cut_kernel(dim: int, bits: int, k: int):
+    """The SQ bound cut (``_sq_bound_mask_multi``) over the cell's
+    ``code``/``lo``/``hi`` sidecar columns."""
+    def sq_cut(cid, Q, cell):
+        keep = _sq_bound_mask_multi(
+            cell["code"], cell["lo"], cell["hi"], Q, dim, bits, k
+        )
+        return [(cell["ids"][keep[:, j]], None) for j in range(len(Q))]
+
+    return sq_cut
+
+
+def _local(x):
+    """A kernel parameter's task-side value: a broadcast unwraps."""
+    return x.value if isinstance(x, Broadcast) else x
+
+
+def _sign_kernel(C: int, thr, budget=None):
+    """The BQ stage-1 sign cut, shared by every sign tier: the cell's
+    packed sign codes unpack ONCE, one GEMM of the ±1 block scores every
+    probing query — the asymmetric score ``(q − t) · sign(v − t)``
+    against the queries centered by the sidecar thresholds ``thr``
+    (bits encode ``sign(v − t)``) — and each query keeps its top
+    ``budget[cid]`` rows (``C`` for a cell outside ``budget`` or
+    without one), every row when the cell holds at most that many.
+    ``thr`` and ``budget`` may be broadcasts (``_local``)."""
+    def sign_cut(cid, Q, cell):
+        codes, ids = cell["code"], cell["ids"]
+        bm = _local(budget)
+        keep = C if bm is None else bm.get(cid, C)
+        n = len(codes)
+        if n <= keep:
+            return [(ids, None)] * len(Q)
+        raw = np.frombuffer(b"".join(codes), dtype=np.uint8)
+        bits = np.unpackbits(raw.reshape(n, -1), axis=1)[:, : int(cell["dim"][0])]
+        S = (2.0 * bits - 1.0) @ (Q - _local(thr)[None, :]).T  # (n, m)
+        return [
+            (ids[np.argpartition(-S[:, j], keep - 1)[:keep]], None)
+            for j in range(len(Q))
+        ]
+
+    return sign_cut
+
+
+def _radius_kernel(radius_sq: float):
+    """Radius hits: every cell row within ``radius_sq`` of each query,
+    in the per-query matrix-vector form — these distances ARE the
+    output values (rounded at 4 decimals), and each row's dot product
+    is row-independent, so both runners emit the same bytes."""
+    def in_radius(cid, Q, cell):
+        V, ids = cell["vec"], cell["ids"]
+        VV = (V * V).sum(axis=1)
+        for q in Q:
+            d = VV - 2.0 * (V @ q) + float(q @ q)
+            np.maximum(d, 0.0, out=d)
+            hit = d <= radius_sq
+            yield ids[hit], d[hit]
+
+    return in_radius
+
+
+def _cell_columns(pdf: pd.DataFrame, names: dict, stack) -> dict:
+    """A runner's decode of its kernel input: every column of ``pdf``
+    but ``centroid_id`` as a NumPy array, renamed through ``names``
+    (the id column to ``ids``, as int64; the float vector to ``vec``),
+    the ``stack`` columns it holds (kernel names) stacked ONCE into
+    (n, dim) float64 matrices and every other column raw."""
+    cols = {
+        names.get(c, c): pdf[c].to_numpy()
+        for c in pdf.columns
+        if c != "centroid_id"
+    }
+    cols["ids"] = cols["ids"].astype(np.int64, copy=False)
+    for c in stack:
+        if c in cols:
+            cols[c] = np.stack(cols[c]).astype(np.float64)
+    return cols
 
 
 def _cell_slices(pdf: pd.DataFrame, cell_qidx: dict):
-    """The serving kernels' cell loop over one Arrow batch: yields
+    """The serving runner's cell loop over one Arrow batch: yields
     ``(cell, qidx, rows)`` for every cell slice some query probes —
     ``rows`` the slice's positions in ``pdf`` and ``qidx`` the probing
     queries' positions (``_cell_map``).  A stable argsort on
@@ -263,15 +358,16 @@ def _cell_slices(pdf: pd.DataFrame, cell_qidx: dict):
 
 
 class _Rows:
-    """One task's output of a cut or top-k kernel, emitted as ONE pandas
-    frame (r18, guide §4: one Arrow batch per task, not one per cut
-    group).  ``add(qid, ids, x)`` appends a query's neighbor ids with,
-    per ``extra``, their distances (``"dist"``) or the query vector
-    riding every row (``"query"``); ``None`` emits bare pairs.  Columns
-    come out in the tier schemas' order."""
+    """One task's output of a runner, emitted as ONE pandas frame (r18,
+    guide §4: one Arrow batch per task, not one per cell).  The output
+    ``schema`` names the columns: ``add(qid, ids, x)`` appends a
+    query's neighbor ids with their distances (``x``, when the schema
+    has ``dist``) or the query vector ``x`` riding every row (when it
+    has ``query``); otherwise bare pairs."""
 
-    def __init__(self, extra: str | None = None):
-        self.extra = extra
+    def __init__(self, schema: str):
+        names = [f.split()[0] for f in schema.split(",")]
+        self.extra = next((c for c in ("dist", "query") if c in names), None)
         self.q: list = []
         self.i: list = []
         self.x: list = []
@@ -298,19 +394,6 @@ class _Rows:
     def emit(self) -> Iterator[pd.DataFrame]:
         if self.q:
             yield self.frame()
-
-
-def _emit_topk_once(best: dict, k: int) -> Iterator[pd.DataFrame]:
-    """Final per-task emit of the probed-search kernels: merge each
-    query's accumulated ``(ids, dist)`` piles with the exact (dist, id)
-    lexsort cut and emit ONE (qid, neighbor_id, dist) frame."""
-    out = _Rows("dist")
-    for qid, parts in best.items():
-        ids = np.concatenate([p[0] for p in parts])
-        d = np.concatenate([p[1] for p in parts])
-        order = np.lexsort((ids, d))[:k]
-        out.add(qid, ids[order], d[order])
-    return out.emit()
 
 
 def _train_quantizer(
@@ -988,29 +1071,66 @@ class IVFIndex:
             (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
         )
 
+    def _serve_cells(
+        self, cand: DataFrame, bc, kernel, schema: str, stack=("vec",),
+        k: int | None = None,
+    ) -> DataFrame:
+        """The serving runner: ONE ``mapInPandas`` over the probed rows
+        ``cand`` (``centroid_id``, the id, and the kernel's columns)
+        with the query set in ``bc`` (``_query_broadcast``).  Per Arrow
+        batch it decodes once (``_cell_columns``: ONE object-array
+        stack of each ``stack`` column per batch — the r18 rule, guide
+        §4.2; a per-cell stack was the dominant Python cost), then
+        walks the contiguous cell slices (``_cell_slices``) and runs
+        ``kernel(cid, Q, cell)`` on each slice with the slice's probing
+        queries.  Columns it does not stack reach the kernel raw, so a
+        kernel can materialize them for a few rows only.
+
+        Output is ONE ``schema`` frame per task (``_Rows``).  With
+        ``k`` (the top-k kernels) each query's kept rows from every
+        slice of the task merge by the exact ``(dist, id)`` order and at
+        most k per query leave the task; without it (cuts, radius hits)
+        every kept row leaves."""
+        names = {self.meta["id_col"]: "ids", self.meta["vec_col"]: "vec"}
+
+        def serve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            qids, Q, cq = bc.value
+            out = _Rows(schema)
+            piles: dict[int, list] = {}
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                cols = _cell_columns(pdf, names, stack)
+                for cid, qidx, rows in _cell_slices(pdf, cq):
+                    cell = {c: v[rows] for c, v in cols.items()}
+                    for qi, (ids, d) in zip(qidx, kernel(cid, Q[qidx], cell)):
+                        if k is None:
+                            out.add(qids[qi], ids, d)
+                        else:
+                            piles.setdefault(qi, []).append((ids, d))
+            for qi, parts in piles.items():
+                ids = np.concatenate([p[0] for p in parts])
+                d = np.concatenate([p[1] for p in parts])
+                order = np.lexsort((ids, d))[:k]
+                out.add(qids[qi], ids[order], d[order])
+            yield from out.emit()
+
+        serve.__name__ = kernel.__name__  # plans name the tier kernel
+        return cand.mapInPandas(serve, schema=schema)
+
     def _float_cells(self, snap, cells, exclude_ids, predicate) -> DataFrame:
         """``(centroid_id, id, vector)`` rows of the pinned snapshot's
         probed float cells — the candidate source of ``search``,
         ``search_prefix`` and both radius searches.  ``isin`` on the
         partition column prunes the parquet scan; shadowed ids
-        (``exclude_ids``: a list, or a one-column DataFrame anti-joined
-        because the set can be arbitrarily large under sustained
-        streaming — never driver-collected) and the metadata
-        ``predicate`` leave before ranking, so the top-k stays exact over
-        the filtered set."""
+        (``_drop_ids``) and the metadata ``predicate`` leave before
+        ranking, so the top-k stays exact over the filtered set."""
         id_col = self.meta["id_col"]
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(cells)
+        base = _drop_ids(
+            self.vectors(snapshot=snap).filter(F.col("centroid_id").isin(cells)),
+            exclude_ids,
+            id_col,
         )
-        if exclude_ids is not None:
-            if isinstance(exclude_ids, DataFrame):
-                base = base.join(
-                    exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                    on=id_col,
-                    how="left_anti",
-                )
-            elif exclude_ids:
-                base = base.filter(~F.col(id_col).isin(list(exclude_ids)))
         if predicate is not None:
             base = base.filter(predicate)
         return base.select(
@@ -1032,17 +1152,13 @@ class IVFIndex:
         columns the cut kernel reads besides ``centroid_id`` and the
         id."""
         id_col = self.meta["id_col"]
-        rows = (
+        rows = _drop_ids(
             self.spark.read.parquet(sidecar_dir)
             .filter(F.col("centroid_id").isin(cells))
-            .select("centroid_id", id_col, *cols)
+            .select("centroid_id", id_col, *cols),
+            exclude_ids,
+            id_col,
         )
-        if exclude_ids is not None:
-            rows = rows.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
-            )
         if predicate is not None:
             keep_ids = (
                 self.vectors(snapshot=snap)
@@ -1113,53 +1229,14 @@ class IVFIndex:
         offset, or ``"prev"`` (see ``manifest_at``); probes use the
         centroid geometry that was current AT that snapshot.
         """
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
             return self._empty_topk()
         qids, Q, snap, needed, cell_qidx = plan
         bc = self._query_broadcast(qids, Q, cell_qidx)
-        cand = self._float_cells(snap, needed, exclude_ids, predicate)
-
-        def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # r18 kernel shape (guide §4.2): ONE object-array stack per
-            # Arrow batch (the per-cell np.stack was the dominant Python
-            # cost), contiguous cell slices (``_cell_slices``), a
-            # vectorized tie-inclusive cut per cell (argpartition over the
-            # full D matrix — keeps every candidate at or below the k-th
-            # smallest distance, a provable superset of the exact (dist,
-            # id) top-k, so the exact merge below is unchanged), and ONE
-            # frame per task.  Per-cell GEMM is the same l2_sq_matrix call
-            # as before — merged searches still rank indexed and delta
-            # candidates with bitwise-identical arithmetic.
-            qids_, Q_, cq = bc.value
-            best: dict[int, list] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-                V_all = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                for _, qidx, rows in _cell_slices(pdf, cq):
-                    ids = ids_all[rows]
-                    D = l2_sq_matrix(V_all[rows], Q_[qidx])
-                    if len(ids) > k:
-                        part = np.argpartition(D, k - 1, axis=0)[:k]
-                        t = np.take_along_axis(D, part, 0).max(axis=0)
-                        for j, qi in enumerate(qidx):
-                            keep = D[:, j] <= t[j]
-                            best.setdefault(int(qids_[qi]), []).append(
-                                (ids[keep], D[keep, j])
-                            )
-                    else:
-                        for j, qi in enumerate(qidx):
-                            best.setdefault(int(qids_[qi]), []).append(
-                                (ids, D[:, j])
-                            )
-            yield from _emit_topk_once(best, k)
-
-        cand_topk = cand.mapInPandas(
-            local_topk, schema="qid long, neighbor_id long, dist double"
+        cand_topk = self._serve_cells(
+            self._float_cells(snap, needed, exclude_ids, predicate), bc,
+            _topk_kernel(k), _SCORED, k=k,
         )
         return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
@@ -1239,19 +1316,12 @@ class IVFIndex:
         if strategy == "prefilter":
             from vector_search_engine_spark.operators import knn as knn_ops
 
-            base = self.vectors(snapshot=snap).filter(predicate)
-            if exclude_ids is not None:
-                # shadowed ids (streaming merged contract) leave the
-                # brute-force base the same way they leave the probed scan
-                base = base.join(
-                    exclude_ids.select(
-                        F.col(exclude_ids.columns[0]).alias(
-                            self.meta["id_col"]
-                        )
-                    ),
-                    self.meta["id_col"],
-                    "left_anti",
-                )
+            # shadowed ids (streaming merged contract) leave the
+            # brute-force base the same way they leave the probed scan
+            base = _drop_ids(
+                self.vectors(snapshot=snap).filter(predicate), exclude_ids,
+                self.meta["id_col"],
+            )
             return knn_ops.knn_exact(
                 base,
                 queries.select(
@@ -1496,54 +1566,37 @@ class IVFIndex:
         the cut — harmless here since the cut is lossless, kept for plan
         parity with the quantized tiers), ``exclude_ids`` and as-of
         ``snapshot`` exactly as ``search()`` does."""
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
             return self._empty_topk()
         qids, Q, snap, needed, cell_qidx = plan
         dp = max(1, min(int(prefix_dims), Q.shape[1]))
-        bc = self._query_broadcast(qids, Q, cell_qidx)
-        cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
-        def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, Q_, cq = bc.value
-            best: dict[int, list] = {}
-            for pdf in batches:
-                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-                vecs = pdf[vec_col].to_numpy()
-                for _, qidx, rows in _cell_slices(pdf, cq):
-                    ids = ids_all[rows]
-                    V = np.stack(vecs[rows]).astype(np.float64)
-                    n = len(ids)
-                    Vp = V[:, :dp]
-                    VVp = (Vp * Vp).sum(axis=1)
-                    kk = min(k, n)
-                    for qi in qidx:
-                        q = Q_[qi]
-                        qp = q[:dp]
-                        dpd = VVp - 2.0 * (Vp @ qp) + float(qp @ qp)
-                        np.maximum(dpd, 0.0, out=dpd)
-                        seed = (
-                            np.argpartition(dpd, kk - 1)[:kk]
-                            if n > kk
-                            else np.arange(n)
-                        )
-                        diff = V[seed] - q
-                        T = (diff * diff).sum(axis=1).max()
-                        # same fp-slack guard as knn_prefix_rescore: the
-                        # GEMM bound may exceed the true one by ~1e-13
-                        surv = np.flatnonzero(dpd <= T + 1e-9 * (1.0 + T))
-                        diff = V[surv] - q
-                        full = (diff * diff).sum(axis=1)
-                        order = np.lexsort((ids[surv], full))[:kk]
-                        best.setdefault(int(qids_[qi]), []).append(
-                            (ids[surv][order], full[order])
-                        )
-            yield from _emit_topk_once(best, k)
+        def prefix_topk(cid, Q, cell):
+            V, ids = cell["vec"], cell["ids"]
+            n = len(ids)
+            Vp = V[:, :dp]
+            VVp = (Vp * Vp).sum(axis=1)
+            kk = min(k, n)
+            for q in Q:
+                qp = q[:dp]
+                dpd = VVp - 2.0 * (Vp @ qp) + float(qp @ qp)
+                np.maximum(dpd, 0.0, out=dpd)
+                seed = np.argpartition(dpd, kk - 1)[:kk] if n > kk else np.arange(n)
+                diff = V[seed] - q
+                T = (diff * diff).sum(axis=1).max()
+                # same fp-slack guard as knn_prefix_rescore: the GEMM
+                # bound may exceed the true one by ~1e-13
+                surv = np.flatnonzero(dpd <= T + 1e-9 * (1.0 + T))
+                diff = V[surv] - q
+                full = (diff * diff).sum(axis=1)
+                order = np.lexsort((ids[surv], full))[:kk]
+                yield ids[surv][order], full[order]
 
-        cand_topk = cand.mapInPandas(
-            local_topk, schema="qid long, neighbor_id long, dist double"
+        cand_topk = self._serve_cells(
+            self._float_cells(snap, needed, exclude_ids, predicate),
+            self._query_broadcast(qids, Q, cell_qidx), prefix_topk, _SCORED,
+            k=k,
         )
         return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
@@ -1776,73 +1829,52 @@ class IVFIndex:
         spectrally-concentrated corpus where SQ8's 4× byte win is
         unavailable (e.g. pre-quantized storage is prohibited).
         Otherwise prefer ``search_sq8`` (byte cut AND wall win)."""
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
             return self._empty_topk()
         qids, Q, snap, needed, cell_qidx = plan
         rot_dir = self.ensure_pca_rot(snapshot=snap)
         R = np.load(os.path.join(rot_dir, "rotation.npy"))
-        dp = max(1, min(int(prefix_dims), Q.shape[1]))
+        dim = Q.shape[1]
+        dp = max(1, min(int(prefix_dims), dim))
         Q64 = Q.astype(np.float64)
-        bc = self.spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q64, Q64 @ R, cell_qidx)
-        )
+
+        def pca_prefix_topk(cid, QQR, cell):
+            # each query row is [q | q·R]; only the rotated copy is
+            # stacked, the original floats come raw
+            ids, vecs = cell["ids"], cell["vec"]
+            Zp = np.ascontiguousarray(cell["rotvec"][:, :dp])
+            ZZp = (Zp * Zp).sum(axis=1)
+            n = len(ids)
+            # float32-storage error budget (see docstring)
+            e_v = (2.0 ** -23) * np.asarray(cell["vnorm"], np.float64) + 1e-9
+            kk = min(k, n)
+            for row in QQR:
+                q, qp = row[:dim], row[dim : dim + dp]
+                dpd = ZZp - 2.0 * (Zp @ qp) + float(qp @ qp)
+                np.maximum(dpd, 0.0, out=dpd)
+                lb = np.sqrt(dpd) - e_v
+                seed = np.argpartition(lb, kk - 1)[:kk] if n > kk else np.arange(n)
+                # original floats materialize ONLY for seed + survivors —
+                # the FLOPs (and copy) saving the cut exists to deliver
+                diff = np.stack(vecs[seed]).astype(np.float64) - q
+                # threshold from EXACT original-float distances — the
+                # seed's true distances upper-bound the k-th best
+                T = np.sqrt((diff * diff).sum(axis=1).max())
+                surv = np.flatnonzero(lb <= T * (1 + 1e-9) + 1e-9)
+                diff = np.stack(vecs[surv]).astype(np.float64) - q
+                full = (diff * diff).sum(axis=1)
+                order = np.lexsort((ids[surv], full))[:kk]
+                yield ids[surv][order], full[order]
+
         cand_rows = self._sidecar_cells(
             rot_dir, snap, needed, exclude_ids, predicate,
-            cols=(vec_col, "rotvec", "vnorm"),
+            cols=(self.meta["vec_col"], "rotvec", "vnorm"),
         )
-
-        def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, Q_, QR_, cq = bc.value
-            best: dict[int, list] = {}
-            for pdf in batches:
-                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-                rot_all = pdf["rotvec"].to_numpy()
-                vn_all = pdf["vnorm"].to_numpy(dtype=np.float64)
-                vecs = pdf[vec_col].to_numpy()
-                for _, qidx, rows in _cell_slices(pdf, cq):
-                    ids = ids_all[rows]
-                    Zp = np.stack([z[:dp] for z in rot_all[rows]]).astype(
-                        np.float64
-                    )
-                    ZZp = (Zp * Zp).sum(axis=1)
-                    n = len(ids)
-                    # float32-storage error budget (see docstring)
-                    e_v = (2.0 ** -23) * vn_all[rows] + 1e-9
-                    kk = min(k, n)
-                    vec_arr = vecs[rows]
-                    for qi in qidx:
-                        q = Q_[qi]
-                        qp = QR_[qi][:dp]
-                        dpd = ZZp - 2.0 * (Zp @ qp) + float(qp @ qp)
-                        np.maximum(dpd, 0.0, out=dpd)
-                        lb = np.sqrt(dpd) - e_v
-                        seed = (
-                            np.argpartition(lb, kk - 1)[:kk]
-                            if n > kk
-                            else np.arange(n)
-                        )
-                        # original floats materialize ONLY for seed +
-                        # survivors — the FLOPs (and copy) saving the cut
-                        # exists to deliver
-                        diff = np.stack(vec_arr[seed]).astype(np.float64) - q
-                        # threshold from EXACT original-float distances —
-                        # the seed's true distances upper-bound the k-th
-                        # best
-                        T = np.sqrt((diff * diff).sum(axis=1).max())
-                        surv = np.flatnonzero(lb <= T * (1 + 1e-9) + 1e-9)
-                        diff = np.stack(vec_arr[surv]).astype(np.float64) - q
-                        full = (diff * diff).sum(axis=1)
-                        order = np.lexsort((ids[surv], full))[:kk]
-                        best.setdefault(int(qids_[qi]), []).append(
-                            (ids[surv][order], full[order])
-                        )
-            yield from _emit_topk_once(best, k)
-
-        cand_topk = cand_rows.mapInPandas(
-            local_topk, schema="qid long, neighbor_id long, dist double"
+        cand_topk = self._serve_cells(
+            cand_rows,
+            self._query_broadcast(qids, np.hstack([Q64, Q64 @ R]), cell_qidx),
+            pca_prefix_topk, _SCORED, stack=("rotvec",), k=k,
         )
         return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
@@ -1882,10 +1914,10 @@ class IVFIndex:
         centroid ordering; pinned in tests).  ``predicate``: optional
         metadata Column over the index side, applied before the cogroup
         (pushed to the scan) — the large-|Q| filtered tier.
-        ``exclude_ids``: one-column DataFrame of ids to drop before the
-        cogroup (anti-join on the index side — the merged engine
-        contract's shadowed-id exclusion; ids never visit the driver)."""
-        id_col = self.meta["id_col"]
+        ``exclude_ids``: ids to drop before the cogroup (``_drop_ids``:
+        a list, or a one-column DataFrame anti-joined on the index side
+        — the merged engine contract's shadowed-id exclusion; its ids
+        never visit the driver)."""
         # same snapshot discipline as search(): centroids and cells from
         # ONE manifest view (historical when an as-of snapshot is given)
         snap = self._pin(snapshot)
@@ -1895,10 +1927,7 @@ class IVFIndex:
         base = self.vectors(snapshot=snap)
         if predicate is not None:
             base = base.filter(predicate)
-        if exclude_ids is not None:
-            base = base.join(
-                exclude_ids.toDF(id_col), id_col, "left_anti"
-            )
+        base = _drop_ids(base, exclude_ids, self.meta["id_col"])
         return _finalize_topk(
             self._cell_cogroup_topk(probes, base, k), k, "l2_sq", round_output
         )
@@ -2057,32 +2086,36 @@ class IVFIndex:
         )
 
     def _cell_cogroup(
-        self, probes: DataFrame, side: DataFrame, cols, kernel, schema: str
+        self, probes: DataFrame, side: DataFrame, cols, kernel, schema: str,
+        stack=("vec",),
     ) -> DataFrame:
-        """The per-cell cogroup of the bulk-|Q| tiers: the ``(qid,
-        query, centroid_id)`` probe stubs meet the cell rows of ``side``
-        (``centroid_id``, the id as ``nid``, plus ``cols``) on
-        ``centroid_id``, and ``kernel(cell, qpdf, vpdf)`` runs once per
-        cell that both sides populate, returning a ``schema`` frame (or
-        None for no rows).  Shuffle volume is probe stubs + each cell
-        once — never the ``|Q|·fanout·|cell|`` candidate rows a
-        probes⋈cells join materializes through Arrow (SCALING findings
-        25/30/48).
+        """The bulk runner: the ``(qid, query, centroid_id)`` probe stubs
+        meet the cell rows of ``side`` (``centroid_id``, the id as
+        ``nid``, plus ``cols``) in a per-cell cogroup on
+        ``centroid_id``, and for each cell both sides populate it
+        decodes the cell once (``_cell_columns``, ``nvec`` as ``vec``;
+        ``stack`` as in ``_serve_cells``) and runs ``kernel(cid, Q,
+        cell)`` with all of the cell's probing queries.  Every kept row
+        leaves as a ``schema`` frame (``_Rows``); where the schema asks
+        for ``query``, the runner attaches the probing query's vector
+        to its rows, so the rescore needs no query join.  Shuffle
+        volume is probe stubs + each cell once — never the
+        ``|Q|·fanout·|cell|`` candidate rows a probes⋈cells join
+        materializes through Arrow (SCALING findings 25/30/48).
 
         Both sides' key is cast to ONE type (int) and checked — the
         finding-28 discipline (see ``knn.block_cogroup_keys``): mixed
         int/bigint keys hash-partition differently and silently drop
         whole cells.
 
-        Memory bound, for every cogroup kernel: one task holds one cell
-        as a pandas frame, every query probing it, and all the pairs it
-        emits — O(|cell| + probing queries + emitted pairs) rows, where
-        the streamed join shape held one Arrow batch.  GEMM kernels tile
-        only their distance matrix (``_TILE_CELLS``).  ``rebalance``
-        bounds |cell| but not the probing queries, so a hot cell under a
-        full-probe, dataset-sized query table (worst: a radius search
-        with many hits) is the memory peak; the 100k×100k rung that
-        priced this shape (SCALING finding 48) ran with it."""
+        Memory bound, for every kernel: one task holds one cell as a
+        pandas frame, every query probing it, and all the pairs it
+        emits — O(|cell| + probing queries + emitted pairs) rows.  GEMM
+        kernels tile only their distance matrix (``_TILE_CELLS``).
+        ``rebalance`` bounds |cell| but not the probing queries, so a
+        hot cell under a full-probe, dataset-sized query table (worst: a
+        radius search with many hits) is the memory peak; the 100k×100k
+        rung that priced this shape (SCALING finding 48) ran with it."""
         qside = probes.select(
             F.col("centroid_id").cast("int").alias("centroid_id"),
             "qid",
@@ -2099,17 +2132,27 @@ class IVFIndex:
             raise AssertionError("cell cogroup key type mismatch")
         dtypes = {"long": "int64", "double": "float64"}
         fields = [f.split() for f in schema.split(",")]
+        names = {"nid": "ids", "nvec": "vec"}
 
         def cell_kernel(key, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
-            out = None
+            out = _Rows(schema)
             if len(qpdf) and len(vpdf):
-                out = kernel(int(key[0]), qpdf, vpdf)
-            if out is None:
-                out = pd.DataFrame(
+                qv = qpdf["query"].to_numpy()
+                got = kernel(
+                    int(key[0]), np.stack(qv).astype(np.float64),
+                    _cell_columns(vpdf, names, stack),
+                )
+                for j, (qid, (ids, d)) in enumerate(
+                    zip(qpdf["qid"].to_numpy(dtype=np.int64), got)
+                ):
+                    out.add(qid, ids, qv[j] if out.extra == "query" else d)
+            frame = out.frame()
+            if frame is None:
+                frame = pd.DataFrame(
                     {n: pd.Series(dtype=dtypes.get(t, object))
                      for n, t in fields}
                 )
-            return out
+            return frame
 
         cell_kernel.__name__ = kernel.__name__  # plans name the tier kernel
         return (
@@ -2121,31 +2164,15 @@ class IVFIndex:
     def _cell_cogroup_topk(
         self, probes: DataFrame, base: DataFrame, k: int
     ) -> DataFrame:
-        """Shared scan kernel of the bulk-|Q| exact tiers: per probed
-        cell (``_cell_cogroup``), ONE chunked GEMM of the cell's vectors
-        against its probing queries and the local (dist, id) top-k per
-        query — the cell-blocked twin of ``knn_exact_distributed``'s
-        kernel.  ``base`` is the caller-prepared index side (snapshot
-        pinned, predicate/exclude_ids already applied) with
-        ``(centroid_id, id_col, vec_col)`` columns."""
-        def cell_topk(cid, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
-            qids = qpdf["qid"].to_numpy(dtype=np.int64)
-            Q = np.stack(qpdf["query"].to_numpy())
-            ids = vpdf["nid"].to_numpy(dtype=np.int64)
-            V = np.stack(vpdf["nvec"].to_numpy())
-            kk = min(k, len(ids))
-            step = max(1, _TILE_CELLS // max(len(ids), 1))
-            out = _Rows("dist")
-            for c0 in range(0, len(qids), step):
-                D = l2_sq_matrix(V, Q[c0 : c0 + step])  # (n, m_chunk)
-                for j, qid in enumerate(qids[c0 : c0 + step]):
-                    order = np.lexsort((ids, D[:, j]))[:kk]
-                    out.add(qid, ids[order], D[order, j])
-            return out.frame()
-
+        """The float top-k kernel on the bulk runner — the scan of the
+        bulk-|Q| exact tiers, the cell-blocked twin of
+        ``knn_exact_distributed``'s kernel.  ``base`` is the
+        caller-prepared index side (snapshot pinned, predicate /
+        exclude_ids already applied) with ``(centroid_id, id_col,
+        vec_col)`` columns."""
         return self._cell_cogroup(
             probes, base, (F.col(self.meta["vec_col"]).alias("nvec"),),
-            cell_topk, "qid long, neighbor_id long, dist double",
+            _topk_kernel(k), _SCORED,
         )
 
     def _assign_probes_distributed(
@@ -2295,31 +2322,15 @@ class IVFIndex:
             sq_dir, snap, cells, exclude_ids, predicate,
             cols=("code", "lo", "hi"),
         )
-        # r18 (verdict task 3): the cut stage is a per-cell COGROUP
-        # (``_cell_cogroup``) instead of a probes⋈codes join that
-        # duplicated every code row once per probing query: each cell's
-        # codes decode once, and one GEMM evaluates the SAME lossless
-        # bound for all of the cell's probing queries
-        # (_sq_bound_mask_multi — its docstring carries the
-        # subset-composability argument).  Survivors carry their query
-        # vector, so the rescore needs no query join.
-        def cell_cut(cid, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
-            qv = qpdf["query"].to_numpy()
-            ids = vpdf["nid"].to_numpy(dtype=np.int64)
-            KEEP = _sq_bound_mask_multi(
-                vpdf["code"],
-                vpdf["lo"].to_numpy(dtype=np.float64),
-                vpdf["hi"].to_numpy(dtype=np.float64),
-                np.stack(qv).astype(np.float64), dim, bits, k,
-            )
-            out = _Rows("query")
-            for j, qid in enumerate(qpdf["qid"].to_numpy(dtype=np.int64)):
-                out.add(qid, ids[KEEP[:, j]], qv[j])
-            return out.frame()
-
+        # r18 (verdict task 3): the cut stage is the SQ kernel on the
+        # bulk runner (``_cell_cogroup``) instead of a probes⋈codes join
+        # that duplicated every code row once per probing query: each
+        # cell's codes decode once for all of its probing queries.
+        # Survivors carry their query vector, so the rescore needs no
+        # query join.
         cand = self._cell_cogroup(
-            probes, codes, ("code", "lo", "hi"), cell_cut,
-            "qid long, query array<float>, neighbor_id long",
+            probes, codes, ("code", "lo", "hi"), _sq_cut_kernel(dim, bits, k),
+            _RIDING,
         )
         return self._exact_rescore(cand, snap, cells, k, round_output)
 
@@ -2358,7 +2369,8 @@ class IVFIndex:
            broadcast: the candidate list scales with |Q| here, so
            broadcasting it is exactly the collect-contract violation
            this tier exists to avoid — then the lossless bound cut
-           (``_sq_bound_mask``) per (query, batch) slice;
+           (``_sq_bound_mask_multi`` with one query row) per (query,
+           Arrow batch) group;
         3. exact float rescore (survivors rejoin the pruned float
            cells; the query vector rides the survivor rows), global
            ``(dist, id)`` top-k.
@@ -2403,29 +2415,15 @@ class IVFIndex:
             bq_dir, snap, cells, exclude_ids, predicate, cols=("code", "dim")
         )
 
-        # r18 (verdict task 3): stage 1 is a per-cell COGROUP, not a
-        # probes⋈codes fan-out join — codes shuffle once + probe stubs,
-        # and each cell's bits unpack ONCE for all of its probing
-        # queries (``_sign_cut``).  The top-C budget is per (query, WHOLE
-        # cell); at the graded unbounded-C configuration it keeps
-        # everything (results identical, oracle-gated).
-        def bq_cell_cut(cid, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
-            bm = bc_budget.value if bc_budget is not None else None
-            qv = qpdf["query"].to_numpy()
-            Qc = np.stack(qv).astype(np.float64) - bc_thr.value[None, :]
-            ids = vpdf["nid"].to_numpy(dtype=np.int64)
-            sels = _sign_cut(
-                vpdf["code"], int(vpdf["dim"].iloc[0]), Qc,
-                C if bm is None else bm.get(cid, C),
-            )
-            out = _Rows("query")
-            for j, qid in enumerate(qpdf["qid"].to_numpy(dtype=np.int64)):
-                out.add(qid, ids[sels[j]], qv[j])
-            return out.frame()
-
+        # r18 (verdict task 3): stage 1 is the sign kernel on the bulk
+        # runner, not a probes⋈codes fan-out join — codes shuffle once +
+        # probe stubs, and each cell's bits unpack ONCE for all of its
+        # probing queries.  The top-C budget is per (query, WHOLE cell);
+        # at the graded unbounded-C configuration it keeps everything
+        # (results identical, oracle-gated).
         cand1 = self._cell_cogroup(
-            probes, bq_codes, ("code", "dim"), bq_cell_cut,
-            "qid long, query array<float>, neighbor_id long",
+            probes, bq_codes, ("code", "dim"),
+            _sign_kernel(C, bc_thr, bc_budget), _RIDING,
         )
 
         # ---- stage 2: lossless SQ8 bound cut over stage-1 survivors
@@ -2437,24 +2435,19 @@ class IVFIndex:
         cand2_codes = cand1.join(sq_side, "neighbor_id")
 
         def sq_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            out = _Rows("query")
+            out = _Rows(_RIDING)
             for pdf in batches:
                 for qid, grp in pdf.groupby("qid"):
                     qv = grp["query"].iloc[0]
-                    keep = _sq_bound_mask(
-                        grp["code"],
-                        grp["lo"].to_numpy(dtype=np.float64),
-                        grp["hi"].to_numpy(dtype=np.float64),
-                        np.asarray(qv, dtype=np.float32).astype(np.float64),
-                        dim, 8, k,
-                    )
+                    keep = _sq_bound_mask_multi(
+                        grp["code"], grp["lo"], grp["hi"],
+                        np.asarray(qv, dtype=np.float64)[None, :], dim, 8, k,
+                    )[:, 0]
                     ids = grp["neighbor_id"].to_numpy(dtype=np.int64)
                     out.add(int(qid), ids[keep], qv)
             yield from out.emit()
 
-        cand2 = cand2_codes.mapInPandas(
-            sq_cut, schema="qid long, query array<float>, neighbor_id long"
-        )
+        cand2 = cand2_codes.mapInPandas(sq_cut, schema=_RIDING)
         # ---- stage 3: exact float rescore of the remnant
         return self._exact_rescore(cand2, snap, cells, k, round_output)
 
@@ -2636,16 +2629,16 @@ class IVFIndex:
         ``predicate``: optional metadata Column (filtered × SQ8 cell of
         the capability matrix), applied BEFORE the bound cut via a
         column-pruned metadata semi-join — same discipline and reasoning
-        as ``search_pq``.  ``exclude_ids``: optional one-column DataFrame
-        of shadowed ids (the streaming engine's tier="sq8"), anti-joined
-        before the cut for the same losslessness reason.
+        as ``search_pq``.  ``exclude_ids``: optional shadowed ids (the
+        streaming engine's tier="sq8"; a list or a one-column DataFrame,
+        ``_drop_ids``), dropped before the cut for the same losslessness
+        reason.
 
         ``snapshot``: a retained snapshot id / ``"prev"`` / negative
         offset (as in ``search``) — AS-OF search through the quantized
         tier.  Generation-keyed sidecars make this sound: codes for the
         historical snapshot are built from (and GC-protected with) that
         snapshot's own files."""
-        id_col = self.meta["id_col"]
         dim = self.meta["dim"]
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
@@ -2664,24 +2657,8 @@ class IVFIndex:
             cols=("code", "lo", "hi"),
         )
 
-        def approx_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, Q_, cq = bc.value
-            out = _Rows()
-            for pdf in batches:
-                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-                codes = pdf["code"].to_numpy()
-                lo = pdf["lo"].to_numpy(dtype=np.float64)
-                hi = pdf["hi"].to_numpy(dtype=np.float64)
-                for _, qidx, rows in _cell_slices(pdf, cq):
-                    KEEP = _sq_bound_mask_multi(
-                        codes[rows], lo[rows], hi[rows], Q_[qidx], dim, bits, k
-                    )
-                    for j, qi in enumerate(qidx):
-                        out.add(qids_[qi], ids_all[rows][KEEP[:, j]])
-            yield from out.emit()
-
-        cand = cand_codes.mapInPandas(
-            approx_cut, schema="qid long, neighbor_id long"
+        cand = self._serve_cells(
+            cand_codes, bc, _sq_cut_kernel(dim, bits, k), _PAIRS
         )
         return self._exact_rescore(
             cand, snap, needed, k, round_output, queries, qids, Q, qid_col,
@@ -2946,17 +2923,17 @@ class IVFIndex:
         """The BQ stage of the serving sign tiers — all of ``search_bq``
         before its rescore, and stage 1 of ``search_cascade``: the probed
         cells' packed sign codes (pre-cut exclude/predicate,
-        ``_sidecar_cells``) cross Arrow once, each cell slice scores all
-        of its probing queries in one GEMM (``_sign_cut``; the queries
-        are centered by the sidecar's thresholds, the exact rescore uses
-        the UNcentered ones), and each (cell slice of an Arrow batch,
-        query) keeps its top C.  C is the caller's uniform
+        ``_sidecar_cells``) cross Arrow once, and the sign kernel
+        (``_sign_kernel`` on the serving runner) scores each cell slice
+        against all of its probing queries in one GEMM (the queries are
+        centered by the sidecar's thresholds, the exact rescore uses
+        the UNcentered ones): each (cell slice of an Arrow batch, query)
+        keeps its top C.  C is the caller's uniform
         ``candidates_per_cell``, else the per-cell auto budget
         (``_auto_sign_budget``, finding 41; ``tier`` names the caller in
         its warnings).  ``plan`` is the ``_probe_plan`` tuple.  Returns
         the ``(qid, neighbor_id)`` survivors and the auto budget map
         (None for an explicit C)."""
-        id_col = self.meta["id_col"]
         qids, Q, snap, needed, cell_qidx = plan
         C = int(candidates_per_cell) if candidates_per_cell else 8 * k
         budget_map = (
@@ -2971,25 +2948,8 @@ class IVFIndex:
             bq_dir, snap, needed, exclude_ids, predicate, cols=("code", "dim")
         )
 
-        def bq_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, Q_, cq = bc.value
-            Qc_ = Q_ - bc_thr.value[None, :]
-            out = _Rows()
-            for pdf in batches:
-                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-                codes = pdf["code"].to_numpy()
-                dims = pdf["dim"].to_numpy()
-                for cid, qidx, rows in _cell_slices(pdf, cq):
-                    sels = _sign_cut(
-                        codes[rows], int(dims[rows[0]]), Qc_[qidx],
-                        C if budget_map is None else budget_map.get(cid, C),
-                    )
-                    for qi, sel in zip(qidx, sels):
-                        out.add(qids_[qi], ids_all[rows][sel])
-            yield from out.emit()
-
-        cand = cand_codes.mapInPandas(
-            bq_cut, schema="qid long, neighbor_id long"
+        cand = self._serve_cells(
+            cand_codes, bc, _sign_kernel(C, bc_thr, budget_map), _PAIRS
         )
         return cand, budget_map
 
@@ -3169,22 +3129,18 @@ class IVFIndex:
 
         def sq_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qm = bc_q.value
-            out = _Rows()
+            out = _Rows(_PAIRS)
             for pdf in batches:
                 for qid, grp in pdf.groupby("qid"):
-                    keep = _sq_bound_mask(
-                        grp["code"],
-                        grp["lo"].to_numpy(dtype=np.float64),
-                        grp["hi"].to_numpy(dtype=np.float64),
-                        qm[int(qid)], dim, 8, k,
-                    )
+                    keep = _sq_bound_mask_multi(
+                        grp["code"], grp["lo"], grp["hi"],
+                        qm[int(qid)][None, :], dim, 8, k,
+                    )[:, 0]
                     ids = grp["neighbor_id"].to_numpy(dtype=np.int64)
                     out.add(int(qid), ids[keep])
             yield from out.emit()
 
-        cand2 = cand2_codes.mapInPandas(
-            sq_cut, schema="qid long, neighbor_id long"
-        )
+        cand2 = cand2_codes.mapInPandas(sq_cut, schema=_PAIRS)
 
         # ---- stage 3: exact float rescore of the remaining handful
         return self._exact_rescore(
@@ -3359,8 +3315,8 @@ class IVFIndex:
                     (i for _, i in beam), dtype=np.int64, count=len(beam)
                 )
                 Vc = V[idx]
-                # GEMM-form rescore for bit-parity with the flat tier's
-                # local_topk (the beam's diff² navigation values can
+                # expanded-form rescore, like the flat tier's top-k
+                # kernel (the beam's diff² navigation values can
                 # differ in the last ulp)
                 d = (Vc * Vc).sum(axis=1) - 2.0 * (Vc @ qv) + float(qv @ qv)
                 np.maximum(d, 0.0, out=d)
@@ -3372,16 +3328,9 @@ class IVFIndex:
             return pd.concat(frames, ignore_index=True)
 
         cand = g.groupBy("centroid_id").applyInPandas(
-            walk, schema="qid long, neighbor_id long, dist double"
+            walk, schema=_SCORED
         )
-        if exclude_ids is not None:
-            cand = cand.join(
-                exclude_ids.select(
-                    F.col(exclude_ids.columns[0]).alias("neighbor_id")
-                ),
-                "neighbor_id",
-                "left_anti",
-            )
+        cand = _drop_ids(cand, exclude_ids, "neighbor_id")
         if predicate is not None:
             keep_ids = (
                 self.vectors(snapshot=snap)
@@ -3762,7 +3711,6 @@ class IVFIndex:
             bound_cut_mask,
         )
 
-        id_col = self.meta["id_col"]
         spark = self.spark
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
@@ -3782,7 +3730,7 @@ class IVFIndex:
             else None
         )
         # codes cross the Python boundary once and decode once per cell
-        # slice (see search()); the ADC LUT is per (query, cell) pair.
+        # slice (``_serve_cells``); the ADC LUT is per (query, cell) pair.
         # Cut group is (cell slice of an Arrow batch, query) — for the
         # lossless bound a still-lossless superset (exact rescore
         # unchanged); for top-C mode a per-cell-slice C.
@@ -3799,50 +3747,30 @@ class IVFIndex:
             cols=("code", "resid"),
         )
 
-        def adc_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # r18: candidate (qid, id) pairs accumulate across the task and
-            # cross Arrow ONCE per task — the r17 shape yielded one tiny
-            # DataFrame per (cell, query) pair (|Q|·nprobe Arrow batches per
-            # task).  The cut math per (cell slice, query) is UNCHANGED:
-            # same LUT, same d_adc, same argpartition / bound mask — the
-            # candidate SET is identical, only its framing is batched.
+        def adc_cut(cid, Q, cell):
+            # the cut math per (cell slice, query): LUT, d_adc, then the
+            # argpartition top-C or the bound mask
             B = books_bc.value
-            m_, _, _ = B.shape
-            qids_, Qs_, cq = q_bc.value
-            CM = cm_bc.value if cm_bc is not None else None
-            out = _Rows()
+            m_ = B.shape[0]
+            ids = cell["ids"]
+            Cc = np.frombuffer(b"".join(cell["code"]), dtype=np.uint8).reshape(
+                len(ids), m_
+            )
+            resid = np.asarray(cell["resid"], dtype=np.float64)
             cols = np.arange(m_)[None, :]
-            for pdf in batches:
-                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-                codes = pdf["code"].to_numpy()
-                resid_all = pdf["resid"].to_numpy(dtype=np.float64)
-                for cid, qidx, rows in _cell_slices(pdf, cq):
-                    ids = ids_all[rows]
-                    raw = np.frombuffer(b"".join(codes[rows]), dtype=np.uint8)
-                    Cc = raw.reshape(len(ids), m_)
-                    resid = resid_all[rows]
-                    for qi in qidx:
-                        q = Qs_[qi]
-                        if CM is not None:
-                            q = q - CM[cid]
-                        lut = _adc_lut(q, B)
-                        # ADC: d̂ = Σ_j lut[j, code_j] — m lookups/vector
-                        d_adc = lut[cols, Cc].sum(axis=1)
-                        np.maximum(d_adc, 0.0, out=d_adc)
-                        if candidates_per_partition is not None:
-                            keep_n = min(
-                                max(candidates_per_partition, k), len(ids)
-                            )
-                            part = np.argpartition(d_adc, keep_n - 1)[:keep_n]
-                            kept = ids[part]
-                        else:
-                            kept = ids[bound_cut_mask(d_adc, resid, k)]
-                        out.add(qids_[qi], kept)
-            yield from out.emit()
+            for q in Q:
+                if cm_bc is not None:
+                    q = q - cm_bc.value[cid]
+                # ADC: d̂ = Σ_j lut[j, code_j] — m lookups/vector
+                d_adc = _adc_lut(q, B)[cols, Cc].sum(axis=1)
+                np.maximum(d_adc, 0.0, out=d_adc)
+                if candidates_per_partition is not None:
+                    keep_n = min(max(candidates_per_partition, k), len(ids))
+                    yield ids[np.argpartition(d_adc, keep_n - 1)[:keep_n]], None
+                else:
+                    yield ids[bound_cut_mask(d_adc, resid, k)], None
 
-        cand = cand_codes.mapInPandas(
-            adc_cut, schema="qid long, neighbor_id long"
-        )
+        cand = self._serve_cells(cand_codes, q_bc, adc_cut, _PAIRS)
         return self._exact_rescore(
             cand, snap, needed, k, round_output, queries, qids, Q, qid_col,
             qvec_col,
@@ -3872,8 +3800,6 @@ class IVFIndex:
         interplay), so it simply narrows the scan.
         """
         spark = self.spark
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
         if len(qids) == 0:
             return spark.createDataFrame([], "qid long, neighbor_id long, dist_sq double")
@@ -3893,27 +3819,7 @@ class IVFIndex:
         bc = self._query_broadcast(qids, Q, self._cell_map(qids, pairs))
         cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
-        def in_radius(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, Q_, cq = bc.value
-            out = _Rows("dist")
-            for pdf in batches:
-                ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-                vecs = pdf[vec_col].to_numpy()
-                for _, qidx, rows in _cell_slices(pdf, cq):
-                    ids = ids_all[rows]
-                    V = np.stack(vecs[rows]).astype(np.float64)
-                    VV = (V * V).sum(axis=1)
-                    for qi in qidx:
-                        q = Q_[qi]
-                        d = VV - 2.0 * (V @ q) + float(q @ q)
-                        np.maximum(d, 0.0, out=d)
-                        hit = d <= radius_sq
-                        out.add(qids_[qi], ids[hit], d[hit])
-            yield from out.emit()
-
-        out = cand.mapInPandas(
-            in_radius, schema="qid long, neighbor_id long, dist double"
-        )
+        out = self._serve_cells(cand, bc, _radius_kernel(radius_sq), _SCORED)
         d = (
             F.round("dist", 4) if round_output else F.col("dist").cast("double")
         )
@@ -3962,31 +3868,13 @@ class IVFIndex:
                 [], "qid long, neighbor_id long, dist_sq double"
             )
         base = self._float_cells(snap, needed, exclude_ids, predicate)
-        # r18 (finding 48's shape applied to the radius sibling): the scan
-        # is a per-cell COGROUP (``_cell_cogroup``) — cells shuffle once
-        # + probe stubs, one stack per cell.  The distance arithmetic
-        # stays the PER-QUERY matrix-vector expression (these distances
-        # ARE the output values, rounded at 4 decimals — the GEMM form
-        # could differ in the last ulp), and each row's dot product is
-        # row-independent, so the emitted values are byte-identical to
-        # the join shape.
-        def cell_radius(cid, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
-            qv = qpdf["query"].to_numpy()
-            ids = vpdf["nid"].to_numpy(dtype=np.int64)
-            V = np.stack(vpdf["nvec"].to_numpy()).astype(np.float64)
-            VV = (V * V).sum(axis=1)
-            out = _Rows("dist")
-            for j, qid in enumerate(qpdf["qid"].to_numpy(dtype=np.int64)):
-                q = np.asarray(qv[j], dtype=np.float32).astype(np.float64)
-                d = VV - 2.0 * (V @ q) + float(q @ q)
-                np.maximum(d, 0.0, out=d)
-                hit = d <= radius_sq
-                out.add(qid, ids[hit], d[hit])
-            return out.frame()
-
+        # r18 (finding 48's shape applied to the radius sibling): the
+        # radius kernel on the bulk runner — cells shuffle once + probe
+        # stubs, one stack per cell, the same per-query matrix-vector
+        # distances as ``radius_search``
         out = self._cell_cogroup(
             probes, base, (F.col(self.meta["vec_col"]).alias("nvec"),),
-            cell_radius, "qid long, neighbor_id long, dist double",
+            _radius_kernel(radius_sq), _SCORED,
         )
         d = (
             F.round("dist", 4) if round_output else F.col("dist").cast("double")
