@@ -740,7 +740,8 @@ def _hot_cell_index(spark, path):
     return IVFIndex.build(df, path, centroids=C, extra_cols=("label",)), V
 
 
-def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path):
+def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path,
+                                                           monkeypatch):
     """Each tier's bulk form equals its serving form at partial nprobe
     with a predicate, with excluded ids and at a pinned as-of snapshot,
     on a hot cell every query probes, with Arrow batches (37 rows) far
@@ -748,11 +749,14 @@ def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path):
     batches) and the bulk runner (whole cells) run one kernel per tier,
     and no shape of either may drop, duplicate or re-rank a candidate.
     Pairs: float, sq8, cascade at unbounded C, and radius (current
-    snapshot only: ``radius_search`` has no ``snapshot``)."""
+    snapshot only: ``radius_search`` has no ``snapshot``).  The driver
+    runner's budget is 0, so the float serving search takes the Spark
+    serving runner it tests here."""
     import os
 
     import pyarrow.parquet as pq
 
+    monkeypatch.setattr(IVFIndex, "_driver_budget", lambda self: (0, 0))
     idx, V = _hot_cell_index(spark, str(tmp_path / "hot"))
     root = os.path.join(idx.index_dir, "vectors")
     # publish a second generation of the hot cell with its odd ids

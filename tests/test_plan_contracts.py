@@ -10,6 +10,8 @@ Partition-pruning INSET contracts live in tests/test_ivf.py.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,6 +107,38 @@ def test_no_unbounded_cartesian(spark, sf_dir, name):
     against a bounded (query/dim) side."""
     plan = _executed_plan(registry.QUERIES[name](spark, sf_dir))
     assert "CartesianProduct" not in plan, name
+
+
+# the rows whose float serving searches fit the driver runner's budget:
+# with the budget at 0 they run the Spark serving plan
+# (``_float_cells`` + ``_serve_cells`` + ``_finalize_topk``) instead
+SPARK_FLOAT_SERVING = [
+    "ann_ivf_classify",
+    "ann_ivf_cosine",
+    "ann_ivf_exact_when_full_probe",
+    "ann_ivf_ip",
+    "ann_ivf_probe",
+    "ann_ivf_recall_curve",
+    "streaming_compacted_search",
+    "streaming_delete_search",
+    "streaming_ingest_search",
+    "streaming_merged_search",
+    "streaming_upsert_search",
+]
+
+
+@pytest.mark.parametrize("name", SPARK_FLOAT_SERVING)
+def test_spark_float_serving_plan_contracts(spark, sf_dir, monkeypatch, name):
+    """The Spark side of the float serving gate keeps its contracts: no
+    cartesian product, the probed cells pruned at the parquet scan and
+    the cells ranked by the serving runner (``MapInPandas``)."""
+    from vector_search_engine_spark.operators.ivf import IVFIndex
+
+    monkeypatch.setattr(IVFIndex, "_driver_budget", lambda self: (0, 0))
+    plan = _executed_plan(registry.QUERIES[name](spark, sf_dir))
+    assert "CartesianProduct" not in plan, name
+    assert "MapInPandas" in plan, name
+    assert re.search(r"PartitionFilters: \[[^\]]*centroid_id", plan), name
 
 
 def test_knn_filter_reaches_parquet_scan(spark, sf_dir):

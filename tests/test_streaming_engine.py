@@ -13,6 +13,7 @@ from vector_search_engine_spark.operators import knn as knn_ops
 from vector_search_engine_spark.operators.ivf import (
     _DISTRIBUTED_TIERS,
     _SERVING_TIERS,
+    IVFIndex,
 )
 from vector_search_engine_spark.streaming.engine import VectorEngine
 
@@ -410,7 +411,8 @@ def test_compaction_generation_pins_quantized_sidecars(spark, embeddings, engine
     assert os.path.exists(new_codes_dir)  # still retained (prev snapshot)
 
 
-def test_merged_search_pq_tier_equals_exact(spark, embeddings, engine):
+def test_merged_search_pq_tier_equals_exact(spark, embeddings, engine,
+                                            monkeypatch):
     """Every serving tier (pq, sq8/sq4, prefix, prefix_pca, bq, cascade,
     graph, ... — the whole tier table, so a new tier is covered the day
     it lands) swaps only the indexed side's candidate scan; at full probe
@@ -419,7 +421,9 @@ def test_merged_search_pq_tier_equals_exact(spark, embeddings, engine):
     upserted ids cannot distort the k-th upper bound).  A second pass
     runs with tiny Arrow batches, so cells span several batches and one
     batch holds several cells — the kernels' shared cell loop must still
-    give every tier the float tier's result."""
+    give every tier the float tier's result.  The driver runner's budget
+    is 0, so the float tier runs on that cell loop too."""
+    monkeypatch.setattr(IVFIndex, "_driver_budget", lambda self: (0, 0))
     tail = embeddings.filter(F.col("vec_id") >= 400)
     moved = (
         embeddings.filter(F.col("vec_id") < 5)

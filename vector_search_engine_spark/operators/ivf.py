@@ -41,11 +41,13 @@ import json
 import os
 import shutil
 import threading
-from collections import OrderedDict
+from collections import OrderedDict, deque
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +60,7 @@ from vector_search_engine_spark.functions.vector import (
     normalize,
 )
 from vector_search_engine_spark.operators.knn import (
+    DIST_DECIMALS,
     _finalize_topk,
     _queries_df,
     _query_arrays as knn_query_arrays,
@@ -104,6 +107,23 @@ _TILE_CELLS = 16_000_000
 _SCORED = "qid long, neighbor_id long, dist double"
 _PAIRS = "qid long, neighbor_id long"
 _RIDING = "qid long, query array<float>, neighbor_id long"
+
+# The public top-k schema as the Spark plan types it (``rank`` comes from
+# ``row_number`` and is never NULL): the driver runner's result frame
+_TOPK = "qid long, neighbor_id long, rank long not null, dist_sq double"
+
+# Gate decisions each IVFIndex keeps in ``dispatch_log`` (newest last)
+_DISPATCH_LOG = 256
+
+# The float serving search's size gate (``IVFIndex._driver_route``): a
+# search runs on the driver (``IVFIndex._driver_topk``) when its probed
+# rows (+ live delta) hold at most ``_DRIVER_BYTES`` (id plus float32
+# vector each) and it ranks at most ``_DRIVER_PAIRS`` (row, query) pairs.
+# Both sit at the measured driver/Spark crossover (SCALING.md,
+# 2026-10-19; 128-d, 4 vCPU, local[4]): the driver is the faster runner
+# below ~75 MB and ~2-3M pairs, Spark above.
+_DRIVER_BYTES = 64 << 20
+_DRIVER_PAIRS = 2 << 20
 
 
 def _merge_built_partitions(tmp: str | None, out_dir: str) -> None:
@@ -236,7 +256,9 @@ def _sq_bound_mask_multi(
 # yields, for each query row j in order, ``(kept ids, their distances)``
 # — ``None`` distances for a cut kernel.  A kernel never knows which
 # runner calls it: ``IVFIndex._serve_cells`` (serving, cell slices of
-# Arrow batches) or ``IVFIndex._cell_cogroup`` (bulk, whole cells).
+# Arrow batches), ``IVFIndex._cell_cogroup`` (bulk, whole cells) or
+# ``IVFIndex._driver_topk`` (small float serving searches, whole cells
+# read on the driver).
 
 
 def _topk_kernel(k: int):
@@ -334,6 +356,32 @@ def _cell_columns(pdf: pd.DataFrame, names: dict, stack) -> dict:
         if c in cols:
             cols[c] = np.stack(cols[c]).astype(np.float64)
     return cols
+
+
+def _flat_vectors(col, dim: int) -> np.ndarray:
+    """The flat Arrow decode of a ``list<float>`` column (an Arrow array
+    or chunked array) into an (n, dim) float64 matrix: each chunk's
+    ``ListArray.flatten()``, which honours chunk and slice offsets
+    (``.values`` returns the whole child buffer of a slice), and one
+    reshape, with no per-row object array to stack.  A NULL vector
+    raises: an indexed cell never holds one (tombstones live in the
+    delta, whose reader drops them first)."""
+    if col.null_count:
+        raise ValueError("NULL vector in an indexed cell")
+    flat = [c.flatten().to_numpy(zero_copy_only=False) for c in getattr(col, "chunks", [col])]
+    return np.concatenate(flat + [np.empty(0)]).astype(np.float64).reshape(len(col), dim)
+
+
+def _merge_topk(piles: dict, k: int):
+    """The runners' final ``(dist, id)`` merge: ``piles`` maps a query
+    position to the ``(ids, dists)`` its kernels kept in every cell or
+    slice; yields ``(position, ids, dists)`` with at most ``k`` rows in
+    rank order."""
+    for qi, parts in piles.items():
+        ids = np.concatenate([p[0] for p in parts])
+        d = np.concatenate([p[1] for p in parts])
+        order = np.lexsort((ids, d))[:k]
+        yield qi, ids[order], d[order]
 
 
 def _cell_slices(pdf: pd.DataFrame, cell_qidx: dict):
@@ -447,9 +495,6 @@ def _write_centroids_parquet(path: str, C, centroid_ids=None) -> None:
     few-KB table costs ~150 ms of pure scheduling per build/rebalance.
     Schema matches the previous Spark write exactly:
     ``(centroid_id int, centroid array<double>)``."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     ids = (
         np.arange(len(C), dtype=np.int32)
         if centroid_ids is None
@@ -473,6 +518,8 @@ class IVFIndex:
         self.index_dir = index_dir
         with open(os.path.join(index_dir, "meta.json")) as f:
             self.meta = json.load(f)
+        # one dict per serving-route decision (``_driver_route``)
+        self.dispatch_log: deque = deque(maxlen=_DISPATCH_LOG)
         self._load_centroids()
 
     def _load_centroids(self) -> None:
@@ -497,20 +544,14 @@ class IVFIndex:
             # driver-side Arrow read: the centroid table is a few KB and
             # lives beside the other driver-written metadata artifacts —
             # a Spark job to collect it is ~200 ms of pure scheduling
-            import glob as _glob
-
-            import pyarrow.parquet as pq
-
             tbls = [
                 pq.read_table(f)
                 for f in sorted(
-                    _glob.glob(
+                    glob.glob(
                         os.path.join(self.index_dir, cfile, "*.parquet")
                     )
                 )
             ]
-            import pyarrow as pa
-
             tbl = pa.concat_tables(tbls)
             cids = tbl.column("centroid_id").to_numpy().astype(np.int64)
             cents = np.array(
@@ -854,8 +895,7 @@ class IVFIndex:
         else:
             raise ValueError(f"unknown snapshot {snapshot!r}")
         dirs = [
-            os.path.join(root, f"gen={g}", f"centroid_id={c}")
-            for c, g in sorted(cells.items(), key=lambda kv: int(kv[0]))
+            self._cell_dir(c, g) for c, g in sorted(cells.items(), key=lambda kv: int(kv[0]))
         ]
         if not dirs:
             id_col, vec_col = self.meta["id_col"], self.meta["vec_col"]
@@ -932,19 +972,15 @@ class IVFIndex:
         cascade's broadcast guard, the filtered planner — would otherwise
         pay O(n_cells) driver footer reads per call).  Empty dict for a
         pre-manifest raw layout."""
-        import pyarrow.parquet as pq
-
         if not snap or "cells" not in snap:
             return {}
-        root = os.path.join(self.index_dir, "vectors")
 
         def count() -> dict[int, int]:
             counts: dict[int, int] = {}
             for c, g in snap["cells"].items():
-                d = os.path.join(root, f"gen={g}", f"centroid_id={c}")
                 n = sum(
                     pq.ParquetFile(fp).metadata.num_rows
-                    for fp in glob.glob(os.path.join(d, "*.parquet"))
+                    for fp in glob.glob(os.path.join(self._cell_dir(c, g), "*.parquet"))
                 )
                 if n > 0:
                     counts[int(c)] = n
@@ -954,6 +990,10 @@ class IVFIndex:
         return count() if gen is None else self._memo(
             "_cell_counts_cache", gen, count, 17
         )
+
+    def _cell_dir(self, cell, gen) -> str:
+        """The directory of ``cell``'s rows in generation ``gen``."""
+        return os.path.join(self.index_dir, "vectors", f"gen={gen}", f"centroid_id={cell}")
 
     def _memo(self, name: str, key, make, bound: int, release=None):
         """The per-instance memo rule: ``self.<name>`` is an
@@ -1108,15 +1148,100 @@ class IVFIndex:
                             out.add(qids[qi], ids, d)
                         else:
                             piles.setdefault(qi, []).append((ids, d))
-            for qi, parts in piles.items():
-                ids = np.concatenate([p[0] for p in parts])
-                d = np.concatenate([p[1] for p in parts])
-                order = np.lexsort((ids, d))[:k]
-                out.add(qids[qi], ids[order], d[order])
+            for qi, ids, d in _merge_topk(piles, k):
+                out.add(qids[qi], ids, d)
             yield from out.emit()
 
         serve.__name__ = kernel.__name__  # plans name the tier kernel
         return cand.mapInPandas(serve, schema=schema)
+
+    def _driver_budget(self) -> tuple[int, int]:
+        """The driver runner's budget, ``(_DRIVER_BYTES, _DRIVER_PAIRS)``
+        (a method, so a test can close the gate by patching it to 0s)."""
+        return _DRIVER_BYTES, _DRIVER_PAIRS
+
+    def _driver_route(self, op: str, why, plan=None, delta_rows=None) -> bool:
+        """The size gate of the float serving search: True sends the call
+        to the driver runner (``_driver_topk``).  ``why`` is a condition
+        the caller already found closed (tier, predicate, DataFrame
+        exclusion); otherwise, for the ``_probe_plan`` ``plan``, the gate
+        closes without a manifest or when its scan exceeds
+        ``_driver_budget``: the rows (probed-cell rows from the memoized
+        footer counts ``_snapshot_counts`` + ``delta_rows()``, the live
+        delta's rows, asked for only when the indexed side fits) × (8 +
+        4·dim) bytes, the id plus the float32 vector, or the (row, query)
+        pairs the kernels rank (each cell's rows × its probing queries;
+        every query probes the delta).  Each decision appends one event
+        to ``dispatch_log``: ``{"op", "route": "driver"|"spark", "rows",
+        "pairs", "budget_bytes", "budget_pairs", "why"}``."""
+        rows, pairs, budget = None, None, (None, None)
+        if why is None and not (plan[2] and "cells" in plan[2]):
+            why = "no manifest"
+        elif why is None:
+            counts, budget = self._snapshot_counts(plan[2]), self._driver_budget()
+            rows = sum(counts.get(c, 0) for c in plan[3])
+            pairs = sum(counts.get(c, 0) * len(q) for c, q in plan[4].items())
+            width = 8 + 4 * int(self.meta["dim"])
+            over = lambda: rows * width > budget[0] or pairs > budget[1]  # noqa: E731
+            if not over() and delta_rows is not None:
+                n = delta_rows()
+                rows, pairs = rows + n, pairs + n * len(plan[0])
+            why = "over budget" if over() else None
+        self.dispatch_log.append({"op": op, "route": "spark" if why else "driver", "rows": rows,
+                                  "pairs": pairs, "budget_bytes": budget[0],
+                                  "budget_pairs": budget[1], "why": why})
+        return why is None
+
+    def _driver_topk(self, plan, k: int, exclude_ids, round_output: bool = True,
+                     delta=None) -> DataFrame:
+        """The driver runner of the float serving search: read each
+        probed cell of the ``_probe_plan`` ``plan``'s pinned snapshot
+        whole with pyarrow (the files ``_snapshot_counts`` counts),
+        decode it flat (``_flat_vectors``), drop ``exclude_ids`` (any
+        iterable of ids), and run ``_topk_kernel(k)`` on it with its
+        probing queries, one cell at a time, so at most one decoded cell
+        is held; ``delta`` — the live delta's ``(ids, vectors)`` — is one
+        more cell every query probes.  Each query's kept rows merge by
+        ``(dist, id)`` (``_merge_topk``) and return as ONE
+        ``createDataFrame`` in the public schema, so no Spark job runs;
+        ``round_output`` applies ``F.round`` in Spark, which keeps its
+        HALF_UP rounding."""
+        id_col, vec_col = self.meta["id_col"], self.meta["vec_col"]
+        qids, Q, snap, _, cell_qidx = plan
+        drop = np.fromiter(() if exclude_ids is None else exclude_ids, np.int64)
+        counts, Q = self._snapshot_counts(snap), Q.astype(np.float64)
+
+        def cells():
+            for cid, qidx in sorted(cell_qidx.items()):
+                if counts.get(cid):  # a cell with rows must still hold its files
+                    cell_dir = self._cell_dir(cid, snap["cells"][str(cid)])
+                    files = sorted(glob.glob(os.path.join(cell_dir, "*.parquet")))
+                    if not files:
+                        raise FileNotFoundError(f"pinned cell {cell_dir} is gone")
+                    t = pa.concat_tables([pq.ParquetFile(f).read(columns=[id_col, vec_col])
+                                         for f in files])
+                    ids = t.column(id_col).to_numpy().astype(np.int64)
+                    keep = ~np.isin(ids, drop)
+                    V = _flat_vectors(t.column(vec_col), int(self.meta["dim"]))
+                    yield cid, qidx, ids[keep], V[keep]
+            if delta is not None:  # the live delta: every query probes it
+                yield None, range(len(qids)), *delta
+
+        kernel, piles = _topk_kernel(k), {}
+        for cid, qidx, ids, V in cells():
+            if len(ids):
+                for qi, hit in zip(qidx, kernel(cid, Q[qidx], {"ids": ids, "vec": V})):
+                    piles.setdefault(qi, []).append(hit)
+        rows = _Rows(_SCORED)
+        for qi, ids, d in _merge_topk(piles, k):
+            rows.add(qids[qi], ids, d)
+        empty = pd.DataFrame(columns=["qid", "neighbor_id", "dist"])
+        pdf = (rows.frame() if rows.q else empty).rename(columns={"dist": "dist_sq"})
+        pdf.insert(2, "rank", pdf.groupby("qid").cumcount() + 1)
+        out = self.spark.createDataFrame(pdf, _TOPK)
+        if round_output:
+            out = out.withColumn("dist_sq", F.round("dist_sq", DIST_DECIMALS))
+        return out
 
     def _float_cells(self, snap, cells, exclude_ids, predicate) -> DataFrame:
         """``(centroid_id, id, vector)`` rows of the pinned snapshot's
@@ -1228,10 +1353,34 @@ class IVFIndex:
         ``snapshot``: as-of search — a retained ``snapshot_id``, negative
         offset, or ``"prev"`` (see ``manifest_at``); probes use the
         centroid geometry that was current AT that snapshot.
+
+        Routing: one size gate (``_driver_route``) picks the runner after
+        the probe plan pins the snapshot.  With no ``predicate``,
+        ``exclude_ids`` ``None`` or an iterable of ids (not a DataFrame),
+        and the probed cells' rows (parquet footer counts of the pinned
+        snapshot) × (8 + 4·dim) bytes within ``_DRIVER_BYTES`` and their
+        (row, probing query) pairs within ``_DRIVER_PAIRS`` (constants at
+        the measured driver/Spark crossover, SCALING.md), the driver runner (``_driver_topk``) reads those cells with
+        pyarrow and returns a local DataFrame — no Spark job; rounding
+        stays ``F.round`` in Spark.  Every other call runs the Spark plan
+        (``_serve_cells``).  Both return the same rows; the decision is
+        logged in ``dispatch_log``.
         """
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
             return self._empty_topk()
+        return self._float_serve(plan, k, exclude_ids, predicate, round_output)
+
+    def _float_serve(self, plan, k: int, exclude_ids, predicate,
+                     round_output: bool) -> DataFrame:
+        """``search`` past its probe plan (``_probe_plan``): the size gate
+        and the runner it picks.  ``VectorEngine.search`` calls it with
+        the plan it pinned itself, so a search the gate sends to Spark
+        never plans its probes twice."""
+        why = ("predicate" if predicate is not None else "DataFrame exclusion"
+               if isinstance(exclude_ids, DataFrame) else None)
+        if self._driver_route("search", why, plan):
+            return self._driver_topk(plan, k, exclude_ids, round_output)
         qids, Q, snap, needed, cell_qidx = plan
         bc = self._query_broadcast(qids, Q, cell_qidx)
         cand_topk = self._serve_cells(

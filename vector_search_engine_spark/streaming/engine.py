@@ -36,6 +36,8 @@ import time
 import uuid
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +45,7 @@ from vector_search_engine_spark.operators.ivf import (
     _DISTRIBUTED_TIERS,
     _SERVING_TIERS,
     IVFIndex,
+    _flat_vectors,
     _run_tier,
 )
 from vector_search_engine_spark.operators.knn import (
@@ -359,12 +362,19 @@ class VectorEngine:
         )
 
     def delta_latest(self, seqs: list[int] | None = None) -> DataFrame:
-        """One row per id: the highest-_seq version (upsert semantics)."""
+        """One row per id: its latest version (upsert semantics) — the
+        highest ``_seq``, and within one seq (a batch that carries an id
+        twice) the first row by parquet file name, then row index in the
+        file.  ``_delta_arrays`` applies this same key on the driver."""
         from pyspark.sql import Window
 
         id_col = self.index.meta["id_col"]
         vec_col = self.index.meta["vec_col"]
-        w = Window.partitionBy(id_col).orderBy(F.col("_seq").desc())
+        seqs = self._live_seqs() if seqs is None else seqs
+        # a row's place in its seq: the scan's hidden file metadata (an
+        # empty delta has no scan, and no rows to order)
+        place = ["_metadata.file_name", "_metadata.row_index"] if seqs else []
+        w = Window.partitionBy(id_col).orderBy(F.col("_seq").desc(), *place)
         return (
             self.delta(seqs)
             .withColumn("_rn", F.row_number().over(w))
@@ -434,23 +444,58 @@ class VectorEngine:
         cell's population (``IVFIndex._auto_sign_budget``, finding 41 —
         the fixed 8·k default collapsed recall on clustered corpora);
         an explicit value is the uniform per-cell serving knob.
-        The delta side always scans exact floats, deltas are small."""
+        The delta side always scans exact floats, deltas are small.
+
+        Routing (the float tier only): after pinning the live delta seqs
+        and then the manifest (the ``_merged`` order), one size gate
+        (``IVFIndex._driver_route``) sends a search with no
+        ``predicate`` whose probed-cell rows plus live delta rows
+        (parquet footer counts; the delta's footers are opened only when
+        the probed cells alone fit) × (8 + 4·dim) bytes fit
+        ``ivf._DRIVER_BYTES`` and whose ranked (row, query) pairs fit
+        ``ivf._DRIVER_PAIRS`` to the driver runner
+        (``IVFIndex._driver_topk``): the pinned delta is read with
+        pyarrow (each id's ``delta_latest`` version wins; a tombstone
+        shadows but is not scanned) and ranked as one more cell every
+        query probes, no Spark job runs, and ``dist_sq`` is rounded by
+        ``F.round`` in Spark.  Every other call runs the Spark plan below
+        with the same rows, reusing the pinned seqs, the collected query
+        arrays and the probe plan; each decision is logged in
+        ``index.dispatch_log`` as op ``"engine.search"``."""
+        indexed = lambda shadowed: _run_tier(  # noqa: E731
+            self.index, _SERVING_TIERS, tier, queries, candidates_per_cell,
+            k=k, nprobe=nprobe, exclude_ids=shadowed, predicate=predicate,
+            round_output=False,
+        )
+        seqs = None
+        if tier != "float" or predicate is not None:
+            why = "tier" if tier != "float" else "predicate"
+            self.index._driver_route("engine.search", why)
+        else:
+            seqs = self._live_seqs()  # pinned before the manifest
+            plan = self.index._probe_plan(queries, nprobe, None, "qid", "query")
+            if plan is not None:
+                queries, files = plan[:2], []  # the query arrays, collected once
+                delta_rows = lambda: self._delta_rows(seqs, files)  # noqa: E731
+                if self.index._driver_route("engine.search", None, plan, delta_rows):
+                    shadowed, live = self._delta_arrays(files)
+                    return self.index._driver_topk(plan, k, shadowed, delta=live)
+                indexed = lambda shadowed: self.index._float_serve(  # noqa: E731
+                    plan, k, shadowed, None, False
+                )
         # shadowed ids exclude via anti-join — the delta can be arbitrarily
         # large under sustained ingest; ids never visit the driver.  Each
         # tier drops them where its cut stays exact: pre-cut for the
         # lossless tiers and the sign tiers' stage 1, after the walk for
         # graph (removing nodes pre-walk would disconnect the graph).
         return self._merged(
-            lambda shadowed: _run_tier(
-                self.index, _SERVING_TIERS, tier, queries, candidates_per_cell,
-                k=k, nprobe=nprobe, exclude_ids=shadowed, predicate=predicate,
-                round_output=False,
-            ),
+            indexed,
             lambda live, **cols: knn_exact(
                 live, queries, k=k, round_output=False, **cols
             ),
             predicate,
             k,
+            seqs,
         )
 
     def search_filtered(
@@ -599,7 +644,41 @@ class VectorEngine:
             predicate,
         )
 
-    def _merged(self, indexed, delta, predicate, k: int | None = None):
+    def _delta_rows(self, seqs, files: list) -> int:
+        """Row count of the pinned live ``seqs`` from their parquet
+        footers; fills ``files`` with their ``(seq, ParquetFile)`` pairs
+        in ``delta_latest``'s tie-break order (seq, then file name)."""
+        files += [
+            (s, pq.ParquetFile(f)) for s in seqs
+            for f in sorted(glob.glob(os.path.join(self.delta_dir, f"_seq={s}", "*.parquet")))
+        ]
+        return sum(f.metadata.num_rows for _, f in files)
+
+    def _delta_arrays(self, files):
+        """The pinned delta on the driver, for the driver runner:
+        ``files`` as ``_delta_rows`` fills them.  Each id's latest
+        version wins by ``delta_latest``'s key — the highest seq, then
+        the first row in (file, row) order, which a stable sort on
+        ``(id, -seq)`` keeps.  Returns every latest id — each shadows its
+        indexed version — and the ``(ids, (n, dim) float64 vectors)`` of
+        the latest rows that hold a vector (a NULL-vector tombstone
+        shadows but is not scanned), or ``None`` for an empty delta."""
+        id_col, vec_col = self.index.meta["id_col"], self.index.meta["vec_col"]
+        if not files:
+            return [], None
+        tbls = [f.read(columns=[id_col, vec_col]) for _, f in files]
+        t = pa.concat_tables(tbls)
+        ids = t.column(id_col).to_numpy()
+        seq = np.repeat([s for s, _ in files], [x.num_rows for x in tbls])
+        order = np.lexsort((-seq, ids))  # stable: file, row order kept
+        latest = order[np.unique(ids[order], return_index=True)[1]]
+        vecs = t.column(vec_col).take(latest)
+        live = vecs.is_valid().to_numpy()
+        V = _flat_vectors(vecs.filter(pa.array(live)), int(self.index.meta["dim"]))
+        return ids[latest], (ids[latest][live], V)
+
+    def _merged(self, indexed, delta, predicate, k: int | None = None,
+                seqs: list[int] | None = None):
         """The one merged read (reference ``engine.h:100-144``) behind
         every search method: pin the delta snapshot ONCE, so the
         exclusion and the delta scan see the same seq set even if a
@@ -616,10 +695,12 @@ class VectorEngine:
         4-decimal tie between sources by id instead of by the true
         distance, diverging from the exact oracle — rounded once at
         output; without ``k`` (radius search) the merge is a plain union
-        (id sets are disjoint by the exclusion), rounded once."""
+        (id sets are disjoint by the exclusion), rounded once.  ``seqs``:
+        the live seqs a caller already pinned (before its manifest, as
+        ``search`` does), else pinned here."""
         id_col = self.index.meta["id_col"]
         vec_col = self.index.meta["vec_col"]
-        latest = self.delta_latest(seqs=self._live_seqs())
+        latest = self.delta_latest(seqs=self._live_seqs() if seqs is None else seqs)
         indexed_part = indexed(latest.select(id_col))
         live = latest.filter(F.col(vec_col).isNotNull())
         if predicate is not None:
