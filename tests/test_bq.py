@@ -29,7 +29,8 @@ def test_bq_encode_roundtrip_bits(spark, embeddings):
 def test_bq_rescore_exhaustive_is_exact(spark, embeddings):
     """Unbounded C keeps every candidate, so the float rescore is
     exhaustive and the output is identical to exact kNN — the lossless
-    end of the 1-bit C ladder (registry row knn_bq_rescore_exhaustive)."""
+    end of the 1-bit C ladder (registry row knn_bq_rescore_exhaustive).
+    The same holds at C equal to the row count, with centered codes."""
     q = knn_ops.make_queries(embeddings)
     want = [
         tuple(r)
@@ -37,15 +38,16 @@ def test_bq_rescore_exhaustive_is_exact(spark, embeddings):
         .orderBy("qid", "rank")
         .collect()
     ]
-    got = [
-        tuple(r)
-        for r in bq_ops.knn_bq_rescore(
-            embeddings, q, k=10, candidates_per_partition=1 << 31
-        )
-        .orderBy("qid", "rank")
-        .collect()
-    ]
-    assert got == want
+    for C, center in ((1 << 31, False), (embeddings.count(), True)):
+        got = [
+            tuple(r)
+            for r in bq_ops.knn_bq_rescore(
+                embeddings, q, k=10, candidates_per_partition=C, center=center
+            )
+            .orderBy("qid", "rank")
+            .collect()
+        ]
+        assert got == want, (C, center)
 
 
 def test_bq_rescore_reports_true_distances_and_recall(spark, embeddings):

@@ -147,6 +147,32 @@ def test_gate_sides_return_identical_rows(engines, embeddings, monkeypatch, case
         ]
 
 
+def test_all_excluded_driver_search_runs_no_spark_job(engines, embeddings):
+    """A driver-side search whose every probed row is excluded, with no
+    delta, returns its empty top-k without a Spark job: the query set is
+    pre-collected, and building and collecting the result launch no job
+    in the search's job group."""
+    eng = engines["live"]
+    qrows = _queries(embeddings).collect()
+    queries = (
+        np.array([r.qid for r in qrows], dtype=np.int64),
+        np.array([r.query for r in qrows], dtype=np.float32),
+    )
+    sc = eng.spark.sparkContext
+    group = "all_excluded_driver_search"
+    sc.setJobGroup(group, group)
+    try:
+        rows = eng.index.search(
+            queries, k=10, nprobe=CELLS, exclude_ids=list(range(500))
+        ).collect()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == []
+    assert eng.index.dispatch_log[-1]["route"] == "driver"
+    assert jobs == []
+
+
 def test_engine_delta_rules_hold_on_the_driver_runner(engines, embeddings):
     """Read against the visible set: a tombstoned id never returns, an
     id re-inserted after its tombstone does, an upserted id returns at

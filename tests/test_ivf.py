@@ -18,11 +18,20 @@ def index(spark, embeddings, tmp_path_factory):
     return IVFIndex.build(embeddings, d, n_centroids=8, extra_cols=("label",))
 
 
-def test_full_probe_equals_exact(spark, embeddings, index):
+def test_full_probe_equals_exact(spark, embeddings, index, monkeypatch):
+    """Flat ``knn_exact`` (one cell every query probes) equals the full
+    probe on both sides of the driver gate: the driver runner and, with
+    its budget at 0, the Spark serving runner."""
     q = knn_ops.make_queries(embeddings, n=10)
     exact = knn_ops.knn_exact(embeddings, q, k=10).orderBy("qid", "rank")
+    want = [tuple(r) for r in exact.collect()]
     ann = index.search(q, k=10, nprobe=8).orderBy("qid", "rank")
-    assert [tuple(r) for r in ann.collect()] == [tuple(r) for r in exact.collect()]
+    assert [tuple(r) for r in ann.collect()] == want
+    assert index.dispatch_log[-1]["route"] == "driver"
+    monkeypatch.setattr(IVFIndex, "_driver_budget", lambda self: (0, 0))
+    ann = index.search(q, k=10, nprobe=8).orderBy("qid", "rank")
+    assert [tuple(r) for r in ann.collect()] == want
+    assert index.dispatch_log[-1]["route"] == "spark"
 
 
 def test_recall_monotone_in_nprobe(spark, embeddings, index):
@@ -751,7 +760,8 @@ def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path,
     Pairs: float, sq8, cascade at unbounded C, and radius (current
     snapshot only: ``radius_search`` has no ``snapshot``).  The driver
     runner's budget is 0, so the float serving search takes the Spark
-    serving runner it tests here."""
+    serving runner it tests here.  Each pair's two sides are collected
+    in one action (a union tagged by side), to save per-job overhead."""
     import os
 
     import pyarrow.parquet as pq
@@ -778,6 +788,8 @@ def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path,
         [(int(i), V[i].tolist()) for i in rows], "qid long, query array<float>"
     )
     qrows = q.collect()
+    qt = (np.array([r.qid for r in qrows], dtype=np.int64),
+          np.array([r.query for r in qrows], dtype=np.float32))
     pairs = set(idx.probe_pairs(
         np.array([r.qid for r in qrows], dtype=np.int64),
         np.array([r.query for r in qrows], dtype=np.float32), nprobe=2,
@@ -821,11 +833,18 @@ def test_search_distributed_partial_probe_identity_hot_cell(spark, tmp_path,
             for snapshot in (None, "prev") if ranked else (None,):
                 snap = {"snapshot": snapshot} if ranked else {}
                 for kw, dkw in tier_cases:
-                    a = serve(q, **args, **snap, **kw)
+                    a = serve(qt, **args, **snap, **kw)
                     b = bulk(q, **args, **snap, **dkw)
                     order = ("qid", "rank" if ranked else "neighbor_id")
-                    want = [tuple(r) for r in a.orderBy(*order).collect()]
-                    got = [tuple(r) for r in b.orderBy(*order).collect()]
+                    # both sides in one collect, each row tagged with its side
+                    both = (
+                        a.select(F.lit(0).alias("_side"), *a.columns)
+                        .unionByName(b.select(F.lit(1).alias("_side"), *a.columns))
+                        .orderBy("_side", *order)
+                        .collect()
+                    )
+                    want = [tuple(r)[1:] for r in both if r._side == 0]
+                    got = [tuple(r)[1:] for r in both if r._side == 1]
                     where = (serve.__name__, snapshot, kw)
                     if ranked:
                         assert len(want) == 10 * len(rows), where
@@ -1813,7 +1832,6 @@ def test_topk_kernel_ties_small_cell_and_tiling(monkeypatch):
     smallest ids, a cell smaller than k returns every row, and tiling
     the query axis (``_TILE_CELLS``) keeps the same rows."""
     from vector_search_engine_spark.functions.vector import l2_sq_matrix
-    from vector_search_engine_spark.operators import ivf
 
     rng = np.random.default_rng(5)
     V = rng.normal(size=(30, 6))
@@ -1836,14 +1854,14 @@ def test_topk_kernel_ties_small_cell_and_tiling(monkeypatch):
             list(zip(d, i)) for i, d in kernel(0, Q, cell)
         ]
 
-    top5 = got(ivf._topk_kernel(5))
+    top5 = got(knn_ops._topk_kernel(5))
     assert top5 == want(5)
     assert sorted(i for _, i in top5[0][2:]) == [184, 185, 186]
-    assert got(ivf._topk_kernel(50)) == want(30)
+    assert got(knn_ops._topk_kernel(50)) == want(30)
     # one query per tile: the same rows; a one-column GEMM may round a
     # distance's last ulp differently
-    monkeypatch.setattr(ivf, "_TILE_CELLS", len(V))
-    tiled = got(ivf._topk_kernel(5))
+    monkeypatch.setattr(knn_ops, "_TILE_CELLS", len(V))
+    tiled = got(knn_ops._topk_kernel(5))
     assert [[i for _, i in r] for r in tiled] == [[i for _, i in r] for r in top5]
     np.testing.assert_allclose(
         [[d for d, _ in r] for r in tiled], [[d for d, _ in r] for r in top5],
@@ -1880,8 +1898,6 @@ def test_sq_cut_kernel_keeps_true_topk_for_one_query_row():
 
 
 def test_radius_kernel_equals_brute_force():
-    from vector_search_engine_spark.operators import ivf
-
     rng = np.random.default_rng(7)
     V = rng.normal(size=(300, 8))
     Q = rng.normal(size=(4, 8))
@@ -1892,7 +1908,7 @@ def test_radius_kernel_equals_brute_force():
     g = mid + int(np.argmax(s[mid + 1 : mid + 50] - s[mid : mid + 49]))
     radius_sq = float((s[g] + s[g + 1]) / 2)
     ids = np.arange(1000, 1300, dtype=np.int64)
-    got = list(ivf._radius_kernel(radius_sq)(0, Q, {"ids": ids, "vec": V}))
+    got = list(knn_ops._radius_kernel(radius_sq)(0, Q, {"ids": ids, "vec": V}))
     for j, (hit, d) in enumerate(got):
         want = np.flatnonzero(D[:, j] <= radius_sq)
         assert hit.tolist() == ids[want].tolist()
@@ -1900,7 +1916,7 @@ def test_radius_kernel_equals_brute_force():
 
 
 def test_sign_kernel_keeps_min_budget_and_cell_rows():
-    from vector_search_engine_spark.operators import ivf
+    from vector_search_engine_spark.operators import bq
 
     rng = np.random.default_rng(8)
     dim = 12
@@ -1920,7 +1936,7 @@ def test_sign_kernel_keeps_min_budget_and_cell_rows():
         (11, {0: 9}, 1, 11),  # C for a cell outside the budget
         (100, {0: 64}, 0, 40),
     ):
-        got = ivf._sign_kernel(C, thr, budget)(cid, Q, cell)
+        got = bq._sign_kernel(C, thr, budget)(cid, Q, cell)
         assert len(got) == len(Q)
         for kept, d in got:
             assert d is None

@@ -5,6 +5,7 @@ pandas and sql paths agree exactly."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from vector_search_engine_spark.operators import knn as knn_ops
@@ -157,6 +158,78 @@ def test_mass_duplicate_vectors_tie_break_exact(spark):
     # all duplicates are at distance 0; (dist, id) order = ids 0..9
     assert [r.neighbor_id for r in res] == list(range(10))
     assert all(r.dist_sq == 0.0 for r in res)
+
+
+@pytest.mark.parametrize("metric", ["l2_sq", "cosine", "ip"])
+@pytest.mark.parametrize("n", [40, 400])
+def test_topk_kernel_matches_lexsort_reference(monkeypatch, metric, n):
+    """The float kernel every flat and probed scan runs keeps each
+    query's exact top-k — the NumPy ``(key, id)`` lexsort, key = dist
+    for L2 and −sim for cosine and IP — below the selection threshold
+    (full sort) and above it (argpartition pre-cut), where a
+    mass-duplicate tie group straddles the k-th place: the pre-cut must
+    widen to the whole group so the smallest ids place.  A query tile
+    split by a small ``_TILE_CELLS`` keeps the same rows; k = 0 keeps
+    none."""
+    from vector_search_engine_spark.functions.vector import (
+        cosine_sim_matrix,
+        ip_matrix,
+        l2_sq_matrix,
+    )
+
+    k = 5
+    rng = np.random.default_rng(3)
+    V = rng.normal(size=(n, 8))
+    Q = rng.normal(size=(6, 8))
+    u = rng.normal(size=8)
+    u -= (u @ Q[0]) / (Q[0] @ Q[0]) * Q[0]
+    u /= np.linalg.norm(u)
+    # for query 0: two rows ahead of a 3k-row duplicate group, so the
+    # k-th place falls inside the group
+    if metric == "ip":
+        V[0], V[1], dup = 2.5 * Q[0], 2.2 * Q[0], 2.0 * Q[0]
+    else:
+        V[0], V[1], dup = Q[0], Q[0] + 0.05 * u, Q[0] + 0.3 * u
+    group = np.arange(n // 2, n // 2 + 3 * k)
+    V[group] = dup
+    ids = rng.permutation(np.arange(1000, 1000 + n)).astype(np.int64)
+    D = {"l2_sq": l2_sq_matrix, "cosine": cosine_sim_matrix, "ip": ip_matrix}[
+        metric
+    ](V, Q)
+    key = D if metric == "l2_sq" else -D
+    want = [
+        [(ids[r], D[r, j]) for r in np.lexsort((ids, key[:, j]))[:k]]
+        for j in range(len(Q))
+    ]
+
+    def got(k=k):
+        kernel = knn_ops._topk_kernel(k, metric)
+        return [list(zip(i, d)) for i, d in kernel(0, Q, {"ids": ids, "vec": V})]
+
+    assert (n > knn_ops._SORT_ROWS_PER_K * k) == (n == 400)
+    top = got()
+    assert top == want
+    assert got(0) == [[]] * len(Q)
+    placed = [i for i, _ in top[0][2:]]
+    assert placed == sorted(ids[group])[: k - 2]
+    monkeypatch.setattr(knn_ops, "_TILE_CELLS", 2 * n)  # two queries per tile
+    tiled = got()
+    assert [[i for i, _ in r] for r in tiled] == [[i for i, _ in r] for r in top]
+    np.testing.assert_allclose(
+        [[d for _, d in r] for r in tiled], [[d for _, d in r] for r in top],
+        rtol=1e-12, atol=1e-12,
+    )
+
+
+def test_merge_topk_honours_metric_direction():
+    """The runners' per-query merge ranks by ascending distance for L2
+    and descending similarity for cosine and IP, ties by id."""
+    piles = {0: [(np.array([5, 3]), np.array([0.2, 0.9])),
+                 (np.array([1, 4]), np.array([0.9, 0.5]))]}
+    ((_, ids, d),) = knn_ops._merge_topk(piles, 3)
+    assert ids.tolist() == [5, 4, 1] and d.tolist() == [0.2, 0.5, 0.9]
+    ((_, ids, d),) = knn_ops._merge_topk(piles, 3, "cosine")
+    assert ids.tolist() == [1, 3, 4] and d.tolist() == [0.9, 0.9, 0.5]
 
 
 def test_precollected_query_tuple_matches_dataframe(spark, embeddings):

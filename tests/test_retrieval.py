@@ -224,7 +224,8 @@ def test_prefix_rescore_prunes_on_decaying_spectrum():
 def test_ivf_search_prefix_equals_float_probe(spark, sf_dir, embeddings):
     """The prefix cut composed inside IVF cells is lossless at EVERY
     nprobe: output identical to search() — and to exact kNN at full
-    probe — for any prefix width; predicate composes."""
+    probe — for any prefix width; predicate composes.  At full probe the
+    flat ``knn_prefix_rescore`` (the same kernel on one cell) agrees."""
     from vector_search_engine_spark.operators import ivf as ivf_mod
 
     idx = ivf_mod.build_or_load(spark, sf_dir)
@@ -239,6 +240,13 @@ def test_ivf_search_prefix_equals_float_probe(spark, sf_dir, embeddings):
                 "rank",
             )
             assert got == want, (nprobe, dpv)
+            if nprobe == nc:
+                flat = _rows(
+                    knn_ops.knn_prefix_rescore(embeddings, q, k=10, prefix_dims=dpv),
+                    "qid",
+                    "rank",
+                )
+                assert flat == got, dpv
     pred = F.col("label") < 5
     want = _rows(idx.search(q, k=10, nprobe=nc, predicate=pred), "qid", "rank")
     got = _rows(

@@ -29,12 +29,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_engine_spark.functions.vector import l2_sq
 from vector_search_engine_spark.operators.knn import (
-    _finalize_topk,
+    _PAIRS,
+    _empty_topk,
+    _exact_rescore,
+    _flat_scan,
     _queries_df,
     _query_arrays,
 )
@@ -130,7 +133,9 @@ def knn_bq_rescore(
 ) -> DataFrame:
     """Two-stage BQ search: the packed-code scan ranks by the asymmetric
     score ``(q − t) · sign(v − t)`` and emits top-C candidates per
-    partition; exact float rescore + global (dist, id) top-k.  Output
+    Arrow batch (the IVF sign kernel ``_sign_kernel`` on a flat scan);
+    the exact float rescore the quantized IVF tiers end in
+    (``knn._exact_rescore``) + global (dist, id) top-k.  Output
     schema and distance convention identical to ``knn_exact`` — only
     recall, never reported values, depends on the code quality.
 
@@ -138,60 +143,52 @@ def knn_bq_rescore(
     aggregation pass) — required for non-negative embedding families
     where sign-at-zero stores no information; a no-op in expectation on
     zero-mean data."""
-    spark = vectors.sparkSession
     C = candidates_per_partition or 8 * k
     qids, Q = _query_arrays(queries)
     if len(qids) == 0:
-        return spark.createDataFrame(
-            [], "qid long, neighbor_id long, rank long, dist_sq double"
-        )
+        return _empty_topk(vectors.sparkSession)
     t = (
         dim_thresholds(vectors, vec_col=vec_col, dim=Q.shape[1])
         if center
         else np.zeros(Q.shape[1], dtype=np.float64)
     )
-    bc = spark.sparkContext.broadcast(
-        (qids, Q.astype(np.float64) - t[None, :])
-    )
-
     codes = bq_encode(
         vectors, id_col=id_col, vec_col=vec_col,
         thresholds=t if center else None,
     )
+    cand = _flat_scan(codes, qids, Q, _sign_kernel(C, t), _PAIRS, id_col, vec_col)
+    qdf = _queries_df(vectors.sparkSession, queries, qids, Q)
+    return _exact_rescore(cand, vectors, k, id_col, vec_col, qdf=qdf)
 
-    def approx_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Qd = bc.value
-        nq = len(qids_)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            d = int(pdf["dim"].iloc[0])
-            raw = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8)
-            bits = np.unpackbits(raw.reshape(len(ids), -1), axis=1)[:, :d]
-            S = (2.0 * bits - 1.0) @ Qd.T  # (n, nq) alignment scores
-            keep = min(C, len(ids))
-            part = (
-                np.argpartition(-S, keep - 1, axis=0)[:keep]
-                if len(ids) > keep
-                else np.tile(np.arange(len(ids))[:, None], (1, nq))
-            )
-            out_qid = np.repeat(qids_[None, :], part.shape[0], axis=0).ravel()
-            out_ids = ids[part].ravel()
-            yield pd.DataFrame({"qid": out_qid, "neighbor_id": out_ids})
 
-    cand = codes.mapInPandas(approx_scan, schema="qid long, neighbor_id long")
-    qdf = _queries_df(spark, queries, qids, Q)
-    rescored = (
-        cand.join(
-            vectors.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "qid")
-        .select(
-            "qid",
-            "neighbor_id",
-            l2_sq(F.col(vec_col), F.col("query")).alias("dist"),
-        )
-    )
-    return _finalize_topk(rescored, k, "l2_sq")
+def _local(x):
+    """A kernel parameter's task-side value: a broadcast unwraps."""
+    return x.value if isinstance(x, Broadcast) else x
+
+
+def _sign_kernel(C: int, thr, budget=None):
+    """The BQ stage-1 sign cut, shared by every sign tier (the IVF sign
+    tiers' probed cells and ``knn_bq_rescore``'s flat scan): the cell's
+    packed sign codes unpack ONCE, one GEMM of the ±1 block scores every
+    probing query — the asymmetric score ``(q − t) · sign(v − t)``
+    against the queries centered by the thresholds ``thr`` (bits encode
+    ``sign(v − t)``) — and each query keeps its top ``budget[cid]`` rows
+    (``C`` for a cell outside ``budget`` or without one), every row when
+    the cell holds at most that many.  ``thr`` and ``budget`` may be
+    broadcasts (``_local``).  A kernel of ``knn.py``'s kernel frame."""
+    def sign_cut(cid, Q, cell):
+        codes, ids = cell["code"], cell["ids"]
+        bm = _local(budget)
+        keep = C if bm is None else bm.get(cid, C)
+        n = len(codes)
+        if n <= keep:
+            return [(ids, None)] * len(Q)
+        raw = np.frombuffer(b"".join(codes), dtype=np.uint8)
+        bits = np.unpackbits(raw.reshape(n, -1), axis=1)[:, : int(cell["dim"][0])]
+        S = (2.0 * bits - 1.0) @ (Q - _local(thr)[None, :]).T  # (n, m)
+        return [
+            (ids[np.argpartition(-S[:, j], keep - 1)[:keep]], None)
+            for j in range(len(Q))
+        ]
+
+    return sign_cut

@@ -55,15 +55,28 @@ from pyspark.sql import functions as F
 from vector_search_engine_spark.functions.vector import (
     cosine_sim,
     dot,
-    l2_sq,
     l2_sq_matrix,
     normalize,
 )
+from vector_search_engine_spark.operators import knn as knn_ops
+from vector_search_engine_spark.operators.bq import _sign_kernel
 from vector_search_engine_spark.operators.knn import (
+    _PAIRS,
+    _SCORED,
     DIST_DECIMALS,
+    _cell_columns,
+    _empty_topk,
+    _exact_rescore,
     _finalize_topk,
+    _merge_topk,
+    _prefix_kernel,
     _queries_df,
     _query_arrays as knn_query_arrays,
+    _query_broadcast,
+    _radius_kernel,
+    _Rows,
+    _serve_cells,
+    _topk_kernel,
 )
 
 # Serializes derived-sidecar builds (IVFIndex._sidecar, behind every
@@ -96,16 +109,9 @@ _CASCADE_BROADCAST_ROWS = 5_000_000
 # Explicit candidates_per_cell overrides both the derivation and the cap.
 AUTO_SIGN_BUDGET_CAP = 65_536
 
-# float64 cells per GEMM tile in the cogroup kernels: one hot cell can be
-# probed by ALL of a dataset-sized query table, so the per-call distance
-# matrix is tiled over query columns to stay near 128 MB
-_TILE_CELLS = 16_000_000
-
-# The runners' output schemas: scored rows (top-k and radius kernels),
-# bare survivor pairs (serving cuts), and bulk cut survivors with the
-# riding query vector
-_SCORED = "qid long, neighbor_id long, dist double"
-_PAIRS = "qid long, neighbor_id long"
+# The bulk cut survivors' schema, with the riding query vector (the
+# scored and bare-pair schemas, ``_SCORED`` and ``_PAIRS``, live with the
+# kernel frame in ``knn.py``)
 _RIDING = "qid long, query array<float>, neighbor_id long"
 
 # The public top-k schema as the Spark plan types it (``rank`` comes from
@@ -236,9 +242,9 @@ def _sq_bound_mask_multi(
     n = len(lo)
     # query-column tiling (r18): the cogroup scan can hand one hot cell
     # ALL of a dataset-sized query table's probes — cap the per-call
-    # distance matrix at _TILE_CELLS.  Each query's mask depends only on
-    # its own column, so tiling changes nothing.
-    step = max(1, _TILE_CELLS // max(n, 1))
+    # distance matrix at knn._TILE_CELLS.  Each query's mask depends only
+    # on its own column, so tiling changes nothing.
+    step = max(1, knn_ops._TILE_CELLS // max(n, 1))
     outs = []
     for c0 in range(0, Qm.shape[0], step):
         D = l2_sq_matrix(V, Qm[c0 : c0 + step])  # (n, tile), clamped >= 0
@@ -249,34 +255,10 @@ def _sq_bound_mask_multi(
     return outs[0] if len(outs) == 1 else np.concatenate(outs, axis=1)
 
 
-# The per-cell kernels.  A kernel is ``kernel(cid, Q, cell)``: ``cid``
-# the cell, ``Q`` the (m, dim) float64 rows of the queries probing it,
-# ``cell`` the cell's columns as NumPy arrays (``ids`` int64, ``vec``
-# and any other stacked column as (n, dim) float64, the rest raw).  It
-# yields, for each query row j in order, ``(kept ids, their distances)``
-# — ``None`` distances for a cut kernel.  A kernel never knows which
-# runner calls it: ``IVFIndex._serve_cells`` (serving, cell slices of
-# Arrow batches), ``IVFIndex._cell_cogroup`` (bulk, whole cells) or
-# ``IVFIndex._driver_topk`` (small float serving searches, whole cells
-# read on the driver).
-
-
-def _topk_kernel(k: int):
-    """The float ``(dist, id)`` top-k: one GEMM (``l2_sq_matrix``) of
-    the cell against its probing queries, tiled over query columns at
-    ``_TILE_CELLS`` (a hot cell can be probed by a whole query table),
-    and each query's exact ``(dist, id)`` top-k of the cell."""
-    def cell_topk(cid, Q, cell):
-        V, ids = cell["vec"], cell["ids"]
-        kk = min(k, len(ids))
-        step = max(1, _TILE_CELLS // max(len(ids), 1))
-        for c0 in range(0, len(Q), step):
-            D = l2_sq_matrix(V, Q[c0 : c0 + step])  # (n, tile)
-            for j in range(D.shape[1]):
-                order = np.lexsort((ids, D[:, j]))[:kk]
-                yield ids[order], D[order, j]
-
-    return cell_topk
+# The per-cell kernels follow the kernel contract of ``knn.py`` (its
+# kernel frame: ``_topk_kernel``, ``_prefix_kernel``, ``_radius_kernel``,
+# the serving runner ``_serve_cells``); the IVF-only ones are here, the
+# BQ sign cut is ``bq._sign_kernel``.
 
 
 def _sq_cut_kernel(dim: int, bits: int, k: int):
@@ -291,73 +273,6 @@ def _sq_cut_kernel(dim: int, bits: int, k: int):
     return sq_cut
 
 
-def _local(x):
-    """A kernel parameter's task-side value: a broadcast unwraps."""
-    return x.value if isinstance(x, Broadcast) else x
-
-
-def _sign_kernel(C: int, thr, budget=None):
-    """The BQ stage-1 sign cut, shared by every sign tier: the cell's
-    packed sign codes unpack ONCE, one GEMM of the ±1 block scores every
-    probing query — the asymmetric score ``(q − t) · sign(v − t)``
-    against the queries centered by the sidecar thresholds ``thr``
-    (bits encode ``sign(v − t)``) — and each query keeps its top
-    ``budget[cid]`` rows (``C`` for a cell outside ``budget`` or
-    without one), every row when the cell holds at most that many.
-    ``thr`` and ``budget`` may be broadcasts (``_local``)."""
-    def sign_cut(cid, Q, cell):
-        codes, ids = cell["code"], cell["ids"]
-        bm = _local(budget)
-        keep = C if bm is None else bm.get(cid, C)
-        n = len(codes)
-        if n <= keep:
-            return [(ids, None)] * len(Q)
-        raw = np.frombuffer(b"".join(codes), dtype=np.uint8)
-        bits = np.unpackbits(raw.reshape(n, -1), axis=1)[:, : int(cell["dim"][0])]
-        S = (2.0 * bits - 1.0) @ (Q - _local(thr)[None, :]).T  # (n, m)
-        return [
-            (ids[np.argpartition(-S[:, j], keep - 1)[:keep]], None)
-            for j in range(len(Q))
-        ]
-
-    return sign_cut
-
-
-def _radius_kernel(radius_sq: float):
-    """Radius hits: every cell row within ``radius_sq`` of each query,
-    in the per-query matrix-vector form — these distances ARE the
-    output values (rounded at 4 decimals), and each row's dot product
-    is row-independent, so both runners emit the same bytes."""
-    def in_radius(cid, Q, cell):
-        V, ids = cell["vec"], cell["ids"]
-        VV = (V * V).sum(axis=1)
-        for q in Q:
-            d = VV - 2.0 * (V @ q) + float(q @ q)
-            np.maximum(d, 0.0, out=d)
-            hit = d <= radius_sq
-            yield ids[hit], d[hit]
-
-    return in_radius
-
-
-def _cell_columns(pdf: pd.DataFrame, names: dict, stack) -> dict:
-    """A runner's decode of its kernel input: every column of ``pdf``
-    but ``centroid_id`` as a NumPy array, renamed through ``names``
-    (the id column to ``ids``, as int64; the float vector to ``vec``),
-    the ``stack`` columns it holds (kernel names) stacked ONCE into
-    (n, dim) float64 matrices and every other column raw."""
-    cols = {
-        names.get(c, c): pdf[c].to_numpy()
-        for c in pdf.columns
-        if c != "centroid_id"
-    }
-    cols["ids"] = cols["ids"].astype(np.int64, copy=False)
-    for c in stack:
-        if c in cols:
-            cols[c] = np.stack(cols[c]).astype(np.float64)
-    return cols
-
-
 def _flat_vectors(col, dim: int) -> np.ndarray:
     """The flat Arrow decode of a ``list<float>`` column (an Arrow array
     or chunked array) into an (n, dim) float64 matrix: each chunk's
@@ -370,78 +285,6 @@ def _flat_vectors(col, dim: int) -> np.ndarray:
         raise ValueError("NULL vector in an indexed cell")
     flat = [c.flatten().to_numpy(zero_copy_only=False) for c in getattr(col, "chunks", [col])]
     return np.concatenate(flat + [np.empty(0)]).astype(np.float64).reshape(len(col), dim)
-
-
-def _merge_topk(piles: dict, k: int):
-    """The runners' final ``(dist, id)`` merge: ``piles`` maps a query
-    position to the ``(ids, dists)`` its kernels kept in every cell or
-    slice; yields ``(position, ids, dists)`` with at most ``k`` rows in
-    rank order."""
-    for qi, parts in piles.items():
-        ids = np.concatenate([p[0] for p in parts])
-        d = np.concatenate([p[1] for p in parts])
-        order = np.lexsort((ids, d))[:k]
-        yield qi, ids[order], d[order]
-
-
-def _cell_slices(pdf: pd.DataFrame, cell_qidx: dict):
-    """The serving runner's cell loop over one Arrow batch: yields
-    ``(cell, qidx, rows)`` for every cell slice some query probes —
-    ``rows`` the slice's positions in ``pdf`` and ``qidx`` the probing
-    queries' positions (``_cell_map``).  A stable argsort on
-    ``centroid_id`` gives the same groups, in the same in-group row
-    order, as a pandas groupby on the cell, without its per-group frame
-    copies."""
-    if len(pdf) == 0:
-        return
-    cids = pdf["centroid_id"].to_numpy()
-    order = np.argsort(cids, kind="stable")
-    cs = cids[order]
-    cuts = np.flatnonzero(cs[1:] != cs[:-1]) + 1
-    starts = np.concatenate(([0], cuts))
-    for s, e in zip(starts, np.concatenate((cuts, [len(cs)]))):
-        qidx = cell_qidx.get(int(cs[s]))
-        if qidx:
-            yield int(cs[s]), qidx, order[s:e]
-
-
-class _Rows:
-    """One task's output of a runner, emitted as ONE pandas frame (r18,
-    guide §4: one Arrow batch per task, not one per cell).  The output
-    ``schema`` names the columns: ``add(qid, ids, x)`` appends a
-    query's neighbor ids with their distances (``x``, when the schema
-    has ``dist``) or the query vector ``x`` riding every row (when it
-    has ``query``); otherwise bare pairs."""
-
-    def __init__(self, schema: str):
-        names = [f.split()[0] for f in schema.split(",")]
-        self.extra = next((c for c in ("dist", "query") if c in names), None)
-        self.q: list = []
-        self.i: list = []
-        self.x: list = []
-
-    def add(self, qid, ids: np.ndarray, x=None) -> None:
-        self.q.append(np.full(len(ids), qid, dtype=np.int64))
-        self.i.append(ids)
-        if self.extra == "dist":
-            self.x.append(x)
-        elif self.extra == "query":
-            self.x.extend([x] * len(ids))
-
-    def frame(self) -> pd.DataFrame | None:
-        if not self.q:
-            return None
-        cols = {"qid": np.concatenate(self.q)}
-        if self.extra == "query":
-            cols["query"] = self.x
-        cols["neighbor_id"] = np.concatenate(self.i)
-        if self.extra == "dist":
-            cols["dist"] = np.concatenate(self.x)
-        return pd.DataFrame(cols)
-
-    def emit(self) -> Iterator[pd.DataFrame]:
-        if self.q:
-            yield self.frame()
 
 
 def _train_quantizer(
@@ -1099,61 +942,11 @@ class IVFIndex:
         needed = sorted({c for _, c in pairs})
         return qids, Q, snap, needed, self._cell_map(qids, pairs)
 
-    def _empty_topk(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "qid long, neighbor_id long, rank long, dist_sq double"
-        )
-
-    def _query_broadcast(self, qids: np.ndarray, Q: np.ndarray, cell_qidx):
-        """The serving kernels' payload: ``(qids, float64 queries,
-        cell -> probing-query positions)``."""
-        return self.spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
-        )
-
-    def _serve_cells(
-        self, cand: DataFrame, bc, kernel, schema: str, stack=("vec",),
-        k: int | None = None,
-    ) -> DataFrame:
-        """The serving runner: ONE ``mapInPandas`` over the probed rows
-        ``cand`` (``centroid_id``, the id, and the kernel's columns)
-        with the query set in ``bc`` (``_query_broadcast``).  Per Arrow
-        batch it decodes once (``_cell_columns``: ONE object-array
-        stack of each ``stack`` column per batch — the r18 rule, guide
-        §4.2; a per-cell stack was the dominant Python cost), then
-        walks the contiguous cell slices (``_cell_slices``) and runs
-        ``kernel(cid, Q, cell)`` on each slice with the slice's probing
-        queries.  Columns it does not stack reach the kernel raw, so a
-        kernel can materialize them for a few rows only.
-
-        Output is ONE ``schema`` frame per task (``_Rows``).  With
-        ``k`` (the top-k kernels) each query's kept rows from every
-        slice of the task merge by the exact ``(dist, id)`` order and at
-        most k per query leave the task; without it (cuts, radius hits)
-        every kept row leaves."""
-        names = {self.meta["id_col"]: "ids", self.meta["vec_col"]: "vec"}
-
-        def serve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids, Q, cq = bc.value
-            out = _Rows(schema)
-            piles: dict[int, list] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                cols = _cell_columns(pdf, names, stack)
-                for cid, qidx, rows in _cell_slices(pdf, cq):
-                    cell = {c: v[rows] for c, v in cols.items()}
-                    for qi, (ids, d) in zip(qidx, kernel(cid, Q[qidx], cell)):
-                        if k is None:
-                            out.add(qids[qi], ids, d)
-                        else:
-                            piles.setdefault(qi, []).append((ids, d))
-            for qi, ids, d in _merge_topk(piles, k):
-                out.add(qids[qi], ids, d)
-            yield from out.emit()
-
-        serve.__name__ = kernel.__name__  # plans name the tier kernel
-        return cand.mapInPandas(serve, schema=schema)
+    @property
+    def _names(self) -> dict:
+        """The runners' renames of the float cells' columns: the id to
+        ``ids``, the vector to ``vec`` (``knn._cell_columns``)."""
+        return {self.meta["id_col"]: "ids", self.meta["vec_col"]: "vec"}
 
     def _driver_budget(self) -> tuple[int, int]:
         """The driver runner's budget, ``(_DRIVER_BYTES, _DRIVER_PAIRS)``
@@ -1235,8 +1028,9 @@ class IVFIndex:
         rows = _Rows(_SCORED)
         for qi, ids, d in _merge_topk(piles, k):
             rows.add(qids[qi], ids, d)
-        empty = pd.DataFrame(columns=["qid", "neighbor_id", "dist"])
-        pdf = (rows.frame() if rows.q else empty).rename(columns={"dist": "dist_sq"})
+        if not rows.q:  # every probed row excluded, no delta: still no job
+            return _empty_topk(self.spark, rank="long not null")
+        pdf = rows.frame().rename(columns={"dist": "dist_sq"})
         pdf.insert(2, "rank", pdf.groupby("qid").cumcount() + 1)
         out = self.spark.createDataFrame(pdf, _TOPK)
         if round_output:
@@ -1294,38 +1088,6 @@ class IVFIndex:
             rows = rows.join(keep_ids, id_col, "left_semi")
         return rows
 
-    def _exact_rescore(
-        self, cand: DataFrame, snap, cells, k: int, round_output: bool,
-        queries=None, qids=None, Q=None, qid_col: str = "qid",
-        qvec_col: str = "query",
-    ) -> DataFrame:
-        """Final stage of the quantized tiers: the survivors rejoin the
-        float vectors (same pruned partitions) for the exact float
-        distance, then the standard ``(dist, id)`` top-k — so every
-        returned row carries the true distance.  Serving tiers pass their
-        bounded query set (``queries``/``qids``/``Q``), which joins as a
-        broadcast on qid; for the bulk tiers (``queries=None``) the query
-        vector rides the survivor rows as ``query`` — emitted by the cut
-        kernel — so no join against the query table is needed."""
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(cells)
-        )
-        rows = cand.join(
-            base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            "neighbor_id",
-        )
-        if queries is not None:
-            qdf = _queries_df(self.spark, queries, qids, Q, qid_col, qvec_col)
-            rows = rows.join(F.broadcast(qdf), "qid")
-        rescored = rows.select(
-            "qid",
-            "neighbor_id",
-            l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-        )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
-
     def search(
         self,
         queries: DataFrame,
@@ -1368,7 +1130,7 @@ class IVFIndex:
         """
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
-            return self._empty_topk()
+            return _empty_topk(self.spark)
         return self._float_serve(plan, k, exclude_ids, predicate, round_output)
 
     def _float_serve(self, plan, k: int, exclude_ids, predicate,
@@ -1382,10 +1144,10 @@ class IVFIndex:
         if self._driver_route("search", why, plan):
             return self._driver_topk(plan, k, exclude_ids, round_output)
         qids, Q, snap, needed, cell_qidx = plan
-        bc = self._query_broadcast(qids, Q, cell_qidx)
-        cand_topk = self._serve_cells(
+        bc = _query_broadcast(self.spark, qids, Q, cell_qidx)
+        cand_topk = _serve_cells(
             self._float_cells(snap, needed, exclude_ids, predicate), bc,
-            _topk_kernel(k), _SCORED, k=k,
+            _topk_kernel(k), _SCORED, self._names, k=k,
         )
         return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
@@ -1463,8 +1225,6 @@ class IVFIndex:
                 "prefilter" if matches <= total * probed_frac else "inprobe"
             )
         if strategy == "prefilter":
-            from vector_search_engine_spark.operators import knn as knn_ops
-
             # shadowed ids (streaming merged contract) leave the
             # brute-force base the same way they leave the probed scan
             base = _drop_ids(
@@ -1705,7 +1465,8 @@ class IVFIndex:
         round_output: bool = True,
     ) -> DataFrame:
         """Probed search through the prefix-dimension lossless bound cut
-        (``knn.knn_prefix_rescore``'s kernel inside the probed cells):
+        (``knn._prefix_kernel``, which ``knn.knn_prefix_rescore`` runs on
+        its flat scan, inside the probed cells):
         prefix L2 lower-bounds full L2, so rows whose prefix distance
         exceeds the per-group seed threshold are dropped without touching
         their remaining dims — FLOPs fall by ~d/d′ on the pruned share,
@@ -1717,35 +1478,13 @@ class IVFIndex:
         ``snapshot`` exactly as ``search()`` does."""
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
-            return self._empty_topk()
+            return _empty_topk(self.spark)
         qids, Q, snap, needed, cell_qidx = plan
         dp = max(1, min(int(prefix_dims), Q.shape[1]))
-
-        def prefix_topk(cid, Q, cell):
-            V, ids = cell["vec"], cell["ids"]
-            n = len(ids)
-            Vp = V[:, :dp]
-            VVp = (Vp * Vp).sum(axis=1)
-            kk = min(k, n)
-            for q in Q:
-                qp = q[:dp]
-                dpd = VVp - 2.0 * (Vp @ qp) + float(qp @ qp)
-                np.maximum(dpd, 0.0, out=dpd)
-                seed = np.argpartition(dpd, kk - 1)[:kk] if n > kk else np.arange(n)
-                diff = V[seed] - q
-                T = (diff * diff).sum(axis=1).max()
-                # same fp-slack guard as knn_prefix_rescore: the GEMM
-                # bound may exceed the true one by ~1e-13
-                surv = np.flatnonzero(dpd <= T + 1e-9 * (1.0 + T))
-                diff = V[surv] - q
-                full = (diff * diff).sum(axis=1)
-                order = np.lexsort((ids[surv], full))[:kk]
-                yield ids[surv][order], full[order]
-
-        cand_topk = self._serve_cells(
+        cand_topk = _serve_cells(
             self._float_cells(snap, needed, exclude_ids, predicate),
-            self._query_broadcast(qids, Q, cell_qidx), prefix_topk, _SCORED,
-            k=k,
+            _query_broadcast(self.spark, qids, Q, cell_qidx),
+            _prefix_kernel(k, dp), _SCORED, self._names, k=k,
         )
         return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
@@ -1980,7 +1719,7 @@ class IVFIndex:
         Otherwise prefer ``search_sq8`` (byte cut AND wall win)."""
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
-            return self._empty_topk()
+            return _empty_topk(self.spark)
         qids, Q, snap, needed, cell_qidx = plan
         rot_dir = self.ensure_pca_rot(snapshot=snap)
         R = np.load(os.path.join(rot_dir, "rotation.npy"))
@@ -2020,10 +1759,10 @@ class IVFIndex:
             rot_dir, snap, needed, exclude_ids, predicate,
             cols=(self.meta["vec_col"], "rotvec", "vnorm"),
         )
-        cand_topk = self._serve_cells(
+        cand_topk = _serve_cells(
             cand_rows,
-            self._query_broadcast(qids, np.hstack([Q64, Q64 @ R]), cell_qidx),
-            pca_prefix_topk, _SCORED, stack=("rotvec",), k=k,
+            _query_broadcast(self.spark, qids, np.hstack([Q64, Q64 @ R]), cell_qidx),
+            pca_prefix_topk, _SCORED, self._names, stack=("rotvec",), k=k,
         )
         return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
@@ -2279,8 +2018,6 @@ class IVFIndex:
             "centroid_id"
         ].dataType:  # pragma: no cover - structural guard (finding 28)
             raise AssertionError("cell cogroup key type mismatch")
-        dtypes = {"long": "int64", "double": "float64"}
-        fields = [f.split() for f in schema.split(",")]
         names = {"nid": "ids", "nvec": "vec"}
 
         def cell_kernel(key, qpdf: pd.DataFrame, vpdf: pd.DataFrame):
@@ -2295,13 +2032,7 @@ class IVFIndex:
                     zip(qpdf["qid"].to_numpy(dtype=np.int64), got)
                 ):
                     out.add(qid, ids, qv[j] if out.extra == "query" else d)
-            frame = out.frame()
-            if frame is None:
-                frame = pd.DataFrame(
-                    {n: pd.Series(dtype=dtypes.get(t, object))
-                     for n, t in fields}
-                )
-            return frame
+            return out.frame()
 
         cell_kernel.__name__ = kernel.__name__  # plans name the tier kernel
         return (
@@ -2481,7 +2212,10 @@ class IVFIndex:
             probes, codes, ("code", "lo", "hi"), _sq_cut_kernel(dim, bits, k),
             _RIDING,
         )
-        return self._exact_rescore(cand, snap, cells, k, round_output)
+        return _exact_rescore(
+            cand, self._float_cells(snap, cells, None, None), k,
+            self.meta["id_col"], self.meta["vec_col"], round_output,
+        )
 
     def search_cascade_distributed(
         self,
@@ -2598,7 +2332,10 @@ class IVFIndex:
 
         cand2 = cand2_codes.mapInPandas(sq_cut, schema=_RIDING)
         # ---- stage 3: exact float rescore of the remnant
-        return self._exact_rescore(cand2, snap, cells, k, round_output)
+        return _exact_rescore(
+            cand2, self._float_cells(snap, cells, None, None), k,
+            self.meta["id_col"], self.meta["vec_col"], round_output,
+        )
 
     def rebalance(
         self,
@@ -2791,7 +2528,7 @@ class IVFIndex:
         dim = self.meta["dim"]
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
-            return self._empty_topk()
+            return _empty_topk(self.spark)
         qids, Q, snap, needed, cell_qidx = plan
         # each cell slice decodes once with the bound evaluated for all
         # its probing queries in one GEMM (_sq_bound_mask_multi).  The cut
@@ -2799,19 +2536,20 @@ class IVFIndex:
         # lossless superset, so the exact rescore yields identical
         # results.  The sidecar is keyed by and built from the pinned
         # snapshot, so codes and the float rescore base always agree.
-        bc = self._query_broadcast(qids, Q, cell_qidx)
+        bc = _query_broadcast(self.spark, qids, Q, cell_qidx)
         sq_dir = self.ensure_sq8(snapshot=snap, bits=bits)
         cand_codes = self._sidecar_cells(
             sq_dir, snap, needed, exclude_ids, predicate,
             cols=("code", "lo", "hi"),
         )
 
-        cand = self._serve_cells(
-            cand_codes, bc, _sq_cut_kernel(dim, bits, k), _PAIRS
+        cand = _serve_cells(
+            cand_codes, bc, _sq_cut_kernel(dim, bits, k), _PAIRS, self._names
         )
-        return self._exact_rescore(
-            cand, snap, needed, k, round_output, queries, qids, Q, qid_col,
-            qvec_col,
+        return _exact_rescore(
+            cand, self._float_cells(snap, needed, None, None), k,
+            self.meta["id_col"], self.meta["vec_col"], round_output,
+            _queries_df(self.spark, queries, qids, Q, qid_col, qvec_col), qvec_col,
         )
 
     def ensure_bq(self, snapshot: dict | None = None) -> str:
@@ -3092,13 +2830,14 @@ class IVFIndex:
         )
         bq_dir = self.ensure_bq(snapshot=snap)
         bc_thr = self._bq_thr_broadcast(bq_dir)
-        bc = self._query_broadcast(qids, Q, cell_qidx)
+        bc = _query_broadcast(self.spark, qids, Q, cell_qidx)
         cand_codes = self._sidecar_cells(
             bq_dir, snap, needed, exclude_ids, predicate, cols=("code", "dim")
         )
 
-        cand = self._serve_cells(
-            cand_codes, bc, _sign_kernel(C, bc_thr, budget_map), _PAIRS
+        cand = _serve_cells(
+            cand_codes, bc, _sign_kernel(C, bc_thr, budget_map), _PAIRS,
+            self._names,
         )
         return cand, budget_map
 
@@ -3136,14 +2875,15 @@ class IVFIndex:
         metadata semi-join / anti-join; generation-keyed sidecar)."""
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
-            return self._empty_topk()
+            return _empty_topk(self.spark)
         cand, _ = self._bq_stage(
             plan, k, candidates_per_cell, exclude_ids, predicate, "search_bq"
         )
         qids, Q, snap, needed, _ = plan
-        return self._exact_rescore(
-            cand, snap, needed, k, round_output, queries, qids, Q, qid_col,
-            qvec_col,
+        return _exact_rescore(
+            cand, self._float_cells(snap, needed, None, None), k,
+            self.meta["id_col"], self.meta["vec_col"], round_output,
+            _queries_df(self.spark, queries, qids, Q, qid_col, qvec_col), qvec_col,
         )
 
     def search_cascade(
@@ -3212,7 +2952,7 @@ class IVFIndex:
         C = int(candidates_per_cell) if candidates_per_cell else 8 * k
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
-            return self._empty_topk()
+            return _empty_topk(self.spark)
         qids, Q, snap, needed, cell_qidx = plan
 
         # ---- stage 1: search_bq's BQ stage over the probed 1-bit codes
@@ -3292,9 +3032,10 @@ class IVFIndex:
         cand2 = cand2_codes.mapInPandas(sq_cut, schema=_PAIRS)
 
         # ---- stage 3: exact float rescore of the remaining handful
-        return self._exact_rescore(
-            cand2, snap, needed, k, round_output, queries, qids, Q, qid_col,
-            qvec_col,
+        return _exact_rescore(
+            cand2, self._float_cells(snap, needed, None, None), k,
+            self.meta["id_col"], self.meta["vec_col"], round_output,
+            _queries_df(self.spark, queries, qids, Q, qid_col, qvec_col), qvec_col,
         )
 
     def ensure_graph(
@@ -3420,7 +3161,7 @@ class IVFIndex:
         spark = self.spark
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
-            return self._empty_topk()
+            return _empty_topk(self.spark)
         qids, Q, snap, needed, cell_qidx = plan
         cell_qids = {
             c: [int(qids[i]) for i in ix] for c, ix in cell_qidx.items()
@@ -3863,7 +3604,7 @@ class IVFIndex:
         spark = self.spark
         plan = self._probe_plan(queries, nprobe, snapshot, qid_col, qvec_col)
         if plan is None:
-            return self._empty_topk()
+            return _empty_topk(self.spark)
         qids, Q, snap, needed, cell_qidx = plan
         codes_dir, books = self.ensure_pq(
             m=m, residual=residual, snapshot=snap, opq=opq
@@ -3883,8 +3624,9 @@ class IVFIndex:
         # Cut group is (cell slice of an Arrow batch, query) — for the
         # lossless bound a still-lossless superset (exact rescore
         # unchanged); for top-C mode a per-cell-slice C.
-        q_bc = self._query_broadcast(
-            qids, Q if R is None else Q.astype(np.float64) @ R, cell_qidx
+        q_bc = _query_broadcast(
+            self.spark, qids, Q if R is None else Q.astype(np.float64) @ R,
+            cell_qidx,
         )
         books_bc = spark.sparkContext.broadcast(books)
         cm = self.center_map(snap) if residual else None
@@ -3919,10 +3661,11 @@ class IVFIndex:
                 else:
                     yield ids[bound_cut_mask(d_adc, resid, k)], None
 
-        cand = self._serve_cells(cand_codes, q_bc, adc_cut, _PAIRS)
-        return self._exact_rescore(
-            cand, snap, needed, k, round_output, queries, qids, Q, qid_col,
-            qvec_col,
+        cand = _serve_cells(cand_codes, q_bc, adc_cut, _PAIRS, self._names)
+        return _exact_rescore(
+            cand, self._float_cells(snap, needed, None, None), k,
+            self.meta["id_col"], self.meta["vec_col"], round_output,
+            _queries_df(self.spark, queries, qids, Q, qid_col, qvec_col), qvec_col,
         )
 
     def radius_search(
@@ -3965,10 +3708,12 @@ class IVFIndex:
         needed = sorted({c for _, c in pairs})
         # the kernel keeps the per-query matrix-vector distance form:
         # these distances ARE the output values
-        bc = self._query_broadcast(qids, Q, self._cell_map(qids, pairs))
+        bc = _query_broadcast(self.spark, qids, Q, self._cell_map(qids, pairs))
         cand = self._float_cells(snap, needed, exclude_ids, predicate)
 
-        out = self._serve_cells(cand, bc, _radius_kernel(radius_sq), _SCORED)
+        out = _serve_cells(
+            cand, bc, _radius_kernel(radius_sq), _SCORED, self._names
+        )
         d = (
             F.round("dist", 4) if round_output else F.col("dist").cast("double")
         )
@@ -4290,9 +4035,7 @@ def _metric_search(
     the exact metric top-k on the original vectors."""
     qids, Q = knn_query_arrays(queries)
     if len(qids) == 0:
-        return index.spark.createDataFrame(
-            [], "qid long, neighbor_id long, rank long, sim double"
-        )
+        return _empty_topk(index.spark, "sim")
     cand = _run_tier(
         index, _SERVING_TIERS, tier, (qids, _metric_queries(Q, metric)),
         candidates_per_cell,

@@ -1,8 +1,11 @@
 """Bulk exact k-NN search — the reference's entire query surface, distributed.
 
 Reference mapping (SURVEY.md §2.3/§2.4):
-  * ``write_buffer.h:54-70``  brute-force scan + bounded max-heap   → per-partition
-    NumPy top-k inside ``mapInPandas`` (the heap, vectorized);
+  * ``write_buffer.h:54-70``  brute-force scan + bounded max-heap   → per-task
+    NumPy top-k inside ``mapInPandas`` (the heap, vectorized) — the same
+    per-cell kernel as the IVF index search (``ivf.py``, Q3), the flat scan
+    being one cell every query probes, as the reference runs both through
+    one distance kernel (``distance.cpp``);
   * ``engine.h:128-143``      merge of per-source heaps, ascending  → global
     window ``row_number() <= k`` over the per-partition candidates;
   * ``hnsw_index.h:228-231``  empty index → empty result            → holds trivially;
@@ -13,7 +16,8 @@ Scale posture (100 TB): queries are broadcast (bulk-search contract — the
 query set is small; the reference holds it in RAM too, ``recall_bench.cpp:67``),
 vectors are never collected; each scan partition emits at most k rows per
 query, so the final shuffle moves ``num_partitions * k * |Q|`` rows, not
-``N * |Q|``.  The distance kernel is a single BLAS GEMM per Arrow batch.
+``N * |Q|``.  The distance kernel is a single BLAS GEMM per Arrow batch,
+tiled over query columns at ``_TILE_CELLS``.
 """
 
 from __future__ import annotations
@@ -135,6 +139,346 @@ def _finalize_topk(
     )
 
 
+def _empty_topk(spark, dist: str = "dist_sq", rank: str = "long") -> DataFrame:
+    """An empty top-k result ``(qid, neighbor_id, rank, <dist>)``: one
+    placeholder row cut by ``limit(0)``, which the optimizer folds into
+    an empty local relation, so collecting it runs no Spark job (an
+    empty ``createDataFrame`` runs one).  ``rank="long not null"`` types
+    it as a ``row_number`` rank."""
+    return spark.createDataFrame(
+        [(0, 0, 1, 0.0)], f"qid long, neighbor_id long, rank {rank}, {dist} double"
+    ).limit(0)
+
+
+def _exact_rescore(
+    cand: DataFrame, base: DataFrame, k: int, id_col: str, vec_col: str,
+    round_output: bool = True, qdf: DataFrame | None = None,
+    qvec_col: str = "query",
+) -> DataFrame:
+    """The final stage of every quantized tier, flat and probed: the
+    ``(qid, neighbor_id)`` survivors ``cand`` rejoin the float vectors of
+    ``base`` for the exact distance, then the standard ``(dist, id)``
+    top-k — so every returned row carries the true distance.  A serving
+    tier passes its bounded query set ``qdf`` (``_queries_df``), which
+    joins as a broadcast on qid; without it the query vector rides the
+    survivor rows as ``qvec_col`` (the bulk tiers' cut kernels emit it),
+    so no join against the query table is needed."""
+    rows = cand.join(
+        base.select(F.col(id_col).alias("neighbor_id"), vec_col), "neighbor_id"
+    )
+    if qdf is not None:
+        rows = rows.join(F.broadcast(qdf), "qid")
+    rescored = rows.select(
+        "qid", "neighbor_id", l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist")
+    )
+    return _finalize_topk(rescored, k, "l2_sq", round_output)
+
+
+# ---------------------------------------------------------------------------
+# The per-cell kernel frame.  Every exact scan, flat or probed, is a set of
+# cells and, per cell, the queries probing it; a flat scan is one cell
+# (``centroid_id`` 0) that every query probes (``_flat_scan``).  A kernel
+# is ``kernel(cid, Q, cell)``: ``cid`` the cell, ``Q`` the (m, dim)
+# float64 rows of the queries probing it, ``cell`` the cell's columns as
+# NumPy arrays (``ids`` int64, ``vec`` and any other stacked column as
+# (n, dim) float64, the rest raw).  It yields, for each query row j in
+# order, ``(kept ids, their distances)`` — ``None`` distances for a cut
+# kernel.  A kernel never knows which runner calls it:
+#   * ``_serve_cells`` (cell slices of Arrow batches): the IVF serving
+#     tiers, and the flat ``knn_exact``, ``knn_prefix_rescore``,
+#     ``radius_search`` and ``knn_bq_rescore`` stage 1;
+#   * ``IVFIndex._cell_cogroup`` (bulk, whole cells);
+#   * ``IVFIndex._driver_topk`` (small float serving searches, whole
+#     cells read on the driver);
+#   * ``knn_exact_distributed`` (one (qblock, vblock) tile).
+# ---------------------------------------------------------------------------
+
+# float64 cells per GEMM tile in the kernels: one hot cell (or one flat
+# batch) can be scanned by ALL of a dataset-sized query table, so the
+# per-call distance matrix is tiled over query columns to stay near 128 MB
+_TILE_CELLS = 16_000_000
+
+# The top-k selection rule (``_topk_rows``): a cell of at most this many
+# rows per k takes the full ``(dist, id)`` lexsort per query; a larger one
+# an argpartition pre-cut first.  Measured crossover (128-d, k=10, NumPy):
+# 78 rows x 8 queries sort 0.07 ms / cut 0.15 ms, 400 x 8 sort 0.32 / cut
+# 0.25, 10k x 16 sort 21 / cut 10.
+_SORT_ROWS_PER_K = 32
+
+# The runners' output schemas: scored rows (top-k and radius kernels) and
+# bare survivor pairs (cut kernels)
+_SCORED = "qid long, neighbor_id long, dist double"
+_PAIRS = "qid long, neighbor_id long"
+
+
+def _topk_rows(key: np.ndarray, ids: np.ndarray, k: int):
+    """Yield each column j's exact ``(key, id)`` top-k row positions of
+    the (n, m) ``key`` (smaller is better).  Up to ``_SORT_ROWS_PER_K *
+    k`` rows: one full lexsort per column.  Above: one vectorized
+    argpartition to each column's k-th key, then the lexsort of every
+    row at or below it — widening to the whole boundary tie group, so a
+    distance-only cut that splits mass-duplicate rows cannot lose the
+    smaller ids."""
+    kk = min(k, len(ids))
+    if kk < 1 or len(ids) <= _SORT_ROWS_PER_K * k:  # k = 0 keeps no row
+        for j in range(key.shape[1]):
+            yield np.lexsort((ids, key[:, j]))[:kk]
+        return
+    part = np.argpartition(key, kk - 1, axis=0)[:kk]
+    bound = np.take_along_axis(key, part, axis=0).max(axis=0)
+    for j in range(key.shape[1]):
+        rows = np.flatnonzero(key[:, j] <= bound[j])
+        yield rows[np.lexsort((ids[rows], key[rows, j]))[:kk]]
+
+
+def _topk_kernel(k: int, metric: str = "l2_sq"):
+    """The float ``(dist, id)`` top-k: one GEMM of the cell against its
+    probing queries — squared L2 (``l2_sq_matrix``, ascending), cosine
+    or inner product (descending) — tiled over query columns at
+    ``_TILE_CELLS``, and each query's exact top-k of the cell
+    (``_topk_rows``).
+
+    Tiling caveat: a tile changes the GEMM's shape, and a narrower one
+    may round a distance's last ulp differently (2.4737742365361033
+    untiled vs ...037 with one query per tile), so a hot cell that tiles
+    on one runner and not on another can order exact ties differently
+    where ``round_output=False`` merges raw distances; rounded outputs
+    hide it."""
+    dist = (l2_sq_matrix if metric == "l2_sq" else ip_matrix if metric == "ip"
+            else cosine_sim_matrix)
+
+    def cell_topk(cid, Q, cell):
+        V, ids = cell["vec"], cell["ids"]
+        step = max(1, _TILE_CELLS // max(len(ids), 1))
+        for c0 in range(0, len(Q), step):
+            D = dist(V, Q[c0 : c0 + step])  # (n, tile)
+            key = D if metric == "l2_sq" else -D
+            for j, rows in enumerate(_topk_rows(key, ids, k)):
+                yield ids[rows], D[rows, j]
+
+    return cell_topk
+
+
+def _prefix_kernel(k: int, dp: int):
+    """The lossless prefix-dimension cut (``knn_prefix_rescore``,
+    ``IVFIndex.search_prefix``): per query, the squared L2 over the
+    first ``dp`` coordinates lower-bounds the full one, so rows whose
+    prefix distance exceeds the worst full distance of the k best rows
+    by prefix cannot place; only the survivors are rescored over all
+    dims, then the exact ``(dist, id)`` top-k."""
+    def prefix_topk(cid, Q, cell):
+        V, ids = cell["vec"], cell["ids"]
+        n = len(ids)
+        Vp = V[:, :dp]
+        VVp = (Vp * Vp).sum(axis=1)
+        kk = min(k, n)
+        for q in Q:
+            qp = q[:dp]
+            dpd = VVp - 2.0 * (Vp @ qp) + float(qp @ qp)
+            np.maximum(dpd, 0.0, out=dpd)
+            seed = np.argpartition(dpd, kk - 1)[:kk] if n > kk else np.arange(n)
+            diff = V[seed] - q
+            T = (diff * diff).sum(axis=1).max()
+            # the expanded-form bound carries ~1e-13 relative fp error and
+            # may slightly EXCEED the true one (a duplicate row's true 0
+            # computed as +1e-13 > T = 0); widen the cut by a slack far
+            # above that error and far below any real gap — extra
+            # survivors are merely rescored
+            surv = np.flatnonzero(dpd <= T + 1e-9 * (1.0 + T))
+            diff = V[surv] - q
+            full = (diff * diff).sum(axis=1)
+            order = np.lexsort((ids[surv], full))[:kk]
+            yield ids[surv][order], full[order]
+
+    return prefix_topk
+
+
+def _radius_kernel(radius_sq: float):
+    """Radius hits: every cell row within ``radius_sq`` of each query,
+    in the per-query matrix-vector form — these distances ARE the
+    output values (rounded at 4 decimals), and each row's dot product
+    is row-independent, so every runner emits the same bytes."""
+    def in_radius(cid, Q, cell):
+        V, ids = cell["vec"], cell["ids"]
+        VV = (V * V).sum(axis=1)
+        for q in Q:
+            d = VV - 2.0 * (V @ q) + float(q @ q)
+            np.maximum(d, 0.0, out=d)
+            hit = d <= radius_sq
+            yield ids[hit], d[hit]
+
+    return in_radius
+
+
+def _cell_columns(pdf: pd.DataFrame, names: dict, stack) -> dict:
+    """A runner's decode of its kernel input: every column of ``pdf``
+    but ``centroid_id`` as a NumPy array, renamed through ``names``
+    (the id column to ``ids``, as int64; the float vector to ``vec``),
+    the ``stack`` columns it holds (kernel names) stacked ONCE into
+    (n, dim) float64 matrices and every other column raw."""
+    cols = {
+        names.get(c, c): pdf[c].to_numpy()
+        for c in pdf.columns
+        if c != "centroid_id"
+    }
+    cols["ids"] = cols["ids"].astype(np.int64, copy=False)
+    for c in stack:
+        if c in cols:
+            cols[c] = np.stack(cols[c]).astype(np.float64)
+    return cols
+
+
+def _merge_topk(piles: dict, k: int, metric: str = "l2_sq"):
+    """The runners' final ``(dist, id)`` merge: ``piles`` maps a query
+    position to the ``(ids, dists)`` its kernels kept in every cell or
+    slice; yields ``(position, ids, dists)`` with at most ``k`` rows in
+    rank order (descending distance for cosine and inner product)."""
+    for qi, parts in piles.items():
+        ids = np.concatenate([p[0] for p in parts])
+        d = np.concatenate([p[1] for p in parts])
+        order = np.lexsort((ids, d if metric == "l2_sq" else -d))[:k]
+        yield qi, ids[order], d[order]
+
+
+def _cell_slices(pdf: pd.DataFrame, cell_qidx: dict):
+    """The serving runner's cell loop over one Arrow batch: yields
+    ``(cell, qidx, rows)`` for every cell slice some query probes —
+    ``rows`` the slice's positions in ``pdf`` and ``qidx`` the probing
+    queries' positions (``IVFIndex._cell_map``).  A stable argsort on
+    ``centroid_id`` gives the same groups, in the same in-group row
+    order, as a pandas groupby on the cell, without its per-group frame
+    copies."""
+    if len(pdf) == 0:
+        return
+    cids = pdf["centroid_id"].to_numpy()
+    order = np.argsort(cids, kind="stable")
+    cs = cids[order]
+    cuts = np.flatnonzero(cs[1:] != cs[:-1]) + 1
+    starts = np.concatenate(([0], cuts))
+    for s, e in zip(starts, np.concatenate((cuts, [len(cs)]))):
+        qidx = cell_qidx.get(int(cs[s]))
+        if qidx:
+            yield int(cs[s]), qidx, order[s:e]
+
+
+class _Rows:
+    """One task's output of a runner, emitted as ONE pandas frame (r18,
+    guide §4: one Arrow batch per task, not one per cell).  The output
+    ``schema`` names the columns: ``add(qid, ids, x)`` appends a
+    query's neighbor ids with their distances (``x``, when the schema
+    has ``dist``) or the query vector ``x`` riding every row (when it
+    has ``query``); otherwise bare pairs."""
+
+    def __init__(self, schema: str):
+        self.fields = [f.split()[:2] for f in schema.split(",")]
+        names = [n for n, _ in self.fields]
+        self.extra = next((c for c in ("dist", "query") if c in names), None)
+        self.q: list = []
+        self.i: list = []
+        self.x: list = []
+
+    def add(self, qid, ids: np.ndarray, x=None) -> None:
+        self.q.append(np.full(len(ids), qid, dtype=np.int64))
+        self.i.append(ids)
+        if self.extra == "dist":
+            self.x.append(x)
+        elif self.extra == "query":
+            self.x.extend([x] * len(ids))
+
+    def frame(self) -> pd.DataFrame:
+        """The rows as a frame; with none, an empty frame typed as
+        ``schema``."""
+        if not self.q:
+            dtypes = {"long": "int64", "double": "float64"}
+            return pd.DataFrame(
+                {n: pd.Series(dtype=dtypes.get(t, object)) for n, t in self.fields}
+            )
+        cols = {"qid": np.concatenate(self.q)}
+        if self.extra == "query":
+            cols["query"] = self.x
+        cols["neighbor_id"] = np.concatenate(self.i)
+        if self.extra == "dist":
+            cols["dist"] = np.concatenate(self.x)
+        return pd.DataFrame(cols)
+
+    def emit(self) -> Iterator[pd.DataFrame]:
+        if self.q:
+            yield self.frame()
+
+
+def _query_broadcast(spark, qids: np.ndarray, Q: np.ndarray, cell_qidx):
+    """The serving runner's payload: ``(qids, float64 queries, cell ->
+    probing-query positions)``."""
+    return spark.sparkContext.broadcast(
+        (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
+    )
+
+
+def _serve_cells(
+    cand: DataFrame, bc, kernel, schema: str, names: dict, stack=("vec",),
+    k: int | None = None, metric: str = "l2_sq",
+) -> DataFrame:
+    """The serving runner: ONE ``mapInPandas`` over the scanned rows
+    ``cand`` (``centroid_id``, the id, and the kernel's columns; renamed
+    for the kernel through ``names``) with the query set in ``bc``
+    (``_query_broadcast``).  Per Arrow batch it decodes once
+    (``_cell_columns``: ONE object-array stack of each ``stack`` column
+    per batch — the r18 rule, guide §4.2; a per-cell stack was the
+    dominant Python cost), then walks the contiguous cell slices
+    (``_cell_slices``) and runs ``kernel(cid, Q, cell)`` on each slice
+    with the slice's probing queries.  Columns it does not stack reach
+    the kernel raw, so a kernel can materialize them for a few rows
+    only.
+
+    Output is ONE ``schema`` frame per task (``_Rows``).  With ``k``
+    (the top-k kernels) each query's kept rows from every slice of the
+    task merge by the exact ``(dist, id)`` order of ``metric``
+    (``_merge_topk``) and at most k per query leave the task; without it
+    (cuts, radius hits) every kept row leaves."""
+    def serve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qids, Q, cq = bc.value
+        out = _Rows(schema)
+        piles: dict[int, list] = {}
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            cols = _cell_columns(pdf, names, stack)
+            for cid, qidx, rows in _cell_slices(pdf, cq):
+                # a batch of one cell is its own slice, in order
+                cell = cols if len(rows) == len(pdf) else {
+                    c: v[rows] for c, v in cols.items()
+                }
+                for qi, (ids, d) in zip(qidx, kernel(cid, Q[qidx], cell)):
+                    if k is None:
+                        out.add(qids[qi], ids, d)
+                    else:
+                        piles.setdefault(qi, []).append((ids, d))
+        for qi, ids, d in _merge_topk(piles, k, metric):
+            out.add(qids[qi], ids, d)
+        yield from out.emit()
+
+    serve.__name__ = kernel.__name__  # plans name the tier kernel
+    return cand.mapInPandas(serve, schema=schema)
+
+
+def _flat_scan(
+    rows: DataFrame, qids: np.ndarray, Q: np.ndarray, kernel, schema: str,
+    id_col: str, vec_col: str, k: int | None = None, metric: str = "l2_sq",
+) -> DataFrame:
+    """A flat scan as a probed scan of ONE cell that every query probes:
+    ``rows`` gain a constant ``centroid_id`` and ``kernel`` runs on the
+    serving runner (``_serve_cells``), so the flat operators share the
+    IVF tiers' kernels, per-task merge and ``_TILE_CELLS`` memory
+    bound."""
+    bc = _query_broadcast(
+        rows.sparkSession, qids, Q, {0: list(range(len(qids)))}
+    )
+    return _serve_cells(
+        rows.select(F.lit(0).alias("centroid_id"), *rows.columns), bc, kernel,
+        schema, {id_col: "ids", vec_col: "vec"}, k=k, metric=metric,
+    )
+
+
 def knn_exact(
     vectors: DataFrame,
     queries: DataFrame,
@@ -149,9 +493,14 @@ def knn_exact(
 
     Returns ``(qid, neighbor_id, rank, dist_sq|sim)``; rank ascending by
     (dist, id) for L2, (−sim, id) for cosine and inner product ('ip' —
-    the MIPS ranking).  ``method='pandas'`` is the GEMM fast path;
-    ``method='sql'`` is the pure-Catalyst plan (same results — used for
-    plan audits and as the oracle twin).
+    the MIPS ranking).  ``method='pandas'`` is the GEMM fast path: a
+    probed scan of one cell that every query probes (``_flat_scan``),
+    so it runs the IVF float kernel ``_topk_kernel`` on the serving
+    runner — one GEMM per Arrow batch, tiled over query columns at
+    ``_TILE_CELLS`` (the same memory bound as the probed tiers), at most
+    k rows per query leaving each task.  ``method='sql'`` is the
+    pure-Catalyst plan (same results — used for plan audits and as the
+    oracle twin).
     """
     if metric not in ("l2_sq", "cosine", "ip"):
         raise ValueError(f"unknown metric {metric!r}")
@@ -173,83 +522,15 @@ def knn_exact(
         )
         return _finalize_topk(cand, k, metric, round_output)
 
-    spark = vectors.sparkSession
     qids, Q = _query_arrays(queries)
     if len(qids) == 0:
-        return spark.createDataFrame(
-            [], "qid long, neighbor_id long, rank long, "
-            + ("dist_sq double" if metric == "l2_sq" else "sim double"),
+        return _empty_topk(
+            vectors.sparkSession, "dist_sq" if metric == "l2_sq" else "sim"
         )
-    bc = spark.sparkContext.broadcast((qids, Q))
-    larger_is_better = metric in ("cosine", "ip")
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Q_ = bc.value
-        nq = len(qids_)
-        # running per-partition candidates — the bounded heap, vectorized
-        cand_ids: list[np.ndarray] = []
-        cand_dist: list[np.ndarray] = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.stack(pdf[vec_col].to_numpy())
-            D = (
-                l2_sq_matrix(V, Q_)
-                if metric == "l2_sq"
-                else ip_matrix(V, Q_)
-                if metric == "ip"
-                else cosine_sim_matrix(V, Q_)
-            )
-            key = -D if larger_is_better else D
-            cut = len(ids) > 4 * k
-            if cut:
-                # pre-cut with argpartition, then exact (dist, id) sort of
-                # the survivors
-                keep = min(4 * k, len(ids) - 1)
-                part = np.argpartition(key, keep, axis=0)[: keep + 1]
-            else:
-                part = np.tile(np.arange(len(ids))[:, None], (1, nq))
-            sel_ids = np.empty((min(k, len(ids)), nq), dtype=np.int64)
-            sel_dist = np.empty_like(sel_ids, dtype=np.float64)
-            for j in range(nq):
-                rows = part[:, j]
-                if cut:
-                    # the distance-only cut can split a tie group at the
-                    # boundary (mass-duplicate vectors); widening to every
-                    # row at ≤ the boundary distance makes the (dist, id)
-                    # selection exact for any input
-                    b = key[rows, j].max()
-                    tied = np.flatnonzero(key[:, j] <= b)
-                    if len(tied) > len(rows):
-                        rows = tied
-                order = np.lexsort((ids[rows], key[rows, j]))[: k]
-                sel_ids[:, j] = ids[rows[order]][: sel_ids.shape[0]]
-                sel_dist[:, j] = D[rows[order], j][: sel_ids.shape[0]]
-            cand_ids.append(sel_ids)
-            cand_dist.append(sel_dist)
-        if not cand_ids:
-            return
-        all_ids = np.concatenate(cand_ids, axis=0)
-        all_dist = np.concatenate(cand_dist, axis=0)
-        out_qid, out_id, out_dist = [], [], []
-        for j in range(nq):
-            keyj = -all_dist[:, j] if larger_is_better else all_dist[:, j]
-            order = np.lexsort((all_ids[:, j], keyj))[:k]
-            out_qid.append(np.full(len(order), qids_[j], dtype=np.int64))
-            out_id.append(all_ids[order, j])
-            out_dist.append(all_dist[order, j])
-        yield pd.DataFrame(
-            {
-                "qid": np.concatenate(out_qid),
-                "neighbor_id": np.concatenate(out_id),
-                "dist": np.concatenate(out_dist),
-            }
-        )
-
-    cand = vectors.select(
-        F.col(id_col), F.col(vec_col)
-    ).mapInPandas(local_topk, schema="qid long, neighbor_id long, dist double")
+    cand = _flat_scan(
+        vectors.select(F.col(id_col), F.col(vec_col)), qids, Q,
+        _topk_kernel(k, metric), _SCORED, id_col, vec_col, k=k, metric=metric,
+    )
     return _finalize_topk(cand, k, metric, round_output)
 
 
@@ -320,9 +601,11 @@ def knn_exact_distributed(
       ``v_blocks`` vector groups (vectors replicate symmetrically), so
       shuffle volume is ``|Q|*v_blocks + N*q_blocks`` — tunable against
       ``q_blocks*v_blocks`` task parallelism, never ``|Q|*N``;
-    * each (qblock, vblock) cogroup does one GEMM and emits ≤ k rows per
-      query (exact (dist, id) selection — full lexsort, no argpartition
-      tie risk);
+    * each (qblock, vblock) cogroup runs the float kernel
+      ``_topk_kernel`` once on its tile — a GEMM tiled over query
+      columns at ``_TILE_CELLS``, so a large block holds a bounded
+      distance matrix — and emits ≤ k rows per query (the exact
+      ``(dist, id)`` selection of ``_topk_rows``);
     * the usual global window merge keeps the true top-k: every query's
       true neighbors all live in SOME vblock, so the union of per-block
       top-ks contains them.
@@ -331,7 +614,6 @@ def knn_exact_distributed(
     side ever visits the driver."""
     if metric not in ("l2_sq", "cosine"):
         raise ValueError(f"unknown metric {metric!r}")
-    larger_is_better = metric == "cosine"
 
     # Grouping keys for BOTH sides come from block_cogroup_keys — one
     # type (int) by construction; see its docstring for the finding-28
@@ -347,37 +629,21 @@ def knn_exact_distributed(
     )
     _assert_block_key_types(qb, vb)
 
+    kernel = _topk_kernel(k, metric)
+
     def block_topk(qpdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(vpdf) == 0:
-            return pd.DataFrame(
-                {
-                    "qid": pd.Series(dtype="int64"),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                    "dist": pd.Series(dtype="float64"),
-                }
-            )
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(qpdf["query"].to_numpy())
-        ids = vpdf["nid"].to_numpy(dtype=np.int64)
-        V = np.stack(vpdf["nvec"].to_numpy())
-        D = cosine_sim_matrix(V, Q) if larger_is_better else l2_sq_matrix(V, Q)
-        key = -D if larger_is_better else D
-        kk = min(k, len(ids))
-        out_qid = np.repeat(qids, kk)
-        out_id = np.empty(len(qids) * kk, dtype=np.int64)
-        out_dist = np.empty_like(out_id, dtype=np.float64)
-        for j in range(len(qids)):
-            order = np.lexsort((ids, key[:, j]))[:kk]
-            out_id[j * kk : (j + 1) * kk] = ids[order]
-            out_dist[j * kk : (j + 1) * kk] = D[order, j]
-        return pd.DataFrame(
-            {"qid": out_qid, "neighbor_id": out_id, "dist": out_dist}
-        )
+        out = _Rows(_SCORED)
+        if len(qpdf) and len(vpdf):
+            q = _cell_columns(qpdf, {"qid": "ids", "query": "vec"}, ("vec",))
+            cell = _cell_columns(vpdf, {"nid": "ids", "nvec": "vec"}, ("vec",))
+            for qid, (ids, d) in zip(q["ids"], kernel(None, q["vec"], cell)):
+                out.add(qid, ids, d)
+        return out.frame()
 
     cand = (
         qb.groupby("qblock", "vblock")
         .cogroup(vb.groupby("qblock", "vblock"))
-        .applyInPandas(block_topk, schema="qid long, neighbor_id long, dist double")
+        .applyInPandas(block_topk, schema=_SCORED)
     )
     return _finalize_topk(cand, k, metric, round_output)
 
@@ -397,17 +663,19 @@ def knn_prefix_rescore(
 
     The squared L2 over the first ``prefix_dims`` coordinates is a LOWER
     BOUND of the full distance (remaining terms are non-negative), so per
-    partition and query:
+    Arrow batch and query (``_prefix_kernel`` on a flat scan — the kernel
+    ``IVFIndex.search_prefix`` runs inside probed cells):
 
-    1. compute prefix distances for every row (a (n × prefix_dims) GEMM —
-       the scan's FLOPs drop by ``d / prefix_dims``);
+    1. compute prefix distances for every row (a (n × prefix_dims)
+       matrix-vector product — the scan's FLOPs drop by
+       ``d / prefix_dims``);
     2. seed a threshold T = worst full distance among the k best rows *by
        prefix* (k full-distance evaluations);
     3. drop rows with ``prefix_dist > T`` — their full distance is > T ≥
        the partition's k-th best, so they cannot place (a row tied at
        exactly the k-th distance always survives: its prefix ≤ its full
        = T);
-    4. rescore only the survivors over all dims; per-partition (dist, id)
+    4. rescore only the survivors over all dims; per-task (dist, id)
        top-k, then the usual global window merge.
 
     Exactness never depends on the embedding's spectrum — only the
@@ -425,68 +693,13 @@ def knn_prefix_rescore(
     prefix the bulk of the corpus is touched at 1/16th the arithmetic.
     Reference anchor: brute-force scan semantics of
     ``write_buffer.h:54-70`` (Q1), unchanged results."""
-    spark = vectors.sparkSession
     qids, Q = _query_arrays(queries)
     if len(qids) == 0:
-        return spark.createDataFrame(
-            [], "qid long, neighbor_id long, rank long, dist_sq double"
-        )
+        return _empty_topk(vectors.sparkSession)
     dp = max(1, min(int(prefix_dims), Q.shape[1]))
-    bc = spark.sparkContext.broadcast((qids, Q))
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Q_ = bc.value
-        Qf = Q_.astype(np.float64)
-        Qp = Qf[:, :dp]
-        nq = len(qids_)
-        cand_qid: list[np.ndarray] = []
-        cand_ids: list[np.ndarray] = []
-        cand_dist: list[np.ndarray] = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = len(ids)
-            Dp = l2_sq_matrix(V[:, :dp], Qp)  # (n, nq) lower bounds
-            kk = min(k, n)
-            for j in range(nq):
-                q = Qf[j]
-                # seed: full distance of the k best-by-prefix rows
-                if n > kk:
-                    seed = np.argpartition(Dp[:, j], kk - 1)[:kk]
-                else:
-                    seed = np.arange(n)
-                diff = V[seed] - q
-                seed_full = (diff * diff).sum(axis=1)
-                T = seed_full.max()
-                # GEMM-form prefix distances carry ~1e-13 relative fp
-                # error and may slightly EXCEED the true bound (e.g. a
-                # duplicate row's true 0 computed as +1e-13 > T = 0);
-                # widen the cut by a relative slack far above that error
-                # but far below any real distance gap — extra survivors
-                # are merely rescored, so exactness is preserved
-                eps = 1e-9 * (1.0 + T)
-                surv = np.flatnonzero(Dp[:, j] <= T + eps)
-                diff = V[surv] - q
-                full = (diff * diff).sum(axis=1)
-                order = np.lexsort((ids[surv], full))[:kk]
-                sel = surv[order]
-                cand_qid.append(np.full(len(sel), qids_[j], dtype=np.int64))
-                cand_ids.append(ids[sel])
-                cand_dist.append(full[order])
-        if not cand_ids:
-            return
-        yield pd.DataFrame(
-            {
-                "qid": np.concatenate(cand_qid),
-                "neighbor_id": np.concatenate(cand_ids),
-                "dist": np.concatenate(cand_dist),
-            }
-        )
-
-    cand = vectors.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        local_topk, schema="qid long, neighbor_id long, dist double"
+    cand = _flat_scan(
+        vectors.select(F.col(id_col), F.col(vec_col)), qids, Q,
+        _prefix_kernel(k, dp), _SCORED, id_col, vec_col, k=k,
     )
     return _finalize_topk(cand, k, "l2_sq")
 
@@ -502,36 +715,20 @@ def radius_search(
     """Exact range search: every (query, vector) pair with squared L2
     <= radius_sq — the threshold-membership sibling of top-k (the
     reference's surface is top-k only; range search is the standard
-    missing member of the family).  Same GEMM-per-Arrow-batch kernel as
-    ``knn_exact``, but output size is data-dependent (no per-partition
-    cut), so each partition emits exactly its hits and nothing shuffles
-    but results."""
-    spark = vectors.sparkSession
+    missing member of the family).  A flat scan (``_flat_scan``) of
+    the IVF radius kernel ``_radius_kernel`` — the per-query
+    matrix-vector distances ``IVFIndex.radius_search`` emits, so both
+    return the same bytes; output size is data-dependent (no per-task
+    cut), so each task emits exactly its hits and nothing shuffles but
+    results."""
     qids, Q = _query_arrays(queries)
     if len(qids) == 0:
-        return spark.createDataFrame([], "qid long, neighbor_id long, dist_sq double")
-    bc = spark.sparkContext.broadcast((qids, Q))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Q_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.stack(pdf[vec_col].to_numpy())
-            D = l2_sq_matrix(V, Q_)  # (n, m)
-            rows, cols = np.nonzero(D <= radius_sq)
-            if len(rows):
-                yield pd.DataFrame(
-                    {
-                        "qid": qids_[cols],
-                        "neighbor_id": ids[rows],
-                        "dist": D[rows, cols],
-                    }
-                )
-
-    out = vectors.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        scan, schema="qid long, neighbor_id long, dist double"
+        return vectors.sparkSession.createDataFrame(
+            [], "qid long, neighbor_id long, dist_sq double"
+        )
+    out = _flat_scan(
+        vectors.select(F.col(id_col), F.col(vec_col)), qids, Q,
+        _radius_kernel(radius_sq), _SCORED, id_col, vec_col,
     )
     d = F.round("dist", 4) if round_output else F.col("dist").cast("double")
     return out.select("qid", "neighbor_id", d.alias("dist_sq"))
@@ -648,8 +845,9 @@ def knn_classify(
     votes over exactly k non-self neighbors — implemented as a k+1 cut
     followed by a re-rank, the same pattern the kNN-graph builders use.
 
-    Plan shape: the neighbor search is ``knn_exact``'s per-partition
-    GEMM heap (|Q|*k candidate rows total); labels attach via a
+    Plan shape: the neighbor search is ``knn_exact`` — the float kernel
+    on a flat scan, at most k+1 rows per query leaving each task
+    (|Q|*(k+1) candidate rows per task); labels attach via a
     broadcast hash join of the TINY neighbor list against the labeled
     table — the big side streams, nothing wide shuffles; the vote is a
     (qid, label) partial-aggregated count topped by one row_number over

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_engine_spark.operators.knn import _finalize_topk
+from vector_search_engine_spark.operators.knn import _empty_topk, _finalize_topk
 
 
 def knn_lsh(
@@ -208,9 +208,7 @@ def knn_lsh_portable(
 
     first = vectors.select(vec_col).first()
     if first is None:
-        return vectors.sparkSession.createDataFrame(
-            [], "qid long, neighbor_id long, rank long, dist_sq double"
-        )
+        return _empty_topk(vectors.sparkSession)
     cand = lsh_candidates(
         vectors, queries, n_tables, n_planes, id_col=id_col, vec_col=vec_col
     )

@@ -21,7 +21,7 @@ Scale posture (100 TB): both operators scan the child table once.  The
 per-partition GEMM reduces each partition to at most ``|parents-in-
 partition| × |Q|`` rows (closest-child) or ``… × |subvectors|`` rows
 (MaxSim) BEFORE any shuffle — the same bounded-emission contract as
-``knn.py``'s per-partition heaps.  Parent cardinality (documents) is far
+``knn.py``'s per-task top-k.  Parent cardinality (documents) is far
 below child cardinality (passages), so the shuffles move a small fraction
 of the scan.  The IVF-composed form (``ann_ivf_parent_closest``) probes
 cells first — partition pruning reaches the parquet scan exactly as in

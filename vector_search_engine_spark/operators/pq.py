@@ -41,8 +41,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_engine_spark.functions.vector import l2_sq, l2_sq_matrix
-from vector_search_engine_spark.operators.knn import _finalize_topk
+from vector_search_engine_spark.functions.vector import l2_sq_matrix
+from vector_search_engine_spark.operators.knn import (
+    _PAIRS,
+    _empty_topk,
+    _exact_rescore,
+    _queries_df,
+    _query_arrays,
+)
 
 
 def _kmeans_1d(
@@ -416,22 +422,17 @@ def knn_pq_adc(
     codebooks (``opq_train``) and scans in rotated space; distances are
     rotation-invariant, so the bound cut stays lossless and the exact
     rescore (original space) is untouched — only reconstruction error,
-    and with it pruning power, improves."""
-    from vector_search_engine_spark.operators.knn import (
-        _query_arrays as knn_query_arrays,
-    )
-
+    and with it pruning power, improves.  The exact stage is the rescore the
+    quantized IVF tiers end in (``knn._exact_rescore``)."""
     spark = vectors.sparkSession
     if codebooks is None:
         if opq:
             rotation, codebooks = opq_train(vectors, m=m, vec_col=vec_col)
         else:
             codebooks = pq_train(vectors, m=m, vec_col=vec_col)
-    qids, Q = knn_query_arrays(queries)
+    qids, Q = _query_arrays(queries)
     if len(qids) == 0:
-        return spark.createDataFrame(
-            [], "qid long, neighbor_id long, rank long, dist_sq double"
-        )
+        return _empty_topk(spark)
     Qscan = Q.astype(np.float64)
     if rotation is not None:
         Qscan = Qscan @ np.asarray(rotation, dtype=np.float64)
@@ -465,20 +466,6 @@ def knn_pq_adc(
                     {"qid": int(qid), "neighbor_id": ids[keep]}
                 )
 
-    cand = codes.mapInPandas(scan, schema="qid long, neighbor_id long")
-    from vector_search_engine_spark.operators.knn import _queries_df
-
+    cand = codes.mapInPandas(scan, schema=_PAIRS)
     qdf = _queries_df(spark, queries, qids, Q)
-    rescored = (
-        cand.join(
-            vectors.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "qid")
-        .select(
-            "qid",
-            "neighbor_id",
-            l2_sq(F.col(vec_col), F.col("query")).alias("dist"),
-        )
-    )
-    return _finalize_topk(rescored, k, "l2_sq")
+    return _exact_rescore(cand, vectors, k, id_col, vec_col, qdf=qdf)

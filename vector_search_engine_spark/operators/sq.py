@@ -25,10 +25,14 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from vector_search_engine_spark.functions.vector import l2_sq
-from vector_search_engine_spark.operators.knn import _finalize_topk
+from vector_search_engine_spark.operators.knn import (
+    _PAIRS,
+    _empty_topk,
+    _exact_rescore,
+    _queries_df,
+    _query_arrays,
+)
 
 
 def sq_codes_matrix(
@@ -120,18 +124,13 @@ def knn_sq8_rescore(
 ) -> DataFrame:
     """Two-stage search: uint8-approximate scan emits top-C candidates per
     partition; exact float re-score + global top-k.  Same output schema
-    and distance convention as ``knn_exact``."""
-    from vector_search_engine_spark.operators.knn import (
-        _query_arrays as knn_query_arrays,
-    )
-
+    and distance convention as ``knn_exact``; the exact stage is the
+    rescore the quantized IVF tiers end in (``knn._exact_rescore``)."""
     spark = vectors.sparkSession
     C = candidates_per_partition or 4 * k
-    qids, Q = knn_query_arrays(queries)
+    qids, Q = _query_arrays(queries)
     if len(qids) == 0:
-        return spark.createDataFrame(
-            [], "qid long, neighbor_id long, rank long, dist_sq double"
-        )
+        return _empty_topk(spark)
     bc = spark.sparkContext.broadcast((qids, Q.astype(np.float64)))
 
     codes = sq8_encode(vectors, id_col=id_col, vec_col=vec_col)
@@ -165,22 +164,6 @@ def knn_sq8_rescore(
             out_ids = ids[part].ravel()
             yield pd.DataFrame({"qid": out_qid, "neighbor_id": out_ids})
 
-    cand = codes.mapInPandas(approx_scan, schema="qid long, neighbor_id long")
-    # exact re-score: join candidates back to the float vectors (broadcast
-    # queries), then the usual (dist, id) window top-k
-    from vector_search_engine_spark.operators.knn import _queries_df
-
+    cand = codes.mapInPandas(approx_scan, schema=_PAIRS)
     qdf = _queries_df(spark, queries, qids, Q)
-    rescored = (
-        cand.join(
-            vectors.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "qid")
-        .select(
-            "qid",
-            "neighbor_id",
-            l2_sq(F.col(vec_col), F.col("query")).alias("dist"),
-        )
-    )
-    return _finalize_topk(rescored, k, "l2_sq")
+    return _exact_rescore(cand, vectors, k, id_col, vec_col, qdf=qdf)
